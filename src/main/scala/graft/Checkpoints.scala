@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /** Lineage truncation for the iterative operators (graph builds, beam
@@ -20,9 +21,21 @@ import org.apache.spark.sql.DataFrame
   * writes to and re-reads from that directory, surviving executor
   * loss — the right choice for multi-hour 100 TB jobs where re-running
   * a build dwarfs the checkpoint I/O. Default unchanged locally.
+  *
+  * Reliable-mode caveats: the context's checkpoint dir is (re)set under
+  * a lock whenever the conf value changes; superseded checkpoints are
+  * reclaimed only with `spark.cleaner.referenceTracking.cleanCheckpoints
+  * =true` set at context start; and a LAZY reliable checkpoint
+  * (`eager = false`) of an unpersisted frame recomputes that frame when
+  * the checkpoint job runs after its first action — persist it first if
+  * it is expensive.
   */
 object Checkpoints {
   val dirKey = "spark.graft.checkpoint.dir"
+
+  /** The (context, conf value) the checkpoint dir was last set for;
+    * guarded by `this`. */
+  private var setFor: Option[(SparkContext, String)] = None
 
   /** Truncate `df`'s lineage: reliable checkpoint when [[dirKey]] is
     * set, executor-local otherwise. `eager` as in Dataset.checkpoint. */
@@ -31,7 +44,9 @@ object Checkpoints {
     spark.conf.getOption(dirKey).filter(_.nonEmpty) match {
       case Some(d) =>
         val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
+        synchronized {
+          if (!setFor.contains((sc, d))) { sc.setCheckpointDir(d); setFor = Some((sc, d)) }
+        }
         df.checkpoint(eager)
       case None => df.localCheckpoint(eager)
     }

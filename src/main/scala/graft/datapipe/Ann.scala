@@ -464,7 +464,7 @@ object Ann {
     * (`vec_id, nbr_id, …`) and vector collection `ep` — the serving half
     * of the graph tier's deployment split ([[GraphIndex]]). `planes`
     * must be the band width the graph was built with (persisted in the
-    * index meta) so the per-query seed buckets match the build's. */
+    * index manifest) so the per-query seed buckets match the build's. */
   def graphSearchOver(g: DataFrame, ep0: DataFrame, planes: Int,
                       k: Int = topK): DataFrame =
     graphSearchOverWithVisited(g, ep0, planes, k)._1
@@ -702,26 +702,21 @@ object Ann {
     * membership is derivable (content hash), so only graphs persist. */
   def hnswWrite(emb: DataFrame, dir: String): Unit = {
     val ep = epOf(emb)
-    // build+write of the three layers overlapped, same as the inline
-    // hierarchical serve (r18, guide §2.6) — each task is an
-    // independent build pipeline ending in its own artifact write
-    graft.Par.all(
-      (() => { knnGraphWrite(ep, dir); () }) +:
-        (1 to hnswUpperLayers).map(l => () => {
-          hnswUpperGraph(ep, l).write.mode("overwrite")
-            .parquet(s"$dir/edges_l$l"); ()
-        }))
-    ()
+    val planes = lshPlanesFor(ep.count(), 32)
+    // the three layer builds overlapped, same as the inline
+    // hierarchical serve (r18, guide §2.6), then written as ONE artifact
+    val layers = graft.Par.all(
+      (() => knnGraph(ep, planes = planes)) +:
+        (1 to hnswUpperLayers).map(l => () => hnswUpperGraph(ep, l)))
+    GraphIndex(layers.head, ep, planes, knnBands, knnRounds, topK, layers.tail).write(dir)
   }
 
-  /** Serve the hierarchy from disk: layer-0 edges + vectors from the
-    * [[GraphIndex]] artifact, upper-layer edges from their tables. */
+  /** Serve the hierarchy from disk: layer-0 edges, vectors and the
+    * upper-layer edges, all from the [[GraphIndex]] artifact. */
   def graphSearchHierFileChecked(spark: org.apache.spark.sql.SparkSession,
                                  dir: String): DataFrame = {
     val idx = GraphIndex.read(spark, dir)
-    val uppers = (1 to hnswUpperLayers).map(l =>
-      spark.read.parquet(s"$dir/edges_l$l"))
-    withExactCompanion(graphSearchHierOver(idx.edges, uppers, idx.vectors),
+    withExactCompanion(graphSearchHierOver(idx.edges, idx.uppers, idx.vectors),
       idx.vectors)
   }
 
@@ -1009,42 +1004,36 @@ object Ann {
    * seconds.
    *
    *  - `edges`   — `(vec_id, nbr_id, rnk, sim)`: the graph, REPLACED
-   *    wholesale on append ([[graft.sources.Tables.stagedReplace]] —
+   *    wholesale on append (an [[graft.Artifact.update]] replacement —
    *    appends update affected vertices' edge lists in place, so the
    *    artifact is a rewrite, not an accumulation; it is k·N slim rows,
    *    the cheap side of the index).
    *  - `vectors` — `(vec_id, embedding)`: append-able
-   *    ([[graft.sources.Tables.stagedAppend]]), read recursively.
-   *  - `meta`    — 1-row `(planes, bands, rounds, k)`: the FROZEN build
-   *    parameters every append and serve must reuse (re-deriving planes
-   *    from the grown count would silently re-band the whole graph).
+   *    ([[graft.Artifact.update]]), read recursively.
+   *  - `edges_l1`.. — the HNSW upper layers ([[hnswWrite]]), if any.
+   *  - `(planes, bands, rounds, k)` — manifest parameters: the FROZEN
+   *    build parameters every append and serve must reuse (re-deriving
+   *    planes from the grown count would silently re-band the whole
+   *    graph).
    */
-  case class GraphIndex(edges: DataFrame, vectors: DataFrame, meta: DataFrame) {
-    def write(dir: String): Unit = {
-      // independent artifact writes overlapped (r18, guide §2.6)
-      graft.Par.all(Seq[() => Unit](
-        () => vectors.write.mode("overwrite").parquet(s"$dir/vectors"),
-        () => edges.write.mode("overwrite").parquet(s"$dir/edges"),
-        () => meta.write.mode("overwrite").parquet(s"$dir/meta")))
-      ()
-    }
-    /** (planes, bands, rounds, k) with the same loud corrupt-store guard
-      * as [[IvfpqIndex.params]]. */
-    def params: (Int, Int, Int, Int) = {
-      val rows = meta.select(col("planes"), col("bands"),
-        col("rounds"), col("k")).collect()
-      require(rows.length == 1,
-        s"graph-index meta must hold exactly one row, found ${rows.length} — " +
-          "the persisted index is corrupt (partial overwrite or stray append to meta/)")
-      val r = rows(0)
-      (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
-    }
+  case class GraphIndex(edges: DataFrame, vectors: DataFrame, planes: Int,
+                        bands: Int, rounds: Int, k: Int,
+                        uppers: Seq[DataFrame] = Nil) {
+    def write(dir: String): Unit =
+      graft.Artifact.write(dir, "graph",
+        Seq("planes" -> planes, "bands" -> bands, "rounds" -> rounds, "k" -> k),
+        Seq("vectors" -> vectors, "edges" -> edges) ++
+          uppers.zipWithIndex.map { case (u, i) => s"edges_l${i + 1}" -> u })
+
+    def params: (Int, Int, Int, Int) = (planes, bands, rounds, k)
   }
   object GraphIndex {
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String): GraphIndex =
-      GraphIndex(spark.read.parquet(s"$dir/edges"),
-        graft.sources.Tables.readIndexDir(spark, s"$dir/vectors"),
-        spark.read.parquet(s"$dir/meta"))
+    def read(spark: org.apache.spark.sql.SparkSession, dir: String): GraphIndex = {
+      val a = graft.Artifact.read(spark, dir, "graph")
+      GraphIndex(a("edges"), a("vectors"), a.params("planes").toInt,
+        a.params("bands").toInt, a.params("rounds").toInt, a.params("k").toInt,
+        (1 to hnswUpperLayers).flatMap(l => a.tables.get(s"edges_l$l")))
+    }
   }
 
   /** Build half of the graph deployment split: auto-sized NN-descent
@@ -1052,10 +1041,7 @@ object Ann {
   def knnGraphWrite(emb: DataFrame, dir: String): Unit = {
     val ep = epOf(emb)
     val planes = lshPlanesFor(ep.count(), 32)
-    val meta = ep.sparkSession.range(1)
-      .select(lit(planes).as("planes"), lit(knnBands).as("bands"),
-        lit(knnRounds).as("rounds"), lit(topK).as("k"))
-    GraphIndex(knnGraph(ep, planes = planes), ep, meta).write(dir)
+    GraphIndex(knnGraph(ep, planes = planes), ep, planes, knnBands, knnRounds, topK).write(dir)
   }
 
   /** Query-subset + exact-companion wrapper shared by the inline and
@@ -1078,13 +1064,12 @@ object Ann {
 
   /** `ann_graph_search_file` entry: the beam walk ([[graphSearchOver]])
     * over the DISK-RESIDENT graph and vectors, band width from the
-    * frozen meta — output identical to [[graphSearchChecked]] over the
+    * frozen manifest — output identical to [[graphSearchChecked]] over the
     * same collection (same oracle). */
   def graphSearchFileChecked(spark: org.apache.spark.sql.SparkSession,
                              dir: String): DataFrame = {
     val idx = GraphIndex.read(spark, dir)
-    val (planes, _, _, _) = idx.params
-    withExactCompanion(graphSearchOver(idx.edges, idx.vectors, planes),
+    withExactCompanion(graphSearchOver(idx.edges, idx.vectors, idx.planes),
       idx.vectors)
   }
 
@@ -1109,11 +1094,9 @@ object Ann {
    *     evolving affected part), candidates confined to affected
    *     sources.
    *
-   * Vectors append atomically ([[graft.sources.Tables.stagedAppend]]);
-   * the edge artifact is REPLACED atomically
-   * ([[graft.sources.Tables.stagedReplace]]) after the new graph fully
-   * materializes. vec_id disjointness is the caller's contract, as with
-   * [[ivfpqAppend]].
+   * One [[graft.Artifact.update]]: vectors append and the edge table is
+   * REPLACED, both atomically, after the new graph fully materializes.
+   * vec_id disjointness is the caller's contract, as with [[ivfpqAppend]].
    */
   def knnGraphAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                      newVecs: DataFrame): Unit = {
@@ -1159,18 +1142,14 @@ object Ann {
     val newEdges = frozen.unionByName(
       gaff.select(col("vec_id"), col("nbr_id"), col("rnk").cast("long").as("rnk"),
         round(col("cos"), 6).as("sim")))
-    // three-step commit, every crash window recoverable (r16 review
-    // fix — swapping edges before appending vectors left a window where
-    // edges referenced vectors absent from the store):
-    //  1. STAGE the new edges (fully materializes the computation, which
-    //     reads the live edges + old vectors; live artifacts untouched);
-    //  2. append the vectors atomically — a crash here leaves a
-    //     consistent store whose new vectors are merely unindexed yet
-    //     (plus the stage dir, ready to commit);
-    //  3. commit the edge swap (atomic renames).
-    graft.sources.Tables.stagedReplaceStage(newEdges, s"$dir/edges")
-    graft.sources.Tables.stagedAppend(newV, s"$dir/vectors")
-    graft.sources.Tables.stagedReplaceCommit(spark, s"$dir/edges")
+    // every crash window recoverable (r16 review fix — swapping edges
+    // before appending vectors left a window where edges referenced
+    // vectors absent from the store): the update stages both tables
+    // (fully materializing the computation, which reads the live edges
+    // + old vectors), commits the vector append, then the edge swap — a
+    // crash between leaves new vectors merely unindexed
+    graft.Artifact.update(dir, appends = Seq("vectors" -> newV),
+      replaces = Seq("edges" -> newEdges))
   }
 
   /** DuckDB mirror of build-on-even-half + [[knnGraphAppend]] of the odd
@@ -1227,8 +1206,7 @@ object Ann {
    * on a batch frame (the hash-verified entry form).
    */
   def knnGraphStreamFlag(stream: DataFrame, idx: GraphIndex): DataFrame = {
-    val (planes, bands, _, _) = idx.params
-    knnGraphStreamFlagWith(stream, idx.vectors, planes, bands)
+    knnGraphStreamFlagWith(stream, idx.vectors, idx.planes, idx.bands)
   }
 
   /** Inline form: frozen parameters auto-sized from the corpus the way
@@ -2155,32 +2133,29 @@ object Ann {
     * in any persisted frame. */
   def sq8Write(emb: DataFrame, dir: String): Unit = {
     val (codes, stats) = sq8Compress(emb)
-    // independent artifact writes overlapped (r18, guide §2.6)
-    graft.Par.all(Seq[() => Unit](
-      () => codes.write.mode("overwrite").parquet(s"$dir/codes"),
-      () => stats.write.mode("overwrite").parquet(s"$dir/stats")))
-    ()
+    graft.Artifact.write(dir, "sq8", Nil, Seq("codes" -> codes, "stats" -> stats))
   }
 
   /** FAISS-style `add()` for the persisted SQ8 artifact: new vectors
     * encode against the FROZEN per-dimension bounds (out-of-range tails
     * SATURATE at 0/255 — the documented clamp contract, exactly FAISS's
     * trained-ScalarQuantizer behavior) and append atomically via
-    * [[graft.sources.Tables.stagedAppend]]. The bounds are NOT
+    * [[graft.Artifact.update]]. The bounds are NOT
     * retrained — vec_id disjointness is the caller's contract, as with
     * [[ivfpqAppend]]. */
   def sq8Append(spark: org.apache.spark.sql.SparkSession, dir: String,
                 newVecs: DataFrame): Unit = {
-    val stats = spark.read.parquet(s"$dir/stats")
-    graft.sources.Tables.stagedAppend(sq8Encode(newVecs, stats), s"$dir/codes")
+    val stats = graft.Artifact.read(spark, dir, "sq8")("stats")
+    graft.Artifact.update(dir, appends = Seq("codes" -> sq8Encode(newVecs, stats)))
   }
 
   /** Serve top-k from the disk-resident SQ8 artifact (codes read
     * recursively so [[sq8Append]] shards are visible). */
   def sq8ServeFromDir(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      q: DataFrame): DataFrame =
-    sq8Rank(sq8Decode(graft.sources.Tables.readIndexDir(spark, s"$dir/codes"),
-      spark.read.parquet(s"$dir/stats")), q)
+                      q: DataFrame): DataFrame = {
+    val a = graft.Artifact.read(spark, dir, "sq8")
+    sq8Rank(sq8Decode(a("codes"), a("stats")), q)
+  }
 
   /** DuckDB mirror of [[sq8TopK]] — the train/encode/decode chain
     * rendered with the same fixed double op order (DuckDB list lambdas
@@ -2385,60 +2360,27 @@ object Ann {
    * list id per vector instead of the full embedding.
    */
   case class IvfpqIndex(packed: DataFrame, cent: DataFrame, cb: DataFrame,
-                        meta: DataFrame) {
-    def write(dir: String): Unit = {
-      // four independent artifact writes overlapped (r18, guide §2.6);
-      // the trained inputs they share are cache-pinned, and concurrent
-      // materialization of a pinned frame is block-locked (one thread
-      // computes, the others wait) — outputs unchanged
-      graft.Par.all(Seq[() => Unit](
-        () => packed.write.mode("overwrite").parquet(s"$dir/packed"),
-        () => cent.write.mode("overwrite").parquet(s"$dir/cent"),
-        () => cb.write.mode("overwrite").parquet(s"$dir/cb"),
-        () => meta.write.mode("overwrite").parquet(s"$dir/meta")))
-      ()
-    }
-    /** Train-time hyperparameters `(k, m, residual)` from the persisted
-      * 1-row meta frame — the serving side MUST probe with the trainer's
-      * k (the flat/two-level quantizer regime keys on it), decode with
-      * the trainer's m (a mismatched subspace count silently empties or
-      * corrupts the reconstruction join), and reconstruct in the
-      * trainer's encoding (raw vs residual codes are not
-      * interchangeable), so they ride IN the artifact instead of being
-      * free parameters (r13 review fix). One tiny driver read, the
-      * documented K-row-collect class. */
-    private[datapipe] def params: (Int, Int, Boolean) = {
-      // artifacts persisted before the residual flag existed are all
-      // raw-coded — default false instead of hard-breaking their reads
-      val res =
-        if (meta.columns.contains("residual")) col("residual")
-        else lit(false).as("residual")
-      // fail loud on a malformed meta (r13 advice fix): a stray append
-      // or partial overwrite of $dir/meta would otherwise let head()
-      // pick an arbitrary row and serve with wrong (k, m, residual)
-      val rows = meta.select(col("k"), col("m"), res).collect()
-      require(rows.length == 1,
-        s"IVFADC meta must hold exactly one row, found ${rows.length} — " +
-          "the persisted index is corrupt (partial overwrite or stray append to meta/)")
-      val r = rows(0)
-      (r.getInt(0), r.getInt(1), r.getBoolean(2))
-    }
+                        k: Int, m: Int, residual: Boolean) {
+    /** `(k, m, residual)` ride in the manifest: the serving side MUST
+      * probe with the trainer's k (the flat/two-level quantizer regime
+      * keys on it), decode with the trainer's m (a mismatched subspace
+      * count silently empties or corrupts the reconstruction join), and
+      * reconstruct in the trainer's encoding (raw vs residual codes are
+      * not interchangeable), so they are not free parameters (r13 review
+      * fix). The three tables overlap their writes (r18, guide §2.6);
+      * the trained inputs they share are cache-pinned, and concurrent
+      * materialization of a pinned frame is block-locked. */
+    def write(dir: String): Unit =
+      graft.Artifact.write(dir, "ivfpq", Seq("k" -> k, "m" -> m, "residual" -> residual),
+        Seq("packed" -> packed, "cent" -> cent, "cb" -> cb))
   }
   object IvfpqIndex {
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String): IvfpqIndex =
-      // packed is the append-able relation (ivfpqAppend); the trained
-      // artifacts are overwrite-only but read the same way for symmetry
-      IvfpqIndex(graft.sources.Tables.readIndexDir(spark, s"$dir/packed"),
-        graft.sources.Tables.readIndexDir(spark, s"$dir/cent"),
-        graft.sources.Tables.readIndexDir(spark, s"$dir/cb"),
-        graft.sources.Tables.readIndexDir(spark, s"$dir/meta"))
+    def read(spark: org.apache.spark.sql.SparkSession, dir: String): IvfpqIndex = {
+      val a = graft.Artifact.read(spark, dir, "ivfpq")
+      IvfpqIndex(a("packed"), a("cent"), a("cb"), a.params("k").toInt,
+        a.params("m").toInt, a.params("residual").toBoolean)
+    }
   }
-
-  /** 1-row (k, m, residual) hyperparameter frame persisted with every
-    * IVFADC index. */
-  private def ivfpqMeta(emb: DataFrame, k: Int, m: Int, residual: Boolean): DataFrame =
-    emb.sparkSession.range(1)
-      .select(lit(k).as("k"), lit(m).as("m"), lit(residual).as("residual"))
 
   /** Train + encode half of the deployment split: [[ivfpqTopK]]'s exact
     * training dataflow (same coarse quantizer, same inverted lists, same
@@ -2450,8 +2392,7 @@ object Ann {
     val lists = ivfAssign2(emb, "vec_id", cent, k, 1)
       .select(col("vec_id"), col("cid"))
     val (codes, cb) = pqCompress(emb, m, pk, pqRounds)
-    IvfpqIndex(codes.join(lists, "vec_id"), cent, cb,
-      ivfpqMeta(emb, k, m, residual = false))
+    IvfpqIndex(codes.join(lists, "vec_id"), cent, cb, k, m, residual = false)
   }
 
   /**
@@ -2474,9 +2415,8 @@ object Ann {
    * — any benchmark-style subsampling is the caller's slice).
    */
   def ivfpqServe(queries: DataFrame, idx: IvfpqIndex): DataFrame = {
-    val (k, m, res) = idx.params
-    require(!res, "index holds RESIDUAL codes — serve with ivfpqResServe")
-    servePacked(queries, idx, k, m, residual = false)
+    require(!idx.residual, "index holds RESIDUAL codes — serve with ivfpqResServe")
+    servePacked(queries, idx)
   }
 
   /** Serving half of the RESIDUAL deployment split ([[ivfpqResIndex]]):
@@ -2487,13 +2427,12 @@ object Ann {
     * unchanged). Output identical to [[ivfpqResTopK]] over the same
     * collection. */
   def ivfpqResServe(queries: DataFrame, idx: IvfpqIndex): DataFrame = {
-    val (k, m, res) = idx.params
-    require(res, "index holds RAW codes — serve with ivfpqServe")
-    servePacked(queries, idx, k, m, residual = true)
+    require(idx.residual, "index holds RAW codes — serve with ivfpqServe")
+    servePacked(queries, idx)
   }
 
-  private def servePacked(queries: DataFrame, idx: IvfpqIndex, k: Int,
-                          m: Int, residual: Boolean): DataFrame = {
+  private def servePacked(queries: DataFrame, idx: IvfpqIndex): DataFrame = {
+    val IvfpqIndex(_, _, _, k, m, residual) = idx
     val probed = ivfAssign2(
         queries.select(col("q_id"), col("embedding")), "q_id",
         idx.cent, k, ivfProbes)
@@ -2550,7 +2489,7 @@ object Ann {
             (x, y) => x.cast("double") - y.cast("double")).as("embedding")))
     val (codes, cb) = pqCompress(res.select(col("vec_id"), col("embedding")), m, pk, pqRounds)
     IvfpqIndex(codes.join(res.select(col("vec_id"), col("cid")), "vec_id"), cent, cb,
-      ivfpqMeta(emb, k, m, residual = true))
+      k, m, residual = true)
   }
 
   /** Encode vectors against a FROZEN per-subspace codebook — the encode
@@ -2568,7 +2507,7 @@ object Ann {
    * existing artifact files and every trained parameter stay untouched,
    * which is the production ingest contract (retraining the quantizer
    * would invalidate every previously-encoded vector). The artifact's
-   * meta decides the encoding: raw indexes append raw codes, residual
+   * manifest decides the encoding: raw indexes append raw codes, residual
    * indexes subtract the list centroid before encoding (both map-side
    * broadcast joins). The caller owns vec_id disjointness, as with the
    * gate appends.
@@ -2576,7 +2515,7 @@ object Ann {
   def ivfpqAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                   newVecs: DataFrame): Unit = {
     val idx = IvfpqIndex.read(spark, dir)
-    val (k, m, residual) = idx.params
+    val IvfpqIndex(_, _, _, k, m, residual) = idx
     val lists = ivfAssign2(newVecs, "vec_id", idx.cent, k, 1)
       .select(col("vec_id"), col("cid"))
     val toEncode =
@@ -2589,12 +2528,8 @@ object Ann {
             zip_with(col("embedding"), col("c_emb"),
               (x, y) => x.cast("double") - y.cast("double")).as("embedding"))
       }
-    // staged append (r13 advice fix): the encode job commits to a
-    // staging dir first and renames into packed/ only on success, so a
-    // mid-job failure can never leave partial part-files in the live
-    // index
-    graft.sources.Tables.stagedAppend(
-      pqEncode(toEncode, idx.cb, m).join(lists, "vec_id"), s"$dir/packed")
+    graft.Artifact.update(dir,
+      appends = Seq("packed" -> pqEncode(toEncode, idx.cb, m).join(lists, "vec_id")))
   }
 
   /**
@@ -3030,32 +2965,26 @@ object Ann {
   case class EmbedIndex(keys: DataFrame, vecs: DataFrame) {
     /** Bucket-write the index (cluster-scale persisted form); re-read
       * with [[EmbedIndex.read]] — file-backed = re-listed per batch. */
-    def write(dir: String): Unit = {
-      // independent artifact writes overlapped (r18, guide §2.6)
-      graft.Par.all(Seq[() => Unit](
-        () => keys.write.mode("overwrite").parquet(s"$dir/keys"),
-        () => vecs.write.mode("overwrite").parquet(s"$dir/vecs")))
-      ()
-    }
+    def write(dir: String): Unit =
+      graft.Artifact.write(dir, "embed", Nil, Seq("keys" -> keys, "vecs" -> vecs))
   }
 
   object EmbedIndex {
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String): EmbedIndex =
-      EmbedIndex(graft.sources.Tables.readIndexDir(spark, s"$dir/keys"),
-        graft.sources.Tables.readIndexDir(spark, s"$dir/vecs"))
+    def read(spark: org.apache.spark.sql.SparkSession, dir: String): EmbedIndex = {
+      val a = graft.Artifact.read(spark, dir, "embed")
+      EmbedIndex(a("keys"), a("vecs"))
+    }
 
     /** INCREMENTAL ingest (r13): append a new shard's bucket keys and
       * verify payloads to a file-backed index — hyperplane buckets are
       * per-vector, so index(A ∪ B) ≡ index(A) ∪ index(B) row-for-row
       * (same contract and caveats as [[Dedup.MinhashIndex.append]]). */
     def append(dir: String, newVecs: DataFrame): Unit = {
-      // staged appends — see MinhashIndex.append (r13 advice fix)
-      graft.sources.Tables.stagedAppend(
-        ndBanded(newVecs).select(col("band"), col("bucket"),
-          col("vec_id").as("corpus_id")), s"$dir/keys")
-      graft.sources.Tables.stagedAppend(
-        newVecs.select(col("vec_id").as("corpus_id"),
-          col("embedding").as("corpus_emb")), s"$dir/vecs")
+      graft.Artifact.update(dir, appends = Seq(
+        "keys" -> ndBanded(newVecs).select(col("band"), col("bucket"),
+          col("vec_id").as("corpus_id")),
+        "vecs" -> newVecs.select(col("vec_id").as("corpus_id"),
+          col("embedding").as("corpus_emb"))))
     }
   }
 

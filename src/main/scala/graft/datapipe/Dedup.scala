@@ -35,23 +35,19 @@ object Dedup {
    * fat frame carrying the set on every band row costs.
    */
   case class MinhashIndex(keys: DataFrame, sets: DataFrame) {
-    /** Bucket-write the index (the cluster-scale persisted form): two
-      * parquet relations under `dir`, re-read with [[MinhashIndex.read]]
-      * — a file-backed index is re-listed per micro-batch, so corpus
-      * refreshes need no cache invalidation. */
-    def write(dir: String): Unit = {
-      // independent artifact writes overlapped (r18, guide §2.6)
-      graft.Par.all(Seq[() => Unit](
-        () => keys.write.mode("overwrite").parquet(s"$dir/keys"),
-        () => sets.write.mode("overwrite").parquet(s"$dir/sets")))
-      ()
-    }
+    /** Bucket-write the index (the cluster-scale persisted form): a
+      * `minhash` [[graft.Artifact]] of two tables under `dir`, re-read
+      * with [[MinhashIndex.read]] — a file-backed index is re-listed per
+      * micro-batch, so corpus refreshes need no cache invalidation. */
+    def write(dir: String): Unit =
+      graft.Artifact.write(dir, "minhash", Nil, Seq("keys" -> keys, "sets" -> sets))
   }
 
   object MinhashIndex {
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String): MinhashIndex =
-      MinhashIndex(graft.sources.Tables.readIndexDir(spark, s"$dir/keys"),
-        graft.sources.Tables.readIndexDir(spark, s"$dir/sets"))
+    def read(spark: org.apache.spark.sql.SparkSession, dir: String): MinhashIndex = {
+      val a = graft.Artifact.read(spark, dir, "minhash")
+      MinhashIndex(a("keys"), a("sets"))
+    }
 
     /** INCREMENTAL ingest (r13): append one new shard's index rows to a
       * file-backed index without touching the existing files. Signatures
@@ -67,13 +63,8 @@ object Dedup {
       // must not accumulate cache pins that are used exactly once for a
       // file write — the shard scans twice (keys pass + sets pass)
       // instead, like EmbedIndex.append
-      // staged appends (r13 advice fix): each write job commits to a
-      // staging dir and renames in only on success — a mid-job crash
-      // leaves the live index untouched instead of strewing partial
-      // part-files into it
       val (keys, sets) = leanIndexFrom(shingles(newDocs))
-      graft.sources.Tables.stagedAppend(keys, s"$dir/keys")
-      graft.sources.Tables.stagedAppend(sets, s"$dir/sets")
+      graft.Artifact.update(dir, appends = Seq("keys" -> keys, "sets" -> sets))
     }
   }
 
@@ -539,7 +530,7 @@ object Dedup {
    * total, independent of corpus size): trivially broadcastable,
    * MERGEABLE by plain union (bloom(A ∪ B) ≡ distinct(bloom(A) ∪
    * bloom(B)) — per-member positions are independent), and append-able
-   * file-to-file via [[graft.sources.Tables.stagedAppend]] with no
+   * file-to-file via [[graft.Artifact.update]] with no
    * rebuild. Zero false negatives by construction (an exact re-post
    * hashes to the same positions); false positives are the documented
    * Bloom trade, bounded by the m/k sizing above.

@@ -1070,20 +1070,15 @@ object TextOps {
    * same parquet-backed life cycle as `Dedup.MinhashIndex`.
    */
   case class LmModel(tri: DataFrame, bi: DataFrame, vocab: DataFrame) {
-    def write(dir: String): Unit = {
-      // independent artifact writes overlapped (r18, guide §2.6)
-      graft.Par.all(Seq[() => Unit](
-        () => tri.write.mode("overwrite").parquet(s"$dir/tri"),
-        () => bi.write.mode("overwrite").parquet(s"$dir/bi"),
-        () => vocab.write.mode("overwrite").parquet(s"$dir/vocab")))
-      ()
-    }
+    def write(dir: String): Unit =
+      graft.Artifact.write(dir, "lm", Nil, Seq("tri" -> tri, "bi" -> bi, "vocab" -> vocab))
   }
 
   object LmModel {
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String): LmModel =
-      LmModel(spark.read.parquet(s"$dir/tri"), spark.read.parquet(s"$dir/bi"),
-        spark.read.parquet(s"$dir/vocab"))
+    def read(spark: org.apache.spark.sql.SparkSession, dir: String): LmModel = {
+      val a = graft.Artifact.read(spark, dir, "lm")
+      LmModel(a("tri"), a("bi"), a("vocab"))
+    }
   }
 
   /** Train the trigram LM on `ref`. All three frames are LAZY: the
@@ -1228,17 +1223,14 @@ object TextOps {
    * corpus-keyed exchange. The model persists like [[LmModel]].
    */
   case class NbModel(vocab: DataFrame, counts: DataFrame) {
-    def write(dir: String): Unit = {
-      // independent artifact writes overlapped (r18, guide §2.6)
-      graft.Par.all(Seq[() => Unit](
-        () => vocab.write.mode("overwrite").parquet(s"$dir/vocab"),
-        () => counts.write.mode("overwrite").parquet(s"$dir/counts")))
-      ()
-    }
+    def write(dir: String): Unit =
+      graft.Artifact.write(dir, "nb", Nil, Seq("vocab" -> vocab, "counts" -> counts))
   }
   object NbModel {
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String): NbModel =
-      NbModel(spark.read.parquet(s"$dir/vocab"), spark.read.parquet(s"$dir/counts"))
+    def read(spark: org.apache.spark.sql.SparkSession, dir: String): NbModel = {
+      val a = graft.Artifact.read(spark, dir, "nb")
+      NbModel(a("vocab"), a("counts"))
+    }
   }
 
   /** Train the classifier: `curated` labels the positive class; `cap`

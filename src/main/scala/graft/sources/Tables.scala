@@ -194,8 +194,8 @@ object Tables {
     // joined to a derived slice of itself); any scan already at ≥want
     // row groups means the widest input needs no spread
     val conf = df.sparkSession.sessionState.newHadoopConf()
-    val rgCap = scans.map(s =>
-      rowGroupsCapped(s.relation.location.inputFiles, conf, want)).max
+    val rgCap = scans.map(s => rowGroupsCapped(
+      s.relation.location.listFiles(Nil, Nil).flatMap(_.files), conf, want)).max
     if (rgCap < want) rgCap
     else {
       // row groups clear the bar — splits decide. Read the SCANS' own
@@ -209,20 +209,26 @@ object Tables {
     }
   }
 
-  /** Per-file parquet row-group counts, memoized (footer read once per
-    * file per JVM — base tables are immutable inputs by contract). */
-  private val rgMemo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def rowGroupsCapped(files: Array[String],
-                              conf: org.apache.hadoop.conf.Configuration,
-                              cap: Int): Int = {
+  /** Per-file parquet row-group counts, memoized on (path, length,
+    * modification time) — a file rewritten in place re-reads its footer
+    * (the listing's statuses are already cached by the scan's file
+    * index, so the key costs no filesystem call). Cleared past
+    * [[rgMemoCap]] entries so a long-lived process that keeps rewriting
+    * files cannot grow it without bound. */
+  private val rgMemo = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Integer]()
+  private val rgMemoCap = 4096
+  private def rowGroupsCapped(
+      files: Seq[org.apache.spark.sql.execution.datasources.FileStatusWithMetadata],
+      conf: org.apache.hadoop.conf.Configuration, cap: Int): Int = {
+    if (rgMemo.size > rgMemoCap) rgMemo.clear()
     var total = 0L
     val it = files.iterator
     while (it.hasNext && total < cap) {
-      val p = it.next()
-      total += rgMemo.computeIfAbsent(p, _ => Integer.valueOf(
+      val f = it.next()
+      total += rgMemo.computeIfAbsent((f.getPath.toString, f.getLen, f.getModificationTime),
+        _ => Integer.valueOf(
         try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), conf)
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try r.getRowGroups.size finally r.close()
         } catch {
@@ -598,90 +604,6 @@ object Tables {
     tune(spark).read.schema(schemaDdl).json(path)
 
   /**
-   * STAGED parquet append — the crash-safe form of
-   * `write.mode("append")` for persisted index directories (r13 advice
-   * fix; commit made ATOMIC in the r14 review pass). A plain append
-   * that dies mid-job can leave partial part-files inside the live
-   * directory, silently corrupting every later read with no validation
-   * or recovery path. Here the full write job runs against a HIDDEN
-   * staging subdirectory first (dot-prefixed — invisible to every
-   * parquet listing, recursive or not); only after the job SUCCEEDS is
-   * the whole stage committed by ONE directory rename to a visible
-   * `append-<uuid>` subdirectory — a single filesystem metadata op, so
-   * there is no partially-committed state: a crash at ANY point leaves
-   * the live index reading exactly its pre-append content, and the
-   * retry simply overwrites the orphaned hidden stage (no duplicates —
-   * nothing from a failed attempt is ever visible). Readers must list
-   * recursively ([[readIndexDir]]); concurrent appends to the SAME dir
-   * remain the caller's to serialize (the id-disjointness contract).
-   */
-  def stagedAppend(df: DataFrame, dir: String): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(dir, ".append_stage")
-    val live = new org.apache.hadoop.fs.Path(dir)
-    df.write.mode("overwrite").parquet(stage.toString)
-    val fs = live.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val committed = new org.apache.hadoop.fs.Path(live,
-      s"append-${java.util.UUID.randomUUID().toString}")
-    require(fs.rename(stage, committed),
-      s"staged append: atomic commit rename failed for $committed")
-    ()
-  }
-
-  /** Read an append-able index directory: base part-files plus every
-    * committed `append-<uuid>` subdirectory ([[stagedAppend]]'s atomic
-    * commit unit). `recursiveFileLookup` skips hidden (dot/underscore)
-    * paths, so an in-flight or orphaned stage is never read. */
-  def readIndexDir(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(dir)
-
-  /** Atomically REPLACE a live artifact directory with a recomputed one
-    * (the k-NN graph append's edge rewrite — unlike [[stagedAppend]],
-    * the new content supersedes the old rather than adding to it). The
-    * stage write runs FIRST and fully materializes `df` — which may
-    * read from the live dir it is about to replace — before any rename
-    * touches it; the live→retired→stage→live rename pair is the commit
-    * point, so a reader never sees a half-written dir. NOTE the exact
-    * contract (r16 advice): between the two renames the live path does
-    * not EXIST — a concurrent reader (or a crash there) sees a missing
-    * dir, not the old artifact, so the store is single-writer with no
-    * concurrent readers during commit; a crash between the renames
-    * leaves the retired dir recoverable by hand, same contract as an
-    * interrupted [[stagedAppend]] stage. */
-  def stagedReplace(df: DataFrame, dir: String): Unit = {
-    stagedReplaceStage(df, dir)
-    stagedReplaceCommit(df.sparkSession, dir)
-  }
-
-  /** Stage half of [[stagedReplace]]: fully materializes `df` into the
-    * stage dir (which may READ from the live dir it will later replace)
-    * without touching the live artifact — split out so a caller with
-    * SEVERAL artifacts to update can stage first, mutate the others,
-    * and commit this one last (the k-NN graph append's
-    * stage-edges → append-vectors → commit-edges order, whose every
-    * crash window leaves a readable, recoverable store). */
-  def stagedReplaceStage(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").parquet(dir + ".replace_stage")
-
-  /** Commit half of [[stagedReplace]]: the live→retired→stage→live
-    * rename pair. Requires a prior [[stagedReplaceStage]]. */
-  def stagedReplaceCommit(spark: SparkSession, dir: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val stage = new org.apache.hadoop.fs.Path(dir + ".replace_stage")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(stage),
-      s"staged replace: no stage dir for $dir — stagedReplaceStage must run first")
-    val retired = new org.apache.hadoop.fs.Path(
-      dir + s".retired-${java.util.UUID.randomUUID().toString}")
-    require(fs.rename(live, retired),
-      s"staged replace: retiring the live dir failed for $dir")
-    require(fs.rename(stage, live),
-      s"staged replace: committing the stage failed for $dir")
-    fs.delete(retired, true)
-    ()
-  }
-
-  /**
    * CDC MERGE (r14 wave 4) — Delta/Iceberg `MERGE INTO`, materialized as
    * ONE declarative plan: apply a change batch to a base snapshot.
    * `changes` carries the base schema plus `seqCol` (the change-log
@@ -811,25 +733,10 @@ object Tables {
     * the previous committed view — never to a torn read. A replayed
     * commit (the streaming contract: same batch, same explicit parent)
     * heals it, because every mutation recomputes from the walk. */
-  private def writeSnapshotManifest(s: SparkSession, dir: String): Unit =
-    writeSnapshotManifestExplicit(s, dir, snapshotVersionsWalk(s, dir))
-
-  private def writeSnapshotManifestExplicit(s: SparkSession, dir: String,
-                                            versions: Seq[Long]): Unit = {
-    val vs = versions.sorted
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_manifest")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$dir/_manifest.tmp-${java.util.UUID.randomUUID().toString}")
-    val out = fs.create(tmp, true)
-    out.write(vs.mkString("", "\n", "\n").getBytes("UTF-8"))
-    out.close()
-    // HDFS rename does not overwrite: drop the old manifest first; the
-    // brief missing-manifest window only sends a concurrent reader to
-    // the (correct) directory walk
-    fs.delete(p, false)
-    require(fs.rename(tmp, p), s"manifest commit rename failed under $dir")
-  }
+  private def writeSnapshotManifest(s: SparkSession, dir: String,
+                                    versions: Option[Seq[Long]] = None): Unit =
+    graft.Artifact.writeManifest(s, dir,
+      versions.getOrElse(snapshotVersionsWalk(s, dir)).sorted.map(_.toString))
 
   /** Committed versions as READERS see them: the 1-file manifest when
     * present (O(1) in version count), the directory walk when absent or
@@ -842,18 +749,9 @@ object Tables {
     * unreadable (both degrade the reader to the walk). Exposed for the
     * spec's manifest-equals-walk pin. */
   private[sources] def snapshotManifest(s: SparkSession, dir: String): Option[Seq[Long]] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/_manifest")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        val in = fs.open(p)
-        try in.readFully(0L, bytes) finally in.close()
-        Some(new String(bytes, "UTF-8").split("\n").toSeq
-          .map(_.trim).filter(_.nonEmpty).map(_.toLong))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    graft.Artifact.readManifest(s, dir).flatMap(ls =>
+      try Some(ls.map(_.toLong))
+      catch { case _: NumberFormatException => None })
 
   /** Read the LATEST COMPLETE snapshot version: the highest `v<N>`
     * subdirectory carrying Spark's `_SUCCESS` commit marker. A version
@@ -967,7 +865,7 @@ object Tables {
     // which exist) instead of one that lists deleted versions forever;
     // the final rewrite from the walk merely reconciles leftovers.
     if (doomed.nonEmpty) {
-      writeSnapshotManifestExplicit(s, dir, vs.filterNot(doomed.contains))
+      writeSnapshotManifest(s, dir, Some(vs.filterNot(doomed.contains)))
       doomed.foreach { v =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v$v"), true)
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/meta/v$v"), true)

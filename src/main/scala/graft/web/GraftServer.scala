@@ -481,15 +481,7 @@ object GraftServer {
   /** `runMain graft.web.GraftServer [port]` — serve until killed. */
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8090)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val s = new GraftServer(spark, port).start()
     println(s"graft server listening on http://127.0.0.1:${s.boundPort}/")
     Thread.currentThread.join()

@@ -141,7 +141,7 @@ class PlanShapeSpec extends SparkSpecBase {
     // chain is a pure projection and gets none), so ZERO exchanges of
     // any kind, not merely zero hash-partitioned ones
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val exchanges = df.queryExecution.executedPlan.collect {
+    val exchanges = collect(df.queryExecution.executedPlan) {
       case e: ShuffleExchangeLike => e
     }
     assert(exchanges.isEmpty, s"BPE counting must not shuffle:\n${df.queryExecution.executedPlan}")

@@ -1,11 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (one JVM, forked by sbt). */
-trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterEach {
+/** Shared local SparkSession for all specs (one JVM, forked by sbt).
+  * Mixes in Spark's `AdaptiveSparkPlanHelper`: its `collect(plan)` /
+  * `collectWithSubqueries(plan)` descend into AQE wrappers and query
+  * stages, so a plan pin sees every exchange of an adaptive plan
+  * (`plan.collect` stops at the `AdaptiveSparkPlanExec` leaf and would
+  * pass on any real shuffle). */
+trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterEach
+    with AdaptiveSparkPlanHelper {
 
   /** Release TRACKED operator persists between tests — the same hygiene
     * Verify/Bench apply per query. Operators that hold a tracked persist

@@ -61,9 +61,9 @@ class BloomSpec extends SparkSpecBase {
     try {
       val a = docs.where(col("doc_id") % 4 === 0)
       val b = docs.where(col("doc_id") % 4 === 2)
-      Dedup.bloomBuild(a).write.mode("overwrite").parquet(s"$dir/pos")
-      graft.sources.Tables.stagedAppend(Dedup.bloomBuild(b), s"$dir/pos")
-      val fileFilter = graft.sources.Tables.readIndexDir(spark, s"$dir/pos")
+      graft.Artifact.write(dir, "bloom", Nil, Seq("pos" -> Dedup.bloomBuild(a)))
+      graft.Artifact.update(dir, appends = Seq("pos" -> Dedup.bloomBuild(b)))
+      val fileFilter = graft.Artifact.read(spark, dir, "bloom")("pos")
       val full = Dedup.bloomFlag(docs,
         Dedup.bloomBuild(docs.where(col("doc_id") % 2 === 0)))
       val appended = Dedup.bloomFlag(docs, fileFilter)

@@ -104,7 +104,7 @@ class ChunkSpec extends SparkSpecBase {
     val df = TextOps.chunk(Seq(doc(1, 80), doc(2, 10)).toDF("doc_id", "text"))
     df.collect()
     val plan: SparkPlan = df.queryExecution.executedPlan
-    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+    val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
     assert(shuffles.isEmpty, s"expected no exchange, got:\n$plan")
   }
 }

@@ -34,28 +34,22 @@ class DecontamSpec extends SparkSpecBase {
   }
 
   test("the probe index joins via broadcast, corpus grams never shuffle") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
 
     val root = Decontam.flagDocuments(docs).queryExecution.executedPlan
     // STRUCTURAL walk (not a toString regex, which a plan-rendering
-    // change would silently vacuate): descend through AQE wrappers and
-    // collect every exchange node
-    def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-      val here = p match { case a: AdaptiveSparkPlanExec => a.executedPlan; case x => x }
-      pf.lift(here).toSeq ++ here.children.flatMap(collectAll(_)(pf))
-    }
-    val broadcasts = collectAll(root) { case b: BroadcastExchangeLike => b }
+    // change would silently vacuate): the spec base's collect descends
+    // through AQE wrappers and query stages to every exchange node
+    val broadcasts = collect(root) { case b: BroadcastExchangeLike => b }
     assert(broadcasts.nonEmpty, s"expected a broadcast probe join in:\n$root")
     // allowed exchanges: the probe-side gram distinct (probe_id, g) and
     // the post-join matched-row aggregates (doc_id[, probe_id]). A
     // corpus-gram shuffle — hash-partitioned on (doc_id, g) — is the one
     // shape the operator's scale contract forbids (it would move every
     // corpus gram over the network before the broadcast semijoin)
-    val corpusGramShuffles = collectAll(root) {
+    val corpusGramShuffles = collect(root) {
       case e: ShuffleExchangeLike => e
     }.filter { e =>
       e.outputPartitioning match {
@@ -131,25 +125,15 @@ class DecontamSpec extends SparkSpecBase {
 
   test("r12 plan pin: fuzzy decontam broadcasts BOTH probe-index frames; " +
     "no corpus exchange before the decision aggregate") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val df = Decontam.flagFuzzyDocuments(docs)
     df.count() // finalize AQE
-    def unwrap(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case x => x
-    }
-    def collectAll[T](p: SparkPlan)(f: PartialFunction[SparkPlan, T]): Seq[T] = {
-      val here = unwrap(p)
-      here.collect(f) ++ here.subqueries.flatMap(collectAll(_)(f))
-    }
-    val root = unwrap(df.queryExecution.executedPlan)
+    val root = df.queryExecution.executedPlan
     // the probe set is benchmark-sized: BOTH index frames (bucket keys
     // AND shingle-set payloads) must ride broadcast joins — a shuffled
     // join would move the 100 TB corpus's shingle mass for a tiny index
-    val bhj = collectAll(root) { case b: BroadcastHashJoinExec => b }
+    val bhj = collectWithSubqueries(root) { case b: BroadcastHashJoinExec => b }
     assert(bhj.size >= 2, s"expected both index joins broadcast, got ${bhj.size} in:\n$root")
     // the corpus side's only KEYED exchanges are the decision
     // aggregate's own (partial aggregation collapsed map-side first).
@@ -159,7 +143,7 @@ class DecontamSpec extends SparkSpecBase {
     // splits >= cores) it does not fire at all. What this pin forbids
     // is any hash-partitioned corpus exchange before the aggregate.
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val keyedShuffles = collectAll(root) { case e: ShuffleExchangeLike => e }
+    val keyedShuffles = collectWithSubqueries(root) { case e: ShuffleExchangeLike => e }
       .filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
     assert(keyedShuffles.size <= 2,
       s"corpus must not hash-exchange before the decision aggregate:\n$root")

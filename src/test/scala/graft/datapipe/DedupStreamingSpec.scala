@@ -180,13 +180,8 @@ class DedupStreamingSpec extends SparkSpecBase {
     // as the banded signature. Structural pin — equal shuffle counts for
     // the single-probe and multiprobe gates over the same index.
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def shuffles(plan: SparkPlan): Int = {
-      val here = plan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case x => x }
-      (here match { case _: ShuffleExchangeLike => 1; case _ => 0 }) +
-        here.children.map(shuffles).sum
-    }
+    def shuffles(plan: SparkPlan): Int = collect(plan) { case e: ShuffleExchangeLike => e }.size
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val idx = Ann.embedIndex(emb)
     val sp = shuffles(Ann.embedStreamingFlag(emb, idx).queryExecution.executedPlan)

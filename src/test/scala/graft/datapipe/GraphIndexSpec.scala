@@ -130,8 +130,13 @@ class GraphIndexSpec extends SparkSpecBase {
     val dir = freshDir("knng_atomic")
     Ann.knnGraphWrite(oldV, dir)
     Ann.knnGraphAppend(spark, dir, newV)
-    val leftovers = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(n => n.contains("replace_stage") || n.contains("retired"))
+    // the artifact's own entries AND its siblings (the stage and retired
+    // dirs live beside it)
+    val d = new java.io.File(dir)
+    val leftovers = (d.listFiles() ++
+        d.getParentFile.listFiles().filter(_.getName.contains(d.getName)))
+      .map(_.getName)
+      .filter(n => n.contains("stage") || n.contains("retired"))
     assert(leftovers.isEmpty, s"swap residue: ${leftovers.mkString(",")}")
     // a second append is also safe (swap-on-swap) and stays readable
     val more = (0 until 50).map { i =>

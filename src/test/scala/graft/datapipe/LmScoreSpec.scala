@@ -2,7 +2,6 @@ package graft.datapipe
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Char-trigram LM likelihood gate ([[TextOps.lmScore]] — the CCNet
@@ -123,11 +122,7 @@ class LmScoreSpec extends SparkSpecBase {
   }
 
   test("plan: model sides broadcast, corpus shuffles only for the doc regroup") {
-    def shuffles(plan: SparkPlan): Int = {
-      val here = plan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case x => x }
-      (here match { case _: ShuffleExchangeLike => 1; case _ => 0 }) +
-        here.children.map(shuffles).sum
-    }
+    def shuffles(plan: SparkPlan): Int = collect(plan) { case e: ShuffleExchangeLike => e }.size
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val df = TextOps.lmScore(docs)
     val plan = df.queryExecution.executedPlan

@@ -141,19 +141,15 @@ class NbScoreSpec extends SparkSpecBase {
 
   test("scoring plan: model broadcasts; the only corpus exchange is the per-doc mean") {
     // r13 review fix: the executed plan is an AdaptiveSparkPlanExec leaf
-    // under AQE, so a naive collect{ShuffleExchangeLike} asserts nothing
-    // — descend through adaptive nodes (the LmScoreSpec idiom). The
+    // under AQE, so a naive plan.collect{ShuffleExchangeLike} asserts
+    // nothing — the spec base's AQE-aware collect descends. The
     // model-BUILD subtree legitimately shuffles `w` (the vocab groupBy),
     // so the precise claim is: no exchange carries an exploded word
     // still attached to its doc_id (corpus words never shuffle)
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def exchanges(plan: SparkPlan): Seq[ShuffleExchangeLike] = {
-      val here = plan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case x => x }
-      (here match { case e: ShuffleExchangeLike => Seq(e); case _ => Nil }) ++
-        here.children.flatMap(exchanges)
-    }
+    def exchanges(plan: SparkPlan): Seq[ShuffleExchangeLike] =
+      collect(plan) { case e: ShuffleExchangeLike => e }
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val model = TextOps.nbModel(docs, curated)
     val scored = TextOps.nbScoreWith(docs, model)

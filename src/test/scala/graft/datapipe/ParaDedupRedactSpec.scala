@@ -2,7 +2,6 @@ package graft.datapipe
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
@@ -18,11 +17,8 @@ class ParaDedupRedactSpec extends SparkSpecBase {
 
   /** Structural exchange count, descending through AQE wrappers (a
     * toString regex would vacuously pass on a rendering change). */
-  private def shuffleCount(plan: SparkPlan): Int = {
-    val here = plan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case x => x }
-    (here match { case _: ShuffleExchangeLike => 1; case _ => 0 }) +
-      here.children.map(shuffleCount).sum
-  }
+  private def shuffleCount(plan: SparkPlan): Int =
+    collect(plan) { case e: ShuffleExchangeLike => e }.size
 
   /** Brute-force reference: global first-occurrence keep over word
     * windows, reassembled in order. */

@@ -33,7 +33,7 @@ class RepetitionSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val plan = TextOps.repetition(Tables.documents(spark, sfDir))
       .queryExecution.executedPlan
-    val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+    val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }
     assert(exchanges.isEmpty, s"unexpected shuffle in:\n$plan")
   }
 

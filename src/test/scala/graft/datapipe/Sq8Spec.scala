@@ -88,7 +88,7 @@ class Sq8Spec extends SparkSpecBase {
       // space, and appended vectors are servable
       Ann.sq8Write(emb.where(col("vec_id") % 2 === 0), s"$dir/base")
       Ann.sq8Append(spark, s"$dir/base", emb.where(col("vec_id") % 2 =!= 0))
-      val codes = graft.sources.Tables.readIndexDir(spark, s"$dir/base/codes")
+      val codes = graft.Artifact.read(spark, s"$dir/base", "sq8")("codes")
       assert(codes.select("vec_id").as[Long].collect().toSet ==
         Set(0L, 1L, 2L, 3L, 50L))
       // even-trained dim-2 range is [-2.0, 0.1] (ids 0,2,50); vec 1's

@@ -54,6 +54,35 @@ class SpreadSpec extends SparkSpecBase {
     }
   }
 
+  test("a file rewritten in place at the same path is re-gated (row-group memo keys on length + mtime)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("spread_rewrite").toFile
+    val fixed = new java.io.File(dir, "t/data.parquet")
+    // write `df` as one parquet file, then copy it over the fixed path
+    def place(df: DataFrame, blockSize: Int): Unit = {
+      val tmp = new java.io.File(dir, s"w${System.nanoTime()}")
+      df.coalesce(1).write.option("parquet.block.size", blockSize).parquet(tmp.toString)
+      val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+      fixed.getParentFile.mkdirs()
+      java.nio.file.Files.copy(part.toPath, fixed.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    try {
+      withTinySplits {
+        place((1 to 2000).map(i => (i.toLong, "payload " * 8 + i)).toDF("id", "text"),
+          128 * 1024 * 1024)
+        val one = spark.read.parquet(fixed.getParent)
+        assert(roundRobins(Tables.spread(one)).nonEmpty, "fixture: one row group must spread")
+        place((1 to 20000).map(i => (i.toLong, "payload " * 16 + i)).toDF("id", "text"),
+          16 * 1024)
+        val many = spark.read.parquet(fixed.getParent)
+        assert(Tables.spread(many) eq many,
+          s"a stale one-row-group memo spread the rewritten multi-row-group file:\n" +
+            Tables.spread(many).queryExecution.sparkPlan)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   test("multi-row-group input is left alone (the gate never taxes a well-laid-out input)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("spread_many_rg").toString
