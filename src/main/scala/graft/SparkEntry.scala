@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.cqc.{Cmp, Rel, Yannakakis}
+import graft.cqc.{Agg, Cmp, Rel, Yannakakis}
 import graft.datapipe.{Ann, Decontam, Dedup, Multimodal, Sketches, TextOps}
 import graft.sources.Tables
 import graft.joins.TemporalJoins
@@ -142,57 +142,58 @@ object SparkEntry {
   }
 
   /** Per-source 4-hop path counts WITHOUT enumerating the paths:
-    * aggregation pushed through the join tree ([[Yannakakis.countOverJoin]]
-    * — per-key counts multiply up the tree; the path set itself, which
-    * grows as |edges|^4 on the dense graph, never materializes). */
+    * aggregation pushed through the join tree ([[Yannakakis.aggOverJoin]]
+    * with one zero-factor `Agg.Sum` — per-key counts multiply up the
+    * tree; the path set itself, which grows as |edges|^4 on the dense
+    * graph, never materializes). */
   def qCqcCountFast(s: SparkSession, d: String): DataFrame = {
     val e = Tables.edges(s, d)
-    Yannakakis.countOverJoin(Seq(
+    Yannakakis.aggOverJoin(Seq(
       Rel("g1", e.toDF("src", "v1")),
       Rel("g2", e.toDF("v1", "v2")),
       Rel("g3", e.toDF("v2", "v3")),
-      Rel("g4", e.toDF("v3", "dst"))), Seq("src"))
+      Rel("g4", e.toDF("v3", "dst"))), Seq("src"), Seq(Agg.Sum("cnt", Nil)))
   }
 
   /** Per-source COUNT and SUM(endpoint) over the 4-hop join, again with
-    * no enumeration — the (count, sum) semiring form of the message
-    * passing ([[Yannakakis.aggOverJoin]]). */
+    * no enumeration — two weight columns of the same message pass
+    * ([[Yannakakis.aggOverJoin]]). */
   def qCqcSumFast(s: SparkSession, d: String): DataFrame = {
     val e = Tables.edges(s, d)
     Yannakakis.aggOverJoin(Seq(
       Rel("g1", e.toDF("src", "v1")),
       Rel("g2", e.toDF("v1", "v2")),
       Rel("g3", e.toDF("v2", "v3")),
-      Rel("g4", e.toDF("v3", "dst"))), Seq("src"), Some("dst"))
+      Rel("g4", e.toDF("v3", "dst"))), Seq("src"),
+      Seq(Agg.Sum("cnt", Nil), Agg.Sum("sum_dst", Seq("dst"))))
   }
 
-  /** Per-source MIN/MAX endpoint over the 4-hop join — the idempotent-
-    * semiring member of the no-enumeration aggregate family
-    * ([[Yannakakis.extremaOverJoin]]: the annotation carrier IS the
-    * aggregate). */
+  /** Per-source MIN/MAX endpoint over the 4-hop join — extrema ride the
+    * no-enumeration message pass ([[Yannakakis.aggOverJoin]]) through
+    * `least`/`greatest`, since they are idempotent. */
   def qCqcExtremaFast(s: SparkSession, d: String): DataFrame = {
     val e = Tables.edges(s, d)
-    Yannakakis.extremaOverJoin(Seq(
+    Yannakakis.aggOverJoin(Seq(
       Rel("g1", e.toDF("src", "v1")),
       Rel("g2", e.toDF("v1", "v2")),
       Rel("g3", e.toDF("v2", "v3")),
-      Rel("g4", e.toDF("v3", "dst"))), Seq("src"), "dst")
+      Rel("g4", e.toDF("v3", "dst"))), Seq("src"),
+      Seq(Agg.Min("min_dst", "dst"), Agg.Max("max_dst", "dst")))
   }
 
   /** Per-source SUM over all 3-hop paths of a CROSS-RELATION product
-    * (first-hop rating x last-hop rating) — the sum-of-products semiring
-    * ([[Yannakakis.productOverJoin]]), the aggregate shape the (count,
-    * sum) form cannot express: Σ x_A·y_B factorizes as a product of
+    * (first-hop rating x last-hop rating) — a two-factor `Agg.Sum` of
+    * [[Yannakakis.aggOverJoin]]: Σ x_A·y_B factorizes as a product of
     * per-subtree message sums, so the path set is never enumerated.
     * Ratings are integral; the bigint product keeps both engines exact. */
   def qCqcProdFast(s: SparkSession, d: String): DataFrame = {
     val re = Tables.ratedEdges(s, d)
       .select(col("src"), col("dst"), col("rating").cast("bigint").as("w"))
-    Yannakakis.productOverJoin(Seq(
+    Yannakakis.aggOverJoin(Seq(
       Rel("g1", re.toDF("src", "v1", "w1")),
       Rel("g2", re.select("src", "dst").toDF("v1", "v2")),
       Rel("g3", re.toDF("v2", "dst", "w3"))),
-      Seq("src"), Map("g1" -> "w1", "g3" -> "w3"))
+      Seq("src"), Seq(Agg.Sum("sum_product", Seq("w1", "w3"))))
   }
 
   /** Factorized aggregate over a CYCLIC body (bag-level semiring,
@@ -209,7 +210,7 @@ object SparkEntry {
       Rel("g3", e.toDF("c", "a")),
       Rel("g4", e.toDF("c", "d")),
       Rel("g5", e.toDF("d", "e2"))),
-      Seq("a"), Seq("e2"))
+      Seq("a"), Seq(Agg.Sum("cnt", Nil), Agg.Sum("sum_e2", Seq("e2"))))
   }
 
   /** Reference q11 shape: R(a,b) ⋈ S(b,c) ⋈ T(c,e,f) with r.a < t.e. */
@@ -834,7 +835,7 @@ object SparkEntry {
     * [[graft.sql.CqcSql]] detects that the aggregate factorizes (group
     * key in one relation, aggregates over single-relation expressions,
     * no comparisons) and routes to the FAQ/AJAR message passing
-    * ([[Yannakakis.aggOverJoin]]/[[Yannakakis.extremaOverJoin]]) — the
+    * ([[Yannakakis.aggOverJoin]], one pass for all four) — the
     * join result never exists anywhere, from plain SQL in. */
   /** ROLLUP over a 4-hop ~10^9-path join from SQL text: the door solves
     * ONE finest-granularity aggregate through the factorized fast path
@@ -1141,8 +1142,8 @@ object SparkEntry {
 
   /** The sum-of-products semiring from SQL TEXT: Σ of a CROSS-relation
     * product (first-hop rating x last-hop rating) — the door splits the
-    * multiplication into per-relation factors and routes to
-    * [[graft.cqc.Yannakakis.productOverJoin]]; the 3-hop path set never
+    * multiplication into per-relation factors and routes to a two-factor
+    * sum of [[graft.cqc.Yannakakis.aggOverJoin]]; the 3-hop path set never
     * materializes (the text form of `cqc_prod_fast`). */
   def qSqlCqcProdFast(s: SparkSession, d: String): DataFrame = {
     Tables.ratedEdges(s, d).createOrReplaceTempView("cqcpr_edges")

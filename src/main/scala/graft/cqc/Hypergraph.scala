@@ -45,6 +45,22 @@ object Cmp {
       .toSet
 }
 
+/**
+ * One aggregate of the factorized pass ([[Yannakakis.aggOverJoin]]),
+ * computed over the natural join and named `name` in the output.
+ */
+sealed trait Agg { def name: String }
+
+object Agg {
+  /** Σ over the join of the product of `vars`; each var must live in
+    * exactly one relation. `Nil` is COUNT(*), one var is SUM(v). */
+  case class Sum(name: String, vars: Seq[String]) extends Agg
+  /** MIN(v); `v` may be a shared join variable (idempotent). */
+  case class Min(name: String, v: String) extends Agg
+  /** MAX(v); `v` may be a shared join variable (idempotent). */
+  case class Max(name: String, v: String) extends Agg
+}
+
 class CyclicQueryException(msg: String) extends RuntimeException(msg)
 
 /**

@@ -1,7 +1,10 @@
 package graft.cqc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType}
+
+import graft.functions.DecimalExact
 
 /**
  * Yannakakis-style evaluation of acyclic conjunctive queries with
@@ -45,16 +48,19 @@ object Yannakakis {
     */
   private[graft] def routesDirect(rels: Seq[Rel]): Boolean =
     rels.nonEmpty && {
-      val thr =
-        try rels.head.df.sparkSession.conf.get("spark.graft.direct.threshold", "262144").toLong
-        catch { case scala.util.control.NonFatal(_) => 262144L }
+      val thr = directThreshold(rels.head.df.sparkSession)
       thr > 0 && rels.forall(r => Hypergraph.estSize(r) <= BigInt(thr))
     }
 
-  /**
-   * Remove all dangling tuples: bottom-up then top-down semijoin passes
-   * (the classic full reducer). Returns the reduced DataFrame per relation.
-   */
+  /** `spark.graft.direct.threshold` in bytes (default 262144); a value
+    * that is not a whole number throws, naming the key and the value. */
+  private[graft] def directThreshold(spark: SparkSession): Long = {
+    val key = "spark.graft.direct.threshold"
+    val raw = spark.conf.get(key, "262144")
+    raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be a whole number of bytes, got '$raw'"))
+  }
+
   /** Cache policy for leaf INPUTS: base-table scans stay lazy (pushdown-
     * pruned columnar reads are the cheap path, and at 100 TB raw inputs
     * don't fit in any cache) — but a DERIVED leaf (aggregate / join /
@@ -87,20 +93,22 @@ object Yannakakis {
     else df
   }
 
-  /** Reducer policy for the MESSAGE-PASSING aggregate paths
-    * ([[aggOverJoin]]/[[productOverJoin]]): the same cost gate as
-    * enumeration. Correctness does not need the reducer there — every
-    * child message joins its parent INNER (per key), and the root only
-    * keeps rows matched by a message from every child subtree, so
-    * dangling rows drop out of the semiring on their own; reduction just
-    * prunes them earlier. [[extremaOverJoin]] is the exception: its
-    * carrier walk relies on every relation being dangling-free (it reads
-    * extrema straight off the reduced root) and ALWAYS reduces. */
+  /** Reducer policy for the message pass ([[aggOverJoin]]): the same
+    * cost gate as enumeration, for every aggregate kind. Correctness
+    * does not need the reducer there — every child message joins its
+    * parent INNER (per key), and the root only keeps rows matched by a
+    * message from every child subtree, so dangling rows drop out of the
+    * weights and the extrema on their own; reduction just prunes them
+    * earlier. */
   private def reducedForMessages(tree: JoinTree): Map[String, DataFrame] =
     if (routesDirect(tree.rels.values.toSeq))
       tree.rels.map { case (n, r) => n -> cacheDerivedLeaf(r.df) }.toMap
     else fullReduce(tree)
 
+  /**
+   * Remove all dangling tuples: bottom-up then top-down semijoin passes
+   * (the classic full reducer). Returns the reduced DataFrame per relation.
+   */
   def fullReduce(tree: JoinTree): Map[String, DataFrame] = {
     val reduced = scala.collection.mutable.Map[String, DataFrame]()
     tree.rels.foreach { case (n, r) => reduced(n) = cacheDerivedLeaf(r.df) }
@@ -251,294 +259,119 @@ object Yannakakis {
   }
 
   /**
-   * COUNT(*) over the natural join of `rels`, grouped by `groupVars` —
-   * computed WITHOUT enumerating the join. Classic aggregation
-   * pushdown over a join tree (the FAQ/AJAR formulation; the reference
-   * computes aggregates AFTER enumeration — TpchQueriesTest — which is
-   * the part that cannot scale when the join output is huge): each node
-   * sends its parent a per-join-key COUNT of its subtree's join
-   * combinations, parents multiply incoming counts into their rows, and
-   * the root groups by `groupVars` summing the products. Every message
-   * is a small (key, count) aggregate — map-side combinable, broadcast-
-   * able — so the full join result (potentially |edges|^depth rows)
-   * never exists anywhere.
+   * Aggregates over the natural join of `rels`, grouped by `groupVars`,
+   * computed WITHOUT enumerating the join: one bottom-up message pass
+   * over the join tree (aggregation pushdown, the FAQ/AJAR formulation;
+   * the reference aggregates only after enumeration — TpchQueriesTest —
+   * which is the part that cannot scale when the join output is huge).
+   *
+   * Each [[Agg.Sum]] is one weight column of a product-weight semiring.
+   * A row's weight is seeded with the product of the sum's vars that
+   * live in its relation (1 where none do); absorbing a child message
+   * multiplies the child's per-key weight in; a message is the per-join-
+   * key Σ of its subtree's weights. The root's Σ per group is therefore
+   * Σ over the join of Π vars: COUNT(*) is the zero-factor case, SUM(x)
+   * the one-factor case, Σ x_A·y_B the two-factor case. [[Agg.Min]] and
+   * [[Agg.Max]] ride the same messages: extrema are idempotent, so a
+   * child's extremum combines with `least`/`greatest`, and relations
+   * without the variable carry a typed null, which both skip. One
+   * shuffle per tree edge, however many aggregates; every message is a
+   * small (key, weights) aggregate — map-side combinable, broadcastable —
+   * so the join result (|edges|^depth rows on a path) never exists.
    *
    * `groupVars` must be covered by one relation; the tree is re-rooted
-   * there. Comparisons are not supported on this path (they break the
-   * per-subtree factorization); use [[solve]] + groupBy when you need
-   * them.
+   * there. The output is `groupVars` plus one column per aggregate,
+   * named by it. Comparisons are not supported (they break the
+   * per-subtree factorization); use [[solve]] + groupBy for those.
+   * Weights multiply through [[exactTimes]]: integral and decimal vars
+   * stay exact, floats carry the usual Spark-sum caveat.
    */
-  def countOverJoin(rels: Seq[Rel], groupVars: Seq[String]): DataFrame =
-    aggOverJoin(rels, groupVars, None)
-
-  /**
-   * COUNT(*) and optionally SUM(`sumVar`) over the natural join, grouped
-   * by `groupVars`, via the same message passing — the (count, sum)
-   * semiring: absorbing a child message into a node's rows multiplies
-   * counts and cross-multiplies sums (`sum' = sum·cnt_c + cnt·sum_c`),
-   * which is exactly how Σ x distributes over a product of independent
-   * subtree combinations. `sumVar` may live in any ONE relation.
-   */
-  def aggOverJoin(
-      rels: Seq[Rel],
-      groupVars: Seq[String],
-      sumVar: Option[String]): DataFrame =
-    aggOverJoin(rels, groupVars, sumVar.toSeq)
-
-  /** Multi-sum form: any number of sum variables, each living in exactly
-    * one relation; messages carry one sum column per variable next to the
-    * count, combined independently by the same cross-multiplication. */
-  def aggOverJoin(
-      rels: Seq[Rel],
-      groupVars: Seq[String],
-      sumVars: Seq[String]): DataFrame =
-    aggOverJoin(rels, groupVars, sumVars, Nil, Nil)
-
-  /**
-   * The fully fused form: COUNT(*), any number of SUMs, and any number
-   * of MIN/MAX variables in ONE message pass — extrema ride the same
-   * per-key aggregates as the counting semiring (min/max are idempotent,
-   * so a message's extremum combines with `least`/`greatest` instead of
-   * the cross-multiplication; relations not on the variable's path carry
-   * a typed null, which `least`/`greatest` skip). One shuffle per tree
-   * edge total, however many aggregates are requested — the same fusion
-   * discipline as the comparison-bound carriers.
-   */
-  def aggOverJoin(
-      rels: Seq[Rel],
-      groupVars: Seq[String],
-      sumVars: Seq[String],
-      minVars: Seq[String],
-      maxVars: Seq[String]): DataFrame = {
+  def aggOverJoin(rels: Seq[Rel], groupVars: Seq[String], aggs: Seq[Agg]): DataFrame = {
+    require(aggs.nonEmpty, "aggOverJoin needs at least one aggregate")
     val rootRel = rels.find(r => groupVars.toSet.subsetOf(r.vars)).getOrElse(
       throw new IllegalArgumentException(
         s"groupVars $groupVars must be covered by a single relation"))
-    sumVars.foreach(v => require(rels.count(_.vars.contains(v)) == 1,
-      s"sum variable $v must appear in exactly ONE relation (a shared join " +
-        "variable would be seeded once per copy and overcounted)"))
+    def typeOf(v: String): DataType = rels.find(_.vars.contains(v)).getOrElse(
+      throw new IllegalArgumentException(s"variable $v appears in no relation"))
+      .df.schema(v).dataType
+    aggs.collect { case Agg.Sum(_, vs) => vs }.flatten.foreach(v =>
+      require(rels.count(_.vars.contains(v)) == 1,
+        s"sum variable $v must appear in exactly ONE relation (a shared join " +
+          "variable would be seeded once per copy and overcounted)"))
     val tree = Hypergraph.joinTree(rels).rerooted(rootRel.name)
     val reduced = reducedForMessages(tree)
-    val sumCols = sumVars.indices.map(i => s"__sum$i")
-    // DECIMAL sum variables run the semiring on EXACT arithmetic
-    // ([[graft.functions.DecimalExact]] — DECIMAL(38, s) partials, r16):
-    // Spark's native decimal *)/(+ adjust precision by SHRINKING scale
-    // (never below 6), so scale > 6 sums used to be silently rounded
-    // mid-semiring; the exact ops preserve the scale for ANY s and
-    // null on magnitude overflow (the stock capped-accumulator class)
-    val sumType: Map[String, org.apache.spark.sql.types.DataType] =
-      sumVars.map(v => v -> rels.find(_.vars.contains(v)).getOrElse(
-        throw new IllegalArgumentException(s"variable $v appears in no relation"))
-        .df.schema(v).dataType).toMap
-    def isDec(v: String): Boolean =
-      sumType(v).isInstanceOf[org.apache.spark.sql.types.DecimalType]
-    // extrema: (variable, isMin, message column); shared join variables
-    // are fine here (idempotent — a double-seeded value changes nothing)
-    val exSpecs = (minVars.map((_, true)) ++ maxVars.map((_, false)))
-      .zipWithIndex.map { case ((v, isMin), i) => (v, isMin, s"__ex$i") }
-    val exType = exSpecs.map { case (v, _, _) =>
-      v -> rels.find(_.vars.contains(v)).getOrElse(
-        throw new IllegalArgumentException(s"variable $v appears in no relation"))
-        .df.schema(v).dataType
-    }.toMap
-
-    // bottom-up: per-key (count, sums..., extrema...) of each subtree
-    val msg = scala.collection.mutable.Map[String, DataFrame]()
-    def withChildMsgs(n: String): DataFrame = {
-      // sum columns keep their own type (integral vars stay exact; float
-      // vars are the caller's determinism tradeoff, as with any Spark sum)
-      var df = reduced(n).withColumn("__cnt", lit(1L))
-      sumVars.zip(sumCols).foreach { case (v, sc) =>
-        // decimal vars seed a TYPED zero so the exact combine below never
-        // sees a long/decimal mix; integrals keep the long identity
-        val zero =
-          if (isDec(v)) lit(java.math.BigDecimal.ZERO).cast(sumType(v))
-          else lit(0L)
-        df = df.withColumn(sc,
-          if (tree.rels(n).vars.contains(v)) col(v) else zero)
-      }
-      exSpecs.foreach { case (v, _, ec) =>
-        df = df.withColumn(ec,
-          if (tree.rels(n).vars.contains(v)) col(v)
-          else lit(null).cast(exType(v))) // least/greatest skip nulls
-      }
-      for (c <- tree.childrenOf(n)) {
-        val ck = tree.sharedVars(c, n)
-        var m = msg(c).withColumnRenamed("__cnt", "__cnt_c")
-        (sumCols ++ exSpecs.map(_._3)).foreach(sc =>
-          m = m.withColumnRenamed(sc, s"${sc}_c"))
-        df =
-          if (ck.nonEmpty) df.join(m, ck, "inner")
-          else df.crossJoin(m) // disconnected edge: semiring still multiplies
-        sumVars.zip(sumCols).foreach { case (v, sc) =>
-          df = df.withColumn(sc,
-            if (isDec(v)) {
-              import graft.functions.DecimalExact
-              DecimalExact.plus(
-                DecimalExact.timesCount(col(sc), col("__cnt_c")),
-                DecimalExact.timesCount(col(s"${sc}_c"), col("__cnt")))
-            } else col(sc) * col("__cnt_c") + col("__cnt") * col(s"${sc}_c"))
-        }
-        exSpecs.foreach { case (_, isMin, ec) =>
-          df = df.withColumn(ec,
-            if (isMin) least(col(ec), col(s"${ec}_c"))
-            else greatest(col(ec), col(s"${ec}_c")))
-        }
-        df = df.withColumn("__cnt", col("__cnt") * col("__cnt_c"))
-          .drop("__cnt_c" +: (sumCols ++ exSpecs.map(_._3)).map(sc => s"${sc}_c"): _*)
-      }
-      df
+    val ws = aggs.zipWithIndex.map {
+      case (_: Agg.Sum, i) => s"__sum$i"
+      case (_, i) => s"__ex$i"
     }
-    for (n <- tree.bottomUp if n != tree.root) {
-      val keys = tree.sharedVars(n, tree.parentOf(n))
-      val d = withChildMsgs(n)
-      val aggs = (sum(col("__cnt")).as("__cnt") +:
-        sumCols.map(sc => sum(col(sc)).as(sc))) ++
-        exSpecs.map { case (_, isMin, ec) =>
-          (if (isMin) min(col(ec)) else max(col(ec))).as(ec)
-        }
-      msg(n) =
-        if (keys.nonEmpty) d.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-        else d.agg(aggs.head, aggs.tail: _*)
-    }
-    val finalAggs = (sum(col("__cnt")).as("cnt") +:
-      sumVars.zip(sumCols).map { case (v, sc) => sum(col(sc)).as(s"sum_$v") }) ++
-      exSpecs.map { case (v, isMin, ec) =>
-        if (isMin) min(col(ec)).as(s"min_$v") else max(col(ec)).as(s"max_$v")
+    def times(df: DataFrame, a: String, b: String): Column =
+      exactTimes(col(a), df.schema(a).dataType, col(b), df.schema(b).dataType)
+
+    def seeded(n: String): DataFrame = {
+      val own = tree.rels(n).vars
+      def extremum(v: String): Column = if (own(v)) col(v) else lit(null).cast(typeOf(v))
+      val factors = aggs.map {
+        case Agg.Sum(_, vs) => vs.filter(own)
+        case _ => Nil
       }
-    withChildMsgs(tree.root)
-      .groupBy(groupVars.map(col): _*)
-      .agg(finalAggs.head, finalAggs.tail: _*)
-  }
-
-  /**
-   * Σ over the natural join of a PRODUCT of per-relation factors — the
-   * sum-of-products semiring, grouped by `groupVars`, with no
-   * enumeration. `factors` maps relation name → SQL expression over that
-   * relation's own variables; relations absent from the map contribute
-   * the multiplicative identity 1. Seeding each row's message value with
-   * its factor makes the same per-key message passing as
-   * [[countOverJoin]] compute Σ_join Π_r factor_r directly: a subtree's
-   * message is the per-join-key sum of its factor products, absorbing a
-   * child message multiplies (independent combinations distribute), and
-   * the root groups by `groupVars` summing the products. COUNT is the
-   * all-ones special case; SUM(x) is the single-factor case — this is
-   * the general semiring member of the family (cross-relation terms like
-   * Σ x_A·y_B need it; the (count, sum) form of [[aggOverJoin]] cannot
-   * express them).
-   *
-   * Every message is a small (key, value) aggregate — map-side
-   * combinable, broadcastable — so the join result never exists.
-   * Factor type discipline is the caller's (integer/decimal factors stay
-   * exact and order-independent; floats carry the usual Spark-sum
-   * caveat).
-   */
-  def productOverJoin(
-      rels: Seq[Rel],
-      groupVars: Seq[String],
-      factors: Map[String, String],
-      resultName: String = "sum_product"): DataFrame = {
-    val rootRel = rels.find(r => groupVars.toSet.subsetOf(r.vars)).getOrElse(
-      throw new IllegalArgumentException(
-        s"groupVars $groupVars must be covered by a single relation"))
-    factors.keys.foreach(n => require(rels.exists(_.name == n),
-      s"factor relation $n not among the relations"))
-    val tree = Hypergraph.joinTree(rels).rerooted(rootRel.name)
-    val reduced = reducedForMessages(tree)
-
-    def seeded(n: String): DataFrame =
-      reduced(n).withColumn("__w",
-        factors.get(n).map(expr).getOrElse(lit(1L)))
-    // DECIMAL factors multiply through the exact semiring ops (r16 — the
-    // aggOverJoin rationale: native decimal × shrinks scale > 6); the
-    // factor-scale SUM must stay ≤ 38, which the door gate pre-checks
-    // (a direct API caller gets the expression's loud require instead)
-    def exactTimes(a: org.apache.spark.sql.Column, at: org.apache.spark.sql.types.DataType,
-                   b: org.apache.spark.sql.Column,
-                   bt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.Column = {
-      import org.apache.spark.sql.types.DecimalType
-      import graft.functions.DecimalExact
-      import org.apache.spark.sql.types.{DoubleType, FloatType}
-      def fractional(t: org.apache.spark.sql.types.DataType): Boolean =
-        t == DoubleType || t == FloatType
-      (at, bt) match {
-        case (_: DecimalType, _: DecimalType) => DecimalExact.times(a, b)
-        // a fractional factor cannot ride timesCount (it casts the
-        // factor to DECIMAL(20,0), silently rounding 0.5 to 0 — r16
-        // advice); the product honestly degrades to double instead
-        case (_: DecimalType, o) if fractional(o) => a * b
-        case (o, _: DecimalType) if fractional(o) => a * b
-        case (_: DecimalType, _) => DecimalExact.timesCount(a, b)
-        case (_, _: DecimalType) => DecimalExact.timesCount(b, a)
-        case _ => a * b
+      val first = reduced(n).withColumns(aggs.zip(ws).zip(factors).map {
+        case ((_: Agg.Sum, w), vs) => w -> vs.headOption.map(col).getOrElse(lit(1L))
+        case ((Agg.Min(_, v), w), _) => w -> extremum(v)
+        case ((Agg.Max(_, v), w), _) => w -> extremum(v)
+      }.toMap)
+      // further factors living in the same relation multiply in, typed
+      factors.zip(ws).foldLeft(first) { case (df, (vs, w)) =>
+        vs.drop(1).foldLeft(df)((d, v) => d.withColumn(w, times(d, w, v)))
       }
     }
     val msg = scala.collection.mutable.Map[String, DataFrame]()
-    def withChildMsgs(n: String): DataFrame = {
-      var df = seeded(n)
-      for (c <- tree.childrenOf(n)) {
+    def withChildMsgs(n: String): DataFrame =
+      tree.childrenOf(n).foldLeft(seeded(n)) { (df, c) =>
         val ck = tree.sharedVars(c, n)
-        val lt = df.schema("__w").dataType
-        val rt = msg(c).schema("__w").dataType
-        val m = msg(c).withColumnRenamed("__w", "__w_c")
-        df =
+        val m = msg(c).withColumnsRenamed(ws.map(w => w -> s"${w}_c").toMap)
+        val j =
           if (ck.nonEmpty) df.join(m, ck, "inner")
-          else df.crossJoin(m) // disconnected edge: semiring still multiplies
-        df = df.withColumn("__w",
-          exactTimes(col("__w"), lt, col("__w_c"), rt)).drop("__w_c")
+          else df.crossJoin(m) // disconnected edge: the semiring still multiplies
+        j.withColumns(aggs.zip(ws).map {
+          case (_: Agg.Sum, w) => w -> times(j, w, s"${w}_c")
+          case (_: Agg.Min, w) => w -> least(col(w), col(s"${w}_c"))
+          case (_: Agg.Max, w) => w -> greatest(col(w), col(s"${w}_c"))
+        }.toMap).drop(ws.map(w => s"${w}_c"): _*)
       }
-      df
+    def rollUp(df: DataFrame, keys: Seq[String], names: Seq[String]): DataFrame = {
+      val cols = aggs.zip(ws).zip(names).map {
+        case ((_: Agg.Sum, w), nm) => sum(col(w)).as(nm)
+        case ((_: Agg.Min, w), nm) => min(col(w)).as(nm)
+        case ((_: Agg.Max, w), nm) => max(col(w)).as(nm)
+      }
+      df.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
     }
-    for (n <- tree.bottomUp if n != tree.root) {
-      val keys = tree.sharedVars(n, tree.parentOf(n))
-      val d = withChildMsgs(n)
-      msg(n) =
-        if (keys.nonEmpty) d.groupBy(keys.map(col): _*).agg(sum(col("__w")).as("__w"))
-        else d.agg(sum(col("__w")).as("__w"))
-    }
-    withChildMsgs(tree.root)
-      .groupBy(groupVars.map(col): _*)
-      .agg(sum(col("__w")).as(resultName))
+    for (n <- tree.bottomUp if n != tree.root)
+      msg(n) = rollUp(withChildMsgs(n), tree.sharedVars(n, tree.parentOf(n)), ws)
+    rollUp(withChildMsgs(tree.root), groupVars, aggs.map(_.name))
   }
 
-  /**
-   * MIN(v) and MAX(v) over the natural join, grouped by `groupVars`,
-   * with no enumeration: min/max are idempotent, so join multiplicities
-   * are irrelevant and the comparison-annotation carrier walk IS the
-   * aggregate — per-key extrema of `v` flow from its relation along the
-   * tree path to the (re-rooted) group relation, one tiny aggregate +
-   * join per hop. Completes the aggregate family next to
-   * [[countOverJoin]]/[[aggOverJoin]] (COUNT/SUM need the counting
-   * semiring; MIN/MAX only need reachability).
-   */
-  def extremaOverJoin(rels: Seq[Rel], groupVars: Seq[String], v: String): DataFrame = {
-    val rootRel = rels.find(r => groupVars.toSet.subsetOf(r.vars)).getOrElse(
-      throw new IllegalArgumentException(
-        s"groupVars $groupVars must be covered by a single relation"))
-    val vRel = rels.find(_.vars.contains(v)).getOrElse(
-      throw new IllegalArgumentException(s"variable $v appears in no relation")).name
-    val tree = Hypergraph.joinTree(rels).rerooted(rootRel.name)
-    val reduced = fullReduce(tree)
-    if (vRel == tree.root)
-      return reduced(tree.root).groupBy(groupVars.map(col): _*)
-        .agg(min(col(v)).as(s"min_$v"), max(col(v)).as(s"max_$v"))
-    val hops = tree.path(vRel, tree.root)
-    var carrier: DataFrame = null
-    for (i <- 0 until hops.length - 1) {
-      val cur = hops(i)
-      val next = hops(i + 1)
-      val keys = tree.sharedVars(cur, next)
-      require(keys.nonEmpty, s"disconnected tree edge $cur-$next")
-      val base =
-        if (i == 0) reduced(cur).select((keys :+ v).distinct.map(col): _*)
-        else reduced(cur).join(carrier, tree.sharedVars(hops(i - 1), cur), "inner")
-      val (mnc, mxc) = if (i == 0) (v, v) else ("__mn", "__mx")
-      carrier = base.groupBy(keys.map(col): _*)
-        .agg(min(col(mnc)).as("__mn"), max(col(mxc)).as("__mx"))
+  /** The semiring's typed multiply. DECIMAL factors run on
+    * [[graft.functions.DecimalExact]] (DECIMAL(38, s) products, r16):
+    * Spark's native decimal `*` adjusts precision by SHRINKING scale
+    * (never below 6), so scale > 6 weights would be silently rounded
+    * mid-semiring; the exact op keeps the scale and nulls on magnitude
+    * overflow (the stock capped-accumulator class). The factor-scale sum
+    * must stay ≤ 38, which the door gate pre-checks (a direct API caller
+    * gets the expression's loud require instead). */
+  private[graft] def exactTimes(a: Column, at: DataType, b: Column, bt: DataType): Column = {
+    def fractional(t: DataType): Boolean = t == DoubleType || t == FloatType
+    (at, bt) match {
+      case (_: DecimalType, _: DecimalType) => DecimalExact.times(a, b)
+      // a fractional factor cannot ride timesCount (it casts the factor
+      // to DECIMAL(20,0), silently rounding 0.5 to 0 — r16 advice); the
+      // product honestly degrades to double instead
+      case (_: DecimalType, o) if fractional(o) => a * b
+      case (o, _: DecimalType) if fractional(o) => a * b
+      case (_: DecimalType, _) => DecimalExact.timesCount(a, b)
+      case (_, _: DecimalType) => DecimalExact.timesCount(b, a)
+      case _ => a * b
     }
-    reduced(tree.root)
-      .join(carrier, tree.sharedVars(hops(hops.length - 2), tree.root), "inner")
-      .groupBy(groupVars.map(col): _*)
-      .agg(min(col("__mn")).as(s"min_$v"), max(col("__mx")).as(s"max_$v"))
   }
 
   /**

@@ -6,24 +6,24 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, Decimal, DecimalType}
 
 /**
- * EXACT decimal semiring arithmetic for the factorized-aggregate fast
- * paths (r16 — lifting the `scale <= 6` decline):
+ * EXACT decimal products for the factorized-aggregate pass (r16 — lifting
+ * the `scale <= 6` decline):
  *
- * Spark's native decimal `*`/`+` route through
+ * Spark's native decimal `*` routes through
  * `DecimalPrecision.adjustPrecisionScale`, which caps intermediate
  * precision at 38 by SHRINKING the scale — but never below
  * MINIMUM_ADJUSTED_SCALE = 6. That is exactly why the semiring message
- * passing (partial sums × multiplicity counts, cross-multiplied partial
- * sums) was safe only for scale ≤ 6: a wider scale could be silently
- * ROUNDED mid-semiring, a divergence stock evaluation would not have.
+ * passing (per-row weights × per-key child weights, see
+ * [[graft.cqc.Yannakakis.aggOverJoin]]) was safe only for scale ≤ 6: a
+ * wider scale could be silently ROUNDED mid-semiring, a divergence stock
+ * evaluation would not have.
  *
- * These expressions instead compute the product/sum exactly in
- * unbounded arithmetic and type the result DECIMAL(38, exact scale)
- * (product: s₁+s₂; sum: max(s₁,s₂)) — the scale can never shrink, and a
- * value whose MAGNITUDE outgrows 38 digits yields NULL, the same
- * bounded-magnitude class as a stock decimal SUM's capped accumulator.
- * Codegen'd (one static helper call per row), so the message-pass
- * projections stay inside whole-stage codegen.
+ * These expressions instead compute the product exactly in unbounded
+ * arithmetic and type the result DECIMAL(38, s₁+s₂) — the scale can
+ * never shrink, and a value whose MAGNITUDE outgrows 38 digits yields
+ * NULL, the same bounded-magnitude class as a stock decimal SUM's capped
+ * accumulator. Codegen'd (one static helper call per row), so the
+ * message-pass projections stay inside whole-stage codegen.
  */
 object DecimalExact {
 
@@ -33,12 +33,8 @@ object DecimalExact {
   def timesExact(a: Decimal, b: Decimal, scale: Int): Decimal =
     fit(a.toJavaBigDecimal.multiply(b.toJavaBigDecimal), scale)
 
-  /** Exact sum fitted to DECIMAL(38, scale); null on overflow. */
-  def plusExact(a: Decimal, b: Decimal, scale: Int): Decimal =
-    fit(a.toJavaBigDecimal.add(b.toJavaBigDecimal), scale)
-
   private def fit(bd: java.math.BigDecimal, scale: Int): Decimal = {
-    // bd's scale is already the target (exact product/sum of the child
+    // bd's scale is already the target (the exact product of the child
     // scales), so changePrecision never rounds — it only overflow-checks
     val d = Decimal(BigDecimal(bd))
     if (d.changePrecision(DecimalType.MAX_PRECISION, scale)) d else null
@@ -53,22 +49,19 @@ object DecimalExact {
     GraftSqlBridge.column(DecimalTimesExact(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
-  /** a + b (both DECIMAL-typed columns), typed DECIMAL(38, max(s_a, s_b)). */
-  def plus(a: Column, b: Column): Column =
-    GraftSqlBridge.column(DecimalPlusExact(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
   /** value × count with the count coerced ([[count]]). */
   def timesCount(value: Column, c: Column): Column = times(value, count(c))
 }
 
-private[graft] trait DecimalExactBinary extends BinaryExpression {
-  protected def scaleOf(e: Expression): Int = e.dataType match {
+/** Exact decimal product: DECIMAL(38, s₁+s₂), null on magnitude overflow. */
+case class DecimalTimesExact(left: Expression, right: Expression) extends BinaryExpression {
+  private def scaleOf(e: Expression): Int = e.dataType match {
     case d: DecimalType => d.scale
     case other => throw new IllegalArgumentException(
       s"${prettyName} needs decimal inputs, got $other — cast counts to DECIMAL(20,0) at the call site")
   }
-  protected def resultScale: Int
+  private lazy val resultScale: Int = scaleOf(left) + scaleOf(right)
+  override def prettyName: String = "graft_decimal_times_exact"
   override def dataType: DataType = {
     require(resultScale <= DecimalType.MAX_PRECISION,
       s"$prettyName result scale $resultScale exceeds ${DecimalType.MAX_PRECISION} — " +
@@ -76,40 +69,18 @@ private[graft] trait DecimalExactBinary extends BinaryExpression {
     DecimalType(DecimalType.MAX_PRECISION, resultScale)
   }
   override def nullable: Boolean = true
-  protected def helper: String
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DecimalExact.timesExact(a.asInstanceOf[Decimal], b.asInstanceOf[Decimal], resultScale)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val tmp = ctx.freshName("dexact")
       s"""
          |org.apache.spark.sql.types.Decimal $tmp =
-         |  graft.functions.DecimalExact.$helper($a, $b, $resultScale);
+         |  graft.functions.DecimalExact.timesExact($a, $b, $resultScale);
          |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
        """.stripMargin
     })
-}
-
-/** Exact decimal product: DECIMAL(38, s₁+s₂), null on magnitude overflow. */
-case class DecimalTimesExact(left: Expression, right: Expression)
-    extends DecimalExactBinary {
-  override def prettyName: String = "graft_decimal_times_exact"
-  override protected lazy val resultScale: Int = scaleOf(left) + scaleOf(right)
-  override protected def helper: String = "timesExact"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DecimalExact.timesExact(a.asInstanceOf[Decimal], b.asInstanceOf[Decimal], resultScale)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Exact decimal sum: DECIMAL(38, max(s₁,s₂)), null on magnitude overflow. */
-case class DecimalPlusExact(left: Expression, right: Expression)
-    extends DecimalExactBinary {
-  override def prettyName: String = "graft_decimal_plus_exact"
-  override protected lazy val resultScale: Int = math.max(scaleOf(left), scaleOf(right))
-  override protected def helper: String = "plusExact"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DecimalExact.plusExact(a.asInstanceOf[Decimal], b.asInstanceOf[Decimal], resultScale)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLim
 
 import scala.util.chaining._
 
-import graft.cqc.{Cmp, Rel}
+import graft.cqc.{Agg, Cmp, Rel}
 import graft.wcoj.Ghd
 
 /**
@@ -504,6 +504,9 @@ object CqcSql {
   }
 
   def solvePlan(spark: SparkSession, analyzed0: LogicalPlan): DataFrame = {
+    // read before any route: a malformed value must fail here, not be
+    // swallowed by a route's stock fallback
+    graft.cqc.Yannakakis.directThreshold(spark)
     val analyzed = inlineCtes(analyzed0)
 
     // ---- peel ORDER BY / LIMIT off the top (the reference's ranked
@@ -1243,10 +1246,11 @@ object CqcSql {
     // live in one relation and whose aggregates are COUNT(*) / SUM /
     // MIN / MAX over single-relation expressions — with no comparison
     // machinery, outer joins, or residuals — factorizes over the join
-    // tree: route to [[graft.cqc.Yannakakis.aggOverJoin]] (counting
-    // semiring) + [[graft.cqc.Yannakakis.extremaOverJoin]] (idempotent),
-    // so the join result is NEVER enumerated (a 4-hop count of ~10^9
-    // paths from SQL text costs four per-key message aggregates).
+    // tree: route to ONE pass of [[graft.cqc.Yannakakis.aggOverJoin]]
+    // (product-weight semiring for COUNT/SUM/product SUMs; extrema ride
+    // the same messages), so the join result is NEVER enumerated (a
+    // 4-hop count of ~10^9 paths from SQL text costs four per-key
+    // message aggregates).
     // Returns the aggregated frame with group vars + one __agg$i column
     // per aggregate alias — the same layout the generic branch builds —
     // so HAVING / projection / ORDER BY downstream are path-agnostic.
@@ -1268,6 +1272,11 @@ object CqcSql {
         case c: org.apache.spark.sql.catalyst.expressions.Cast => (c.child, Some(c.dataType))
         case other => (other, None)
       }
+    // 1 where `e` is non-null, else 0: COUNT(e) and AVG's denominator
+    // as a sum
+    def indicator(e: Expression): Expression =
+      org.apache.spark.sql.catalyst.expressions.If(
+        org.apache.spark.sql.catalyst.expressions.IsNull(e), Literal(0L), Literal(1L))
 
     def tryOuterFastAgg(
         groupExprs: Seq[Expression],
@@ -1380,15 +1389,10 @@ object CqcSql {
                 CntStar
               case c: org.apache.spark.sql.catalyst.expressions.aggregate.Count
                   if c.children.size == 1 && sideOf(c.children.head).isDefined =>
-                OSum(org.apache.spark.sql.catalyst.expressions.If(
-                  org.apache.spark.sql.catalyst.expressions.IsNull(c.children.head),
-                  Literal(0L), Literal(1L)), sideOf(c.children.head).get, isCount = true)
+                OSum(indicator(c.children.head), sideOf(c.children.head).get, isCount = true)
               case c: org.apache.spark.sql.catalyst.expressions.aggregate.Count
                   if c.children.size == 1 && innerLeaf(c.children.head).isDefined =>
-                ISum(innerLeaf(c.children.head).get,
-                  org.apache.spark.sql.catalyst.expressions.If(
-                    org.apache.spark.sql.catalyst.expressions.IsNull(c.children.head),
-                    Literal(0L), Literal(1L)), isCount = true)
+                ISum(innerLeaf(c.children.head).get, indicator(c.children.head), isCount = true)
               case su: org.apache.spark.sql.catalyst.expressions.aggregate.Sum
                   if sideOf(su.child).isDefined && exactType(su.child) =>
                 OSum(su.child, sideOf(su.child).get, isCount = false)
@@ -1428,9 +1432,7 @@ object CqcSql {
       kinds.zipWithIndex.foreach {
         case (ISum(l, e, _), i) => derivedI(l) = (s"__iv$i", e) :: derivedI(l)
         case (IAvg(l, e), i) =>
-          derivedI(l) = (s"__inn$i", org.apache.spark.sql.catalyst.expressions.If(
-            org.apache.spark.sql.catalyst.expressions.IsNull(e),
-            Literal(0L), Literal(1L))) :: (s"__iv$i", e) :: derivedI(l)
+          derivedI(l) = (s"__inn$i", indicator(e)) :: (s"__iv$i", e) :: derivedI(l)
         case (IMin(l, e), i) => derivedI(l) = (s"__ix$i", e) :: derivedI(l)
         case (IMax(l, e), i) => derivedI(l) = (s"__ix$i", e) :: derivedI(l)
         case _ => ()
@@ -1440,16 +1442,17 @@ object CqcSql {
           df.withColumn(n, GraftSqlBridge.column(toVarNames(deRuntime(e))))
         })
       }
-      val isumVars = kinds.zipWithIndex.flatMap {
-        case (ISum(_, _, _), i) => Seq(s"__iv$i")
-        case (IAvg(_, _), i) => Seq(s"__iv$i", s"__inn$i")
+      def innerSum(v: String) = Agg.Sum(s"sum_$v", Seq(v))
+      val innerAggs = Agg.Sum("cnt", Nil) +: kinds.zipWithIndex.flatMap {
+        case (ISum(_, _, _), i) => Seq(innerSum(s"__iv$i"))
+        case (IAvg(_, _), i) => Seq(innerSum(s"__iv$i"), innerSum(s"__inn$i"))
+        case (IMin(_, _), i) => Seq(Agg.Min(s"min___ix$i", s"__ix$i"))
+        case (IMax(_, _), i) => Seq(Agg.Max(s"max___ix$i", s"__ix$i"))
         case _ => Nil
       }
-      val iminVars = kinds.zipWithIndex.collect { case (IMin(_, _), i) => s"__ix$i" }
-      val imaxVars = kinds.zipWithIndex.collect { case (IMax(_, _), i) => s"__ix$i" }
       // inner cluster: per-(group, join key) multiplicities + inner
       // sums/extrema, factorized
-      val innerAgg = graft.wcoj.Ghd.aggOverJoin(relsI, groupKeys, isumVars, iminVars, imaxVars)
+      val innerAgg = Ghd.aggOverJoin(relsI, groupKeys, innerAggs)
       // each outer side: per-join-key multiplicity + sums/extrema
       // (join-bearing sides recurse through the door like nested blocks)
       var joined = innerAgg
@@ -1487,60 +1490,52 @@ object CqcSql {
       }
       // weight the messages together: each aggregate multiplies the inner
       // multiplicity by ITS side's term and every OTHER side's match
-      // count (max 1 — an unmatched side contributes one null-extended row)
-      def multOthers(base: Column, j: Int): Column =
+      // count (max 1 — an unmatched side contributes one null-extended
+      // row), through the semiring's typed multiply: a decimal weight
+      // stays exact at DECIMAL(38, s). Every other factor is a long
+      // count, so the summed column's type `bt` types every step.
+      import org.apache.spark.sql.types.{DataType, LongType}
+      def typeOf(c: String): DataType = joined.schema(c).dataType
+      def multOthers(base: Column, bt: DataType, j: Int): Column =
         sides.indices.filter(_ != j).foldLeft(base) { (c, k) =>
-          c * functions.coalesce(functions.col(s"__m$k"), functions.lit(1L))
+          graft.cqc.Yannakakis.exactTimes(c, bt,
+            functions.coalesce(functions.col(s"__m$k"), functions.lit(1L)), LongType)
         }
-      // decimal weighting rides the exact semiring ops (r16 — see
-      // Yannakakis.aggOverJoin): DECIMAL(38, s) partials, scale never
-      // shrinks, magnitude overflow nulls like the stock capped sum
-      def multOthersDec(base: Column, j: Int): Column =
-        sides.indices.filter(_ != j).foldLeft(base) { (c, k) =>
-          graft.functions.DecimalExact.timesCount(c,
-            functions.coalesce(functions.col(s"__m$k"), functions.lit(1L)))
-        }
-      def isDecE(e: Expression): Boolean =
-        e.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]
+      def orZero(c: String, isCount: Boolean): Column =
+        if (isCount) functions.coalesce(functions.col(c), functions.lit(0L))
+        else functions.col(c)
       // widened semiring intermediates cast back to the stock aggregate
       // type (lossless — values are exact), so schemas match stock
       val stockTypes = aggAliases.map { case (al, _) => unwrapCast(al.child)._1.dataType }
       val aggCols = kinds.zip(aggAliases).zipWithIndex.map { case ((k, (_, n)), i) =>
         (k match {
           case CntStar =>
-            functions.sum(multOthers(functions.col("cnt"), -1))
-          case OSum(_, j, true) =>
-            functions.sum(multOthers(functions.col("cnt") *
-              functions.coalesce(functions.col(s"__os$i"), functions.lit(0L)), j))
-          case OSum(e, j, false) if isDecE(e) =>
-            functions.sum(multOthersDec(graft.functions.DecimalExact
-              .timesCount(functions.col(s"__os$i"), functions.col("cnt")), j))
-          case OSum(_, j, false) =>
-            functions.sum(multOthers(functions.col("cnt") * functions.col(s"__os$i"), j))
+            functions.sum(multOthers(functions.col("cnt"), LongType, -1))
+          case OSum(_, j, isCount) =>
+            val bt = typeOf(s"__os$i")
+            functions.sum(multOthers(graft.cqc.Yannakakis.exactTimes(
+              functions.col("cnt"), LongType, orZero(s"__os$i", isCount), bt), bt, j))
           case OMin(_, _) => functions.min(functions.col(s"__os$i"))
           case OMax(_, _) => functions.max(functions.col(s"__os$i"))
-          case ISum(_, _, true) =>
-            // COUNT over inner expr: each preserved row appears once per
-            // outer match combination — indicator sum times all sides
-            functions.sum(multOthers(functions.coalesce(
-              functions.col(s"sum___iv$i"), functions.lit(0L)), -1))
-          case ISum(_, e, false) if isDecE(e) =>
-            functions.sum(multOthersDec(functions.col(s"sum___iv$i"), -1))
-          case ISum(_, _, false) =>
-            functions.sum(multOthers(functions.col(s"sum___iv$i"), -1))
+          case ISum(_, _, isCount) =>
+            // each preserved row appears once per outer match combination:
+            // the inner sum (a COUNT's indicator sum) times all sides
+            functions.sum(multOthers(
+              orZero(s"sum___iv$i", isCount), typeOf(s"sum___iv$i"), -1))
           case IMin(_, _) => functions.min(functions.col(s"min___ix$i"))
           case IMax(_, _) => functions.max(functions.col(s"max___ix$i"))
           case IAvg(_, _) =>
-            functions.sum(multOthers(functions.col(s"sum___iv$i"), -1)).cast("double") /
-              functions.sum(multOthers(functions.col(s"sum___inn$i"), -1))
+            functions.sum(multOthers(functions.col(s"sum___iv$i"), LongType, -1))
+              .cast("double") /
+              functions.sum(multOthers(functions.col(s"sum___inn$i"), LongType, -1))
           case OAvg(_, j) =>
             // weighted exact sums; nulls (unmatched sides) drop from the
             // numerator via null products and from the denominator via
             // the coalesced indicator — one exact-over-exact division
             functions.sum(multOthers(functions.col("cnt") *
-              functions.col(s"__os$i"), j)).cast("double") /
+              functions.col(s"__os$i"), LongType, j)).cast("double") /
               functions.sum(multOthers(functions.col("cnt") *
-                functions.coalesce(functions.col(s"__on$i"), functions.lit(0L)), j))
+                functions.coalesce(functions.col(s"__on$i"), functions.lit(0L)), LongType, j))
         }).pipe(_.cast(stockTypes(i)))
           .pipe(c0 => aggCasts(i).map(c0.cast).getOrElse(c0)).as(n)
       }
@@ -1584,14 +1579,14 @@ object CqcSql {
 
       sealed trait Kind
       case object CntK extends Kind
-      case class SumK(leaf: Int, e: Expression) extends Kind
+      /** Σ of a product of per-leaf factors (one weight column of
+        * [[graft.cqc.Yannakakis.aggOverJoin]]): one factor is SUM(x) or
+        * COUNT(x)'s null indicator; several are a CROSS-relation product
+        * (Σ x_A·y_B — the reference q2 sum shape). */
+      case class SumK(factors: Map[Int, Expression]) extends Kind
       case class MinK(leaf: Int, e: Expression) extends Kind
       case class MaxK(leaf: Int, e: Expression) extends Kind
       case class AvgK(leaf: Int, e: Expression) extends Kind
-      /** SUM of a CROSS-relation product (Σ x_A·y_B — the reference q2
-        * sum shape): factors grouped per home leaf, routed to the
-        * sum-of-products semiring ([[graft.cqc.Yannakakis.productOverJoin]]). */
-      case class ProdK(factors: Map[Int, Expression]) extends Kind
       def oneLeaf(e: Expression): Option[Int] = {
         val ls = e.references.map(a => leafOf(a.exprId.id)).toSet
         if (ls.size == 1) Some(ls.head) else None
@@ -1605,10 +1600,10 @@ object CqcSql {
       }
       def sumSafe(e: Expression): Boolean = {
         // EXACT types only: integrals and decimals. The semiring
-        // cross-multiplies partial sums with counts, which reassociates
-        // addition — exact for integers and decimals (scaled-integer
-        // arithmetic). Decimal scale is UNRESTRICTED since r16: the
-        // semiring runs its decimal weighting on
+        // multiplies row values by per-key subtree weights, which
+        // reassociates addition — exact for integers and decimals
+        // (scaled-integer arithmetic). Decimal scale is UNRESTRICTED
+        // since r16: the semiring runs its decimal weighting on
         // graft.functions.DecimalExact (DECIMAL(38, s) partials — scale
         // never shrinks; magnitude overflow nulls, the stock
         // capped-accumulator class), closing the old scale<=6 decline.
@@ -1638,13 +1633,11 @@ object CqcSql {
                 // COUNT(expr) = Σ of a null indicator — rides the sum
                 // machinery (exact long, same result type as COUNT)
                 oneLeaf(c.children.head).map { l =>
-                  SumK(l, org.apache.spark.sql.catalyst.expressions.If(
-                    org.apache.spark.sql.catalyst.expressions.IsNull(c.children.head),
-                    Literal(0L), Literal(1L)))
+                  SumK(Map(l -> indicator(c.children.head)))
                 }.getOrElse(return None)
               case s: org.apache.spark.sql.catalyst.expressions.aggregate.Sum
                   if sumSafe(s.child) =>
-                oneLeaf(s.child).map(SumK(_, s.child): Kind).orElse {
+                oneLeaf(s.child).map(l => SumK(Map(l -> s.child)): Kind).orElse {
                   // cross-relation product: split multiplications into
                   // single-leaf factors (each exact-typed); overlapping
                   // leaves across a split can't merge — generic path
@@ -1678,10 +1671,7 @@ object CqcSql {
                       case _ => true
                     }
                   }
-                  if (gvars.isEmpty) None
-                  else factorLeaves(s.child)
-                    .filter(fs => fs.size > 1 && unadjusted(fs))
-                    .map(ProdK(_): Kind)
+                  factorLeaves(s.child).filter(unadjusted).map(SumK(_): Kind)
                 }.getOrElse(return None)
               case m: org.apache.spark.sql.catalyst.expressions.aggregate.Min =>
                 oneLeaf(m.child).map(MinK(_, m.child)).getOrElse(return None)
@@ -1705,24 +1695,27 @@ object CqcSql {
       // derive one column per aggregated expression on its home relation
       // (a bare attr is the simplest case; this also frees SUM from the
       // shared-join-variable restriction — the derived copy lives in
-      // exactly one relation by construction)
+      // exactly one relation by construction), and name one aggregate of
+      // the message pass per kind (AVG: two) after its output column
       val derived = scala.collection.mutable.Map[Int, List[(String, Expression)]]()
         .withDefaultValue(Nil)
-      val cols = kinds.zipWithIndex.map {
-        case (SumK(l, e), i) => derived(l) = (s"__sv$i", e) :: derived(l); s"__sv$i"
+      def derive(l: Int, n: String, e: Expression): String = {
+        derived(l) = (n, e) :: derived(l)
+        n
+      }
+      val aggs = kinds.zipWithIndex.flatMap {
+        case (CntK, _) => Seq(Agg.Sum("cnt", Nil))
+        case (SumK(fs), i) =>
+          Seq(Agg.Sum(s"__s$i", fs.toSeq.sortBy(_._1).map { case (l, e) =>
+            derive(l, s"__sv${i}_$l", e)
+          }))
         case (AvgK(l, e), i) =>
           // value sum + non-null indicator sum: AVG = Σv / Σ(v IS NOT NULL)
-          derived(l) = (s"__nn$i", org.apache.spark.sql.catalyst.expressions.If(
-            org.apache.spark.sql.catalyst.expressions.IsNull(e),
-            Literal(0L), Literal(1L))) :: (s"__sv$i", e) :: derived(l)
-          s"__sv$i"
-        case (MinK(l, e), i) => derived(l) = (s"__mv$i", e) :: derived(l); s"__mv$i"
-        case (MaxK(l, e), i) => derived(l) = (s"__mv$i", e) :: derived(l); s"__mv$i"
-        case (ProdK(fs), i) =>
-          fs.foreach { case (l, e) => derived(l) = (s"__pv${i}_$l", e) :: derived(l) }
-          ""
-        case (CntK, _) => ""
-      }
+          Seq(Agg.Sum(s"__s$i", Seq(derive(l, s"__sv$i", e))),
+            Agg.Sum(s"__nn$i", Seq(derive(l, s"__nnv$i", indicator(e)))))
+        case (MinK(l, e), i) => Seq(Agg.Min(s"__s$i", derive(l, s"__mv$i", e)))
+        case (MaxK(l, e), i) => Seq(Agg.Max(s"__s$i", derive(l, s"__mv$i", e)))
+      }.distinct
       val rels2 = rels.zipWithIndex.map { case (r, i) =>
         // deRuntime first: a RuntimeReplaceable (NULLIF, ...) analyzes to
         // a With node whose defs break on attr renaming
@@ -1731,40 +1724,14 @@ object CqcSql {
         })
       }
 
-      // ONE fused message pass: count, sums, and extrema share the same
-      // per-edge aggregates (one shuffle per tree edge, total). A CYCLIC
-      // body decomposes to certificate bags first (after the derived
-      // columns, so aggregated expressions live in exactly one member) —
-      // the bag-level semiring: the core stays at the AGM bound and the
-      // aggregate still factorizes across the bag tree.
-      val sumVars = kinds.zip(cols).zipWithIndex.flatMap {
-        case ((_: SumK, c), _) => Seq(c)
-        case ((_: AvgK, c), i) => Seq(c, s"__nn$i")
-        case _ => Nil
-      }.distinct
-      val minVars = kinds.zip(cols).collect { case (_: MinK, c) => c }.distinct
-      val maxVars = kinds.zip(cols).collect { case (_: MaxK, c) => c }.distinct
-      // product sums run their own semiring pass each (the factors seed
-      // the message weights); non-product aggregates share ONE fused
-      // pass. Passes join on the group keys — every frame aggregates the
-      // same reduced join, so the key sets coincide.
-      val prodKs = kinds.zipWithIndex.collect { case (p: ProdK, i) => (p, i) }
-      val needBase = prodKs.size < kinds.size
-      var agg: DataFrame =
-        if (needBase) graft.wcoj.Ghd.aggOverJoin(rels2, gvars, sumVars, minVars, maxVars)
-        else null
-      prodKs.foreach { case (ProdK(fs), i) =>
-        val factorCols = fs.keys.map(l => rels2(l).name -> s"__pv${i}_$l").toMap
-        val pf = graft.wcoj.Ghd.productOverJoin(rels2, gvars, factorCols, s"__prod$i")
-        // null-safe merge: a nullable GROUP BY key yields a NULL-key
-        // group that a using-columns equi-join would silently drop
-        agg = if (agg == null) pf else {
-          val pfr = gvars.foldLeft(pf)((d, g) => d.withColumnRenamed(g, s"__pg_$g"))
-          val cond = gvars.map(g => functions.col(g) <=> functions.col(s"__pg_$g"))
-            .reduce(_ && _)
-          agg.join(pfr, cond, "inner").drop(gvars.map(g => s"__pg_$g"): _*)
-        }
-      }
+      // ONE message pass for every aggregate: counts, sums, products and
+      // extrema share the same per-edge aggregates (one shuffle per tree
+      // edge, total). A CYCLIC body decomposes to certificate bags first
+      // (after the derived columns, so aggregated expressions live in
+      // exactly one member) — the bag-level semiring: the core stays at
+      // the AGM bound and the aggregate still factorizes across the bag
+      // tree.
+      val agg = Ghd.aggOverJoin(rels2, gvars, aggs)
       trace("routing: factorized aggregate fast path (FAQ/AJAR message " +
         "passing; join never enumerated) — kinds: " +
         kinds.map(_.getClass.getSimpleName.stripSuffix("$")).mkString(", "))
@@ -1773,20 +1740,17 @@ object CqcSql {
         functions.coalesce(functions.col("cnt"), functions.lit(0L))
       else functions.col("cnt")
       // factorized intermediates may widen the type (decimal precision
-      // grows under the semiring's cross-multiplication): cast each
-      // output back to the STOCK aggregate's result type — values are
-      // exact, so the cast is lossless and the schema matches stock
+      // grows under the semiring's exact multiply): cast each output back
+      // to the STOCK aggregate's result type — values are exact, so the
+      // cast is lossless and the schema matches stock
       val stockTypes = aggAliases.map { case (al, _) => unwrapCast(al.child)._1.dataType }
       val outCols = gvars.map(functions.col) ++
-        kinds.zip(cols).zip(aggAliases).zipWithIndex.map { case (((k, c), (_, n)), i) =>
+        kinds.zip(aggAliases).zipWithIndex.map { case ((k, (_, n)), i) =>
           (k match {
             case CntK => cnt
-            case _: SumK => functions.col(s"sum_$c")
             case _: AvgK =>
-              functions.col(s"sum_$c").cast("double") / functions.col(s"sum___nn$i")
-            case _: MinK => functions.col(s"min_$c")
-            case _: MaxK => functions.col(s"max_$c")
-            case _: ProdK => functions.col(s"__prod$i")
+              functions.col(s"__s$i").cast("double") / functions.col(s"__nn$i")
+            case _ => functions.col(s"__s$i")
           }).pipe(_.cast(stockTypes(i)))
             .pipe(c0 => aggCasts(i).map(c0.cast).getOrElse(c0)).as(n)
         }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-import graft.cqc.{Cmp, Hypergraph, Rel, Yannakakis}
+import graft.cqc.{Agg, Cmp, Hypergraph, Rel, Yannakakis}
 
 /**
  * Generalized hypertree decomposition for cyclic conjunctive queries
@@ -105,29 +105,11 @@ object Ghd {
    * certificate itself) and the cross-bag join — e.g. triangles x
    * per-vertex tails, quadratic if enumerated — never materializes:
    * tails collapse to per-key messages that multiply into the
-   * certificate. No-ops to the plain Yannakakis forms when the body is
-   * already acyclic.
+   * certificate. No-op to [[Yannakakis.aggOverJoin]] when the body is
+   * already acyclic. Summed variables must live OUTSIDE the certificate
+   * scope's duplicated columns — in exactly one member relation, which
+   * derived columns guarantee.
    */
-  def countOverJoin(rels: Seq[Rel], groupVars: Seq[String]): DataFrame =
-    Yannakakis.countOverJoin(decompose(rels), groupVars)
-
-  /** Fused count/sums/extrema over a cyclic body (see [[countOverJoin]];
-    * sum/extrema variables must live OUTSIDE the certificate scope's
-    * duplicated columns — i.e. in exactly one member relation, which
-    * derived columns guarantee). */
-  def aggOverJoin(
-      rels: Seq[Rel],
-      groupVars: Seq[String],
-      sumVars: Seq[String],
-      minVars: Seq[String] = Nil,
-      maxVars: Seq[String] = Nil): DataFrame =
-    Yannakakis.aggOverJoin(decompose(rels), groupVars, sumVars, minVars, maxVars)
-
-  /** Sum-of-products semiring over a cyclic body (see [[countOverJoin]]). */
-  def productOverJoin(
-      rels: Seq[Rel],
-      groupVars: Seq[String],
-      factors: Map[String, String],
-      resultName: String = "sum_product"): DataFrame =
-    Yannakakis.productOverJoin(decompose(rels), groupVars, factors, resultName)
+  def aggOverJoin(rels: Seq[Rel], groupVars: Seq[String], aggs: Seq[Agg]): DataFrame =
+    Yannakakis.aggOverJoin(decompose(rels), groupVars, aggs)
 }

@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions.col
   *       randomized battery),
   *   (b) the dry-run routing line flipping with the threshold,
   *   (c) threshold<=0 disabling the route entirely (the scale path),
+  *       and a malformed threshold failing loudly,
   *   (d) the fold's multiplicity-neutral estHint keeping enriched
   *       leaves gate-eligible (Catalyst's join stats would multiply),
   *   (e) the direct route's physical plan: broadcast joins, no
@@ -96,6 +97,29 @@ class DirectRouteSpec extends SparkSpecBase {
     // threshold of 1 byte: nothing qualifies — the scale behavior
     withThreshold("1") {
       assert(CqcSql.explain(spark, sql).contains("semijoin-reduced enumeration"))
+    }
+  }
+
+  test("a malformed threshold fails loudly, naming the key and the value") {
+    view()
+    val join =
+      """SELECT g1.src AS a, g2.dst AS b
+        |FROM dr_edges g1, dr_edges g2 WHERE g1.dst = g2.src""".stripMargin
+    // an aggregate shape too: its route must not swallow the error into
+    // a stock fallback
+    val agg =
+      """SELECT g1.src AS a, COUNT(*) AS n
+        |FROM dr_edges g1, dr_edges g2 WHERE g1.dst = g2.src
+        |GROUP BY g1.src""".stripMargin
+    val e = Tables.edges(spark, sfDir)
+    withThreshold("256k") {
+      val errs = Seq(
+        intercept[IllegalArgumentException](CqcSql.solve(spark, join)),
+        intercept[IllegalArgumentException](CqcSql.solve(spark, agg)),
+        intercept[IllegalArgumentException](Yannakakis.solve(Seq(
+          Rel("g1", e.toDF("a", "b")), Rel("g2", e.toDF("b", "c"))))))
+      errs.foreach(ex => assert(ex.getMessage.contains("spark.graft.direct.threshold") &&
+        ex.getMessage.contains("'256k'"), ex.getMessage))
     }
   }
 

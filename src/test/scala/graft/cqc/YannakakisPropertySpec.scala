@@ -22,35 +22,56 @@ class YannakakisPropertySpec extends SparkSpecBase {
     }
 
   test("aggregate family over random chains equals the enumerated oracle") {
+    // One pass per shape, on both routes (direct at the default
+    // threshold, the full reducer at 0): COUNT, a SUM of the last
+    // variable, a two-factor SUM over the end relations' weights, a SUM
+    // of a nullable weight, and MIN/MAX of the last variable and of v1,
+    // a join variable every relation shares in the star.
+    val key = "spark.graft.direct.threshold"
     var seed = Seed(121733L)
     for (i <- 1 to 8) {
       val es = edgeGen.apply(Gen.Parameters.default, seed).get
       seed = seed.next
-      val e = es.distinct.toDF("x", "y")
+      // every third edge carries no weight
+      val e = es.distinct.zipWithIndex.map { case ((s, d), k) =>
+        (s, d, if (k % 3 == 0) None else Some(k.toLong))
+      }.toDF("x", "y", "w")
       val n = 2 + i % 3 // 2-4 relations
       val vars = (0 to n).map(j => s"v$j")
-      val rels = (0 until n).map(j => Rel(s"g$j", e.toDF(vars(j), vars(j + 1))))
-      var naive = e.toDF(vars(0), vars(1))
-      for (j <- 1 until n) naive = naive.join(e.toDF(vars(j), vars(j + 1)), vars(j))
       val g = vars(0)
       val v = vars(n) // last var: lives only in the last relation
-
-      val gotC = Yannakakis.aggOverJoin(rels, Seq(g), Seq(v))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val wantC = naive.groupBy(g)
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("cnt"),
-          org.apache.spark.sql.functions.sum(col(v)).as(s"sum_$v"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(gotC == wantC, s"agg case $i edges=$es")
-
-      val gotE = Yannakakis.extremaOverJoin(rels, Seq(g), v)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val wantE = naive.groupBy(g)
-        .agg(org.apache.spark.sql.functions.min(col(v)).as("mn"),
-          org.apache.spark.sql.functions.max(col(v)).as("mx"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(gotE == wantE, s"extrema case $i edges=$es")
+      val wl = s"w${n - 1}"
+      val aggs = Seq(Agg.Sum("cnt", Nil), Agg.Sum(s"sum_$v", Seq(v)),
+        Agg.Sum("prod", Seq("w0", wl)), Agg.Sum("sum_w", Seq(wl)),
+        Agg.Min("mn", v), Agg.Max("mx", v), Agg.Min("mn1", "v1"), Agg.Max("mx1", "v1"))
+      for (star <- Seq(false, true)) {
+        // chain: g_j(v_j, v_j+1); star: legs g_j(v1, v_j+1) around g0(v0, v1)
+        val rels = (0 until n).map { j =>
+          val from = if (star && j > 0) vars(1) else vars(j)
+          Rel(s"g$j", e.toDF(from, vars(j + 1), s"w$j"))
+        }
+        val naive = rels.map(_.df).reduce((l, r) =>
+          l.join(r, l.columns.intersect(r.columns).toSeq))
+        val want = naive.groupBy(g)
+          .agg(count(lit(1)).as("cnt"), sum(col(v)).as(s"sum_$v"),
+            sum(col("w0") * col(wl)).as("prod"), sum(col(wl)).as("sum_w"),
+            min(col(v)).as("mn"), max(col(v)).as("mx"),
+            min(col("v1")).as("mn1"), max(col("v1")).as("mx1"))
+          .collect().map(_.toSeq).toSet
+        for (thr <- Seq(None, Some("0"))) {
+          thr.foreach(spark.conf.set(key, _))
+          try {
+            val got = Yannakakis.aggOverJoin(rels, Seq(g), aggs)
+            val semis = got.queryExecution.analyzed.collect {
+              case j: org.apache.spark.sql.catalyst.plans.logical.Join
+                  if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
+            }
+            assert(semis.nonEmpty == thr.isDefined, s"route: case $i star=$star thr=$thr")
+            assert(got.collect().map(_.toSeq).toSet == want,
+              s"agg case $i star=$star thr=$thr edges=$es")
+          } finally spark.conf.unset(key)
+        }
+      }
     }
   }
 

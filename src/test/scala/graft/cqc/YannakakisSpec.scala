@@ -18,12 +18,12 @@ class YannakakisSpec extends SparkSpecBase {
     assert(got == want && want.nonEmpty)
   }
 
-  test("countOverJoin equals groupBy-count over the enumerated join") {
+  test("COUNT(*) as a zero-factor Sum equals groupBy-count over the enumerated join") {
     val e = edges.toDF("a", "b")
     // chain: counts per a of 3-hop paths
     val rels = Seq(Rel("g1", e.toDF("a", "b")), Rel("g2", e.toDF("b", "c")),
       Rel("g3", e.toDF("c", "d")))
-    val got = Yannakakis.countOverJoin(rels, Seq("a"))
+    val got = Yannakakis.aggOverJoin(rels, Seq("a"), Seq(Agg.Sum("cnt", Nil)))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     val want = e.toDF("a", "b").join(e.toDF("b", "c"), "b").join(e.toDF("c", "d"), "c")
       .groupBy("a").count()
@@ -34,7 +34,7 @@ class YannakakisSpec extends SparkSpecBase {
     val star = Seq(Rel("hub", hub),
       Rel("l1", e.toDF("x", "p")), Rel("l2", e.toDF("y", "q").where(col("y") < 30)),
       Rel("l3", e.toDF("z", "r")))
-    val gotS = Yannakakis.countOverJoin(star, Seq("x", "y"))
+    val gotS = Yannakakis.aggOverJoin(star, Seq("x", "y"), Seq(Agg.Sum("cnt", Nil)))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
     val wantS = hub.join(e.toDF("x", "p"), "x").join(e.toDF("y", "q").where(col("y") < 30), "y")
       .join(e.toDF("z", "r"), "z")
@@ -47,7 +47,8 @@ class YannakakisSpec extends SparkSpecBase {
     val e = edges.toDF("a", "b")
     val rels = Seq(Rel("g1", e.toDF("a", "b")), Rel("g2", e.toDF("b", "c")),
       Rel("g3", e.toDF("c", "d")))
-    val got = Yannakakis.aggOverJoin(rels, Seq("a"), Some("d"))
+    val got = Yannakakis.aggOverJoin(rels, Seq("a"),
+        Seq(Agg.Sum("cnt", Nil), Agg.Sum("sum_d", Seq("d"))))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     val want = e.toDF("a", "b").join(e.toDF("b", "c"), "b").join(e.toDF("c", "d"), "c")
       .groupBy("a").agg(count(lit(1)).as("cnt"), sum(col("d").cast("long")).as("sum_d"))
@@ -55,7 +56,7 @@ class YannakakisSpec extends SparkSpecBase {
     assert(got == want && want.nonEmpty)
     // a shared join variable cannot be the sum target
     intercept[IllegalArgumentException] {
-      Yannakakis.aggOverJoin(rels, Seq("a"), Some("b"))
+      Yannakakis.aggOverJoin(rels, Seq("a"), Seq(Agg.Sum("cnt", Nil), Agg.Sum("sum_b", Seq("b"))))
     }
   }
 
@@ -63,7 +64,8 @@ class YannakakisSpec extends SparkSpecBase {
     val e = edges.toDF("a", "b")
     val rels = Seq(Rel("g1", e.toDF("a", "b")), Rel("g2", e.toDF("b", "c")),
       Rel("g3", e.toDF("c", "d")))
-    val got = Yannakakis.aggOverJoin(rels, Seq("a"), Seq("d"), Seq("c"), Seq("d"))
+    val got = Yannakakis.aggOverJoin(rels, Seq("a"), Seq(Agg.Sum("cnt", Nil),
+        Agg.Sum("sum_d", Seq("d")), Agg.Min("min_c", "c"), Agg.Max("max_d", "d")))
       .select("a", "cnt", "sum_d", "min_c", "max_d")
       .collect().map(_.toSeq).toSet
     val want = e.toDF("a", "b").join(e.toDF("b", "c"), "b").join(e.toDF("c", "d"), "c")
@@ -72,7 +74,7 @@ class YannakakisSpec extends SparkSpecBase {
       .collect().map(_.toSeq).toSet
     assert(got == want && want.nonEmpty)
     // extrema over a SHARED join variable are fine (idempotent)
-    val got2 = Yannakakis.aggOverJoin(rels, Seq("a"), Nil, Seq("b"), Nil)
+    val got2 = Yannakakis.aggOverJoin(rels, Seq("a"), Seq(Agg.Min("min_b", "b")))
       .select("a", "min_b").collect().map(_.toSeq).toSet
     val want2 = e.toDF("a", "b").join(e.toDF("b", "c"), "b").join(e.toDF("c", "d"), "c")
       .groupBy("a").agg(min(col("b")).as("min_b"))
@@ -80,7 +82,7 @@ class YannakakisSpec extends SparkSpecBase {
     assert(got2 == want2 && want2.nonEmpty)
   }
 
-  test("productOverJoin sums a cross-relation product without enumerating") {
+  test("a two-factor Sum sums a cross-relation product without enumerating") {
     val e = edges.toDF("a", "b")
     // chain with weights at both ends: Σ over 3-hop paths of w1·w3
     val w = edges.zipWithIndex.map { case ((u, v), i) => (u, v, (i + 2).toLong) }
@@ -89,8 +91,8 @@ class YannakakisSpec extends SparkSpecBase {
       Rel("g1", w.toDF("a", "b", "w1")),
       Rel("g2", e.toDF("b", "c")),
       Rel("g3", w.toDF("c", "d", "w3")))
-    val got = Yannakakis.productOverJoin(rels, Seq("a"),
-        Map("g1" -> "w1", "g3" -> "w3"))
+    val got = Yannakakis.aggOverJoin(rels, Seq("a"),
+        Seq(Agg.Sum("sum_product", Seq("w1", "w3"))))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     val want = w.toDF("a", "b", "w1").join(e.toDF("b", "c"), "b")
       .join(w.toDF("c", "d", "w3"), "c")
@@ -98,19 +100,19 @@ class YannakakisSpec extends SparkSpecBase {
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     assert(got == want && want.nonEmpty)
     // all-ones factors degenerate to the count
-    val gotCnt = Yannakakis.productOverJoin(
+    val gotCnt = Yannakakis.aggOverJoin(
         Seq(Rel("g1", e.toDF("a", "b")), Rel("g2", e.toDF("b", "c")),
           Rel("g3", e.toDF("c", "d"))),
-        Seq("a"), Map.empty)
+        Seq("a"), Seq(Agg.Sum("sum_product", Nil)))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val wantCnt = Yannakakis.countOverJoin(
+    val wantCnt = Yannakakis.aggOverJoin(
         Seq(Rel("g1", e.toDF("a", "b")), Rel("g2", e.toDF("b", "c")),
-          Rel("g3", e.toDF("c", "d"))), Seq("a"))
+          Rel("g3", e.toDF("c", "d"))), Seq("a"), Seq(Agg.Sum("cnt", Nil)))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     assert(gotCnt == wantCnt)
-    // a factor over an unknown relation is rejected
+    // a factor naming no variable of the relations is rejected
     intercept[IllegalArgumentException] {
-      Yannakakis.productOverJoin(rels, Seq("a"), Map("nope" -> "w1"))
+      Yannakakis.aggOverJoin(rels, Seq("a"), Seq(Agg.Sum("sum_product", Seq("nope"))))
     }
     // r17 advice fix: a FRACTIONAL factor mixed with a decimal factor
     // must NOT ride timesCount (which casts it to DECIMAL(20,0),
@@ -124,8 +126,8 @@ class YannakakisSpec extends SparkSpecBase {
     val wf = edges.map { case (u, v) => (u, v, 0.5) }.toDF("c", "d", "w3")
     val relsMix = Seq(
       Rel("g1", wd), Rel("g2", e.toDF("b", "c")), Rel("g3", wf))
-    val gotMix = Yannakakis.productOverJoin(relsMix, Seq("a"),
-        Map("g1" -> "w1", "g3" -> "w3"))
+    val gotMix = Yannakakis.aggOverJoin(relsMix, Seq("a"),
+        Seq(Agg.Sum("sum_product", Seq("w1", "w3"))))
       .collect().map(r => (r.getInt(0), r.getDouble(1))).toMap
     val wantMix = wd.join(e.toDF("b", "c"), "b").join(wf, "c")
       .groupBy("a").agg(sum(col("w1") * col("w3")).as("p"))
@@ -135,18 +137,20 @@ class YannakakisSpec extends SparkSpecBase {
       "the planted fractional products must actually be fractional")
   }
 
-  test("extremaOverJoin equals min/max over the enumerated join") {
+  test("Min/Max aggregates equal min/max over the enumerated join") {
     val e = edges.toDF("a", "b")
     val rels = Seq(Rel("g1", e.toDF("a", "b")), Rel("g2", e.toDF("b", "c")),
       Rel("g3", e.toDF("c", "d")))
-    val got = Yannakakis.extremaOverJoin(rels, Seq("a"), "d")
+    val got = Yannakakis.aggOverJoin(rels, Seq("a"),
+        Seq(Agg.Min("min_d", "d"), Agg.Max("max_d", "d")))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSet
     val want = e.toDF("a", "b").join(e.toDF("b", "c"), "b").join(e.toDF("c", "d"), "c")
       .groupBy("a").agg(min(col("d")).as("mn"), max(col("d")).as("mx"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSet
     assert(got == want && want.nonEmpty)
-    // v in the root relation itself: direct aggregation path
-    val got2 = Yannakakis.extremaOverJoin(rels, Seq("a"), "b")
+    // v in the root relation itself: seeded at the root
+    val got2 = Yannakakis.aggOverJoin(rels, Seq("a"),
+        Seq(Agg.Min("min_b", "b"), Agg.Max("max_b", "b")))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSet
     val want2 = e.toDF("a", "b").join(e.toDF("b", "c"), "b").join(e.toDF("c", "d"), "c")
       .groupBy("a").agg(min(col("b")).as("mn"), max(col("b")).as("mx"))
@@ -159,7 +163,8 @@ class YannakakisSpec extends SparkSpecBase {
     val g2 = e.toDF("b", "c").withColumn("w", col("c") * 2)
     val rels = Seq(Rel("g1", e.toDF("a", "b")), Rel("g2", g2),
       Rel("g3", e.toDF("c", "d")))
-    val got = Yannakakis.aggOverJoin(rels, Seq("a"), Seq("w", "d"))
+    val got = Yannakakis.aggOverJoin(rels, Seq("a"),
+        Seq(Agg.Sum("cnt", Nil), Agg.Sum("sum_w", Seq("w")), Agg.Sum("sum_d", Seq("d"))))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val want = e.toDF("a", "b").join(g2, "b").join(e.toDF("c", "d"), "c")
       .groupBy("a").agg(count(lit(1)).as("cnt"),

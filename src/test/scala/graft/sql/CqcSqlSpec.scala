@@ -615,8 +615,8 @@ class CqcSqlSpec extends SparkSpecBase {
     prep()
     // Σ x_A·y_B factorizes over the join tree (reference q2 sum shape):
     // the door must seed per-relation factors and message-pass, never
-    // enumerate — mixed here with COUNT(*) and a plain SUM to prove the
-    // passes compose on the group keys
+    // enumerate — mixed here with COUNT(*) and a plain SUM, all weight
+    // columns of the same message pass
     val sql =
       """SELECT g1.src AS k, COUNT(*) AS n,
         |       SUM(g1.dst * g3.dst) AS sp,
@@ -637,9 +637,8 @@ class CqcSqlSpec extends SparkSpecBase {
 
   test("product SUM + second aggregate keeps the NULL-key group (null-safe merge)") {
     prep()
-    // the sum-of-products frame joins back onto the base aggregate on the
-    // group keys; a nullable GROUP BY key must survive that merge — SQL
-    // grouping treats NULL as a group, so a plain equi-join would drop it
+    // a nullable GROUP BY key must survive the product SUM next to a
+    // second aggregate — SQL grouping treats NULL as a group
     spark.sql(
       """SELECT src, dst,
         |       CASE WHEN src % 5 = 0 THEN NULL ELSE src % 3 END AS gk

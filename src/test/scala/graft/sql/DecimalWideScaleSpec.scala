@@ -99,14 +99,14 @@ class DecimalWideScaleSpec extends SparkSpecBase {
   }
 
   test("Yannakakis.aggOverJoin wide-scale decimal equals the enumerated sum") {
-    import graft.cqc.{Rel, Yannakakis}
+    import graft.cqc.{Agg, Rel, Yannakakis}
     val e = Tables.edges(spark, sfDir)
     val rated = e.select(col("src"), col("dst"),
       (col("dst").cast("decimal(10,0)") / lit(7)).cast("decimal(20,8)").as("w"))
     val rels = Seq(
       Rel("g1", e.toDF("src", "mid")),
       Rel("g2", rated.toDF("mid", "dst", "w")))
-    val fast = Yannakakis.aggOverJoin(rels, Seq("src"), Seq("w"))
+    val fast = Yannakakis.aggOverJoin(rels, Seq("src"), Seq(Agg.Sum("sum_w", Seq("w"))))
       .select(col("src"), col("sum_w").cast("decimal(38,8)").as("s"))
     graft.CacheRegistry.unpersistAll()
     val slow = e.toDF("src", "mid")

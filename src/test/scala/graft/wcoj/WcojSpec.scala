@@ -1,7 +1,7 @@
 package graft.wcoj
 
 import graft.SparkSpecBase
-import graft.cqc.{Cmp, Hypergraph, Rel}
+import graft.cqc.{Agg, Cmp, Hypergraph, Rel}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -105,7 +105,8 @@ class WcojSpec extends SparkSpecBase {
       Rel("g2", e.toDF("b", "c")),
       Rel("g3", e.toDF("c", "a")),
       Rel("g4", e.toDF("c", "d")))
-    val got = Ghd.aggOverJoin(rels, Seq("a"), Seq("d"), Seq("d"), Nil)
+    val got = Ghd.aggOverJoin(rels, Seq("a"),
+        Seq(Agg.Sum("cnt", Nil), Agg.Sum("sum_d", Seq("d")), Agg.Min("min_d", "d")))
       .select("a", "cnt", "sum_d", "min_d")
       .collect().map(_.toSeq).toSet
     val want = e.toDF("a", "b").join(e.toDF("b", "c"), "b")
@@ -116,7 +117,7 @@ class WcojSpec extends SparkSpecBase {
       .collect().map(_.toSeq).toSet
     assert(got == want && want.nonEmpty)
     // product semiring over the same cyclic body
-    val gotP = Ghd.productOverJoin(rels, Seq("a"), Map("g4" -> "d"))
+    val gotP = Ghd.aggOverJoin(rels, Seq("a"), Seq(Agg.Sum("sum_product", Seq("d"))))
       .collect().map(_.toSeq).toSet
     val wantP = e.toDF("a", "b").join(e.toDF("b", "c"), "b")
       .join(e.toDF("c", "a2"), "c").where(col("a") === col("a2"))
