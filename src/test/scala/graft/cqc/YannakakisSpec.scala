@@ -18,7 +18,7 @@ class YannakakisSpec extends SparkSpecBase {
     assert(got == want && want.nonEmpty)
   }
 
-  test("COUNT(*) as a zero-factor Sum equals groupBy-count over the enumerated join") {
+  test("countOverJoin equals groupBy-count over the enumerated join") {
     val e = edges.toDF("a", "b")
     // chain: counts per a of 3-hop paths
     val rels = Seq(Rel("g1", e.toDF("a", "b")), Rel("g2", e.toDF("b", "c")),
