@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /**
  * Session-lifetime tracking of the DataFrames persisted INSIDE graft
  * operators (Yannakakis materialization points, rank-join reduced sides,
- * dedup shingle indexes, triangle edge sets). Those operators persist
+ * dedup shingle indexes, WCOJ certificate bags). Those operators persist
  * intermediates that several downstream passes re-read, but the result
  * they return is still lazy — so they cannot unpersist before returning
  * without losing the benefit. Instead every internal persist is routed

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cqc.{Agg, Cmp, Rel, Yannakakis}
@@ -496,30 +496,15 @@ object SparkEntry {
       .select("node1", "node2", "node3", "node4", "total_rank")
   }
 
-  /** Cyclic query: directed triangle count (reference GHD+WCOJ path). */
+  /** Cyclic query: directed triangle count (reference GHD+WCOJ path) —
+    * the hypercube-partitioned Leapfrog Trie Join of [[Wcoj.triangleCount]].
+    * Registered twice, as `wcoj_triangle` and `wcoj_lftj_triangle`. */
   def qWcojTriangle(s: SparkSession, d: String): DataFrame =
     Wcoj.triangleCount(Tables.edges(s, d))
 
-  /** The same triangle count through the hypercube-partitioned Leapfrog
-    * Trie Join — via the custom physical operator
-    * ([[graft.plans.LftjExec]]) when GraftExtensions is installed,
-    * falling back to the `mapPartitions` form otherwise. */
-  def qLftjTriangle(s: SparkSession, d: String): DataFrame = {
-    val tri = Seq(("a", "b"), ("b", "c"), ("c", "a"))
-    val order = Seq("a", "b", "c")
-    val e = Tables.edges(s, d)
-    val hasStrategy = s.conf.getOption("spark.sql.extensions")
-      .exists(_.contains("graft.functions.GraftExtensions"))
-    if (hasStrategy)
-      graft.plans.LftjExec.enumerate(e, tri, order)
-        .agg(count(lit(1)).as("triangles"))
-    else Lftj.count(e, tri, order)
-  }
-
   /** Directed 4-cycle count via the generic LFTJ path on the sparse
-    * graph — the worst-case-optimal operator on a pattern with no
-    * specialized plan (the triangle queries have one; the square shows
-    * the hypercube/leapfrog machinery is shape-generic). */
+    * graph — the square shows the hypercube/leapfrog machinery the
+    * triangle entries use is shape-generic. */
   def qWcojSquare(s: SparkSession, d: String): DataFrame =
     // cubeSide auto (Lftj.autoSide): picked from |E| stats + cores — on
     // this host it lands on 3 (9 copies/tuple into 81 cells vs side 4's
@@ -530,9 +515,9 @@ object SparkEntry {
         Seq("a", "b", "c", "d"))
       .agg(count(lit(1)).as("squares"))
 
-  /** Triangle count on the wide-domain SPARSE graph — the low-collision
-    * regime (the dense 100-key graph makes every key hot; judging scale
-    * behavior needs both). */
+  /** LFTJ triangle count ([[Wcoj.triangleCount]]) on the wide-domain
+    * SPARSE graph — the low-collision regime (the dense 100-key graph
+    * makes every key hot; judging scale behavior needs both). */
   def qWcojTriangleWide(s: SparkSession, d: String): DataFrame =
     Wcoj.triangleCount(Tables.edgesWide(s, d))
 
@@ -628,17 +613,22 @@ object SparkEntry {
   /** SQL-text front door: a multiway join written as plain SQL, evaluated
     * with the [[graft.plans.SemijoinReduction]] optimizer rule on — any
     * SQL user gets Yannakakis reduction without touching the Rel/Cmp API.
-    * (Falls back to Spark's stock plan, same results, when the
+    * The rule runs here, while its conf is on, and the frame wraps the
+    * optimized plan: the reducers are part of the frame's own plan, so it
+    * and every frame derived from it keep them after the session conf is
+    * restored. (Falls back to Spark's stock plan, same results, when the
     * GraftExtensions rule is not installed in the session.) */
   def qSqlFrontend(s: SparkSession, d: String): DataFrame = {
     Tables.edges(s, d).createOrReplaceTempView("graft_edges")
-    s.conf.set(graft.plans.SemijoinReduction.confKey, "true")
-    try s.sql(
+    val key = graft.plans.SemijoinReduction.confKey
+    val before = s.conf.getOption(key)
+    s.conf.set(key, "true")
+    try GraftSqlBridge.dataFrame(s, s.sql(
       """SELECT g1.src AS a, g1.dst AS b, g2.dst AS c, g3.dst AS e
         |FROM graft_edges g1, graft_edges g2, graft_edges g3
         |WHERE g1.dst = g2.src AND g2.dst = g3.src AND g3.dst < 5
-        |""".stripMargin)
-    finally s.conf.set(graft.plans.SemijoinReduction.confKey, "false")
+        |""".stripMargin).queryExecution.optimizedPlan)
+    finally before.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
   /** The reference's q1 as PURE SQL TEXT through [[graft.sql.CqcSql]] —
@@ -2095,7 +2085,7 @@ object SparkEntry {
     "topk_path3" -> (qTopkPath3 _),
     "topk_cyclic" -> (qTopkCyclic _),
     "wcoj_triangle" -> (qWcojTriangle _),
-    "wcoj_lftj_triangle" -> (qLftjTriangle _),
+    "wcoj_lftj_triangle" -> (qWcojTriangle _),
     "wcoj_triangle_wide" -> (qWcojTriangleWide _),
     "wcoj_square" -> (qWcojSquare _),
     "ghd_bridge" -> (qGhdBridge _),

@@ -41,6 +41,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "graft_h60(x) - deterministic 60-bit md5-derived hash", ""),
       (args: Seq[Expression]) => h60(args(0))))
     ext.injectOptimizerRule(_ => graft.plans.SemijoinReduction)
-    ext.injectPlannerStrategy(_ => graft.plans.LftjStrategy)
   }
 }

@@ -5,6 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** One hypercube-replicated tuple: cell id, pattern index, values in trie
+  * order (public: Catalyst codegen instantiates it). */
+case class CubeRow(pid: Int, rel: Int, k1: Long, k2: Long)
+
 /**
  * Leapfrog Trie Join over hypercube-partitioned binary relations — the
  * worst-case-optimal join path for cyclic graph patterns (reference:
@@ -21,11 +25,11 @@ import org.apache.spark.sql.functions._
  * |E|/side² expected — sized to fit an executor, independent of skew in
  * the join RESULT. Every output binding determines all n coordinates, so
  * it is produced by exactly one cell: no cross-cell dedup needed.
+ *
+ * The only evaluator of cyclic patterns in graft: [[Wcoj.triangleCount]],
+ * the [[Ghd]] certificate bags and the registered cyclic entries all
+ * reach it through [[enumerate]] or [[enumerateMulti]].
  */
-/** One hypercube-replicated tuple: cell id, pattern index, values in trie
-  * order (public: Catalyst codegen instantiates it). */
-case class CubeRow(pid: Int, rel: Int, k1: Long, k2: Long)
-
 object Lftj {
 
   /** Deterministic coordinate hash (no modulo-alignment artifacts). */
@@ -33,13 +37,13 @@ object Lftj {
     Math.floorMod((k * 0x9E3779B97F4A7C15L) >>> 17, side.toLong).toInt
 
   /**
-   * Shared input validation for both WCOJ doors ([[enumerate]] and
-   * [[graft.plans.LftjExec.enumerate]]). Rejects up front the two shapes
-   * that would otherwise SILENTLY lose bindings:
+   * Shared input validation for both doors ([[enumerate]] and
+   * [[enumerateMulti]]). Rejects up front the two shapes that would
+   * otherwise SILENTLY lose bindings:
    *  - a self-loop pattern (u, u): only one hypercube coordinate is bound
    *    while replication still enumerates side^(n-2) free cells, so one
-   *    dimension is never varied and tuples miss cells (the L self-loop
-   *    shape is handled separately in [[Wcoj]]);
+   *    dimension is never varied and tuples miss cells (a self-loop EDGE
+   *    is fine: distinct variables may bind equal values);
    *  - a varOrder variable covered by no pattern: recurse() would hit an
    *    empty participant set and return 0 rows, masking a caller mistake.
    */
@@ -52,7 +56,7 @@ object Lftj {
         s"pattern ($u,$v) uses a variable outside varOrder $varOrder")
       require(u != v,
         s"self-loop pattern ($u,$u) unsupported here: pre-filter edges on " +
-          "src = dst instead (see Wcoj's L-shape handling)")
+          "src = dst instead")
     }
     varOrder.foreach { v =>
       require(patterns.exists(p => p._1 == v || p._2 == v),
@@ -60,11 +64,6 @@ object Lftj {
     }
   }
 
-  /**
-   * Enumerate all bindings of `varOrder` such that every `patterns(r)`
-   * (u, v) — meaning an edge u->v — exists in `edges(src, dst)`.
-   * Returns one column per variable, in `varOrder`.
-   */
   /** Cost-aware hypercube side (cubeSide = 0 selects this): the smallest
     * side giving (a) at least `defaultParallelism` cells (side^n) so
     * every core owns work, and (b) per-cell tries bounded — expected
@@ -84,20 +83,33 @@ object Lftj {
     math.max(2, math.max(forCores, forMemory))
   }
 
+  /**
+   * Enumerate all bindings of `varOrder` such that every `patterns(r)`
+   * (u, v) — meaning an edge u->v — exists in `edges(src, dst)`.
+   * Returns one column per variable, in `varOrder`. Rows with a NULL key
+   * are dropped (inner-equi-join semantics: NULL joins nothing), and the
+   * bindings are DISTINCT: duplicate edges do not duplicate them.
+   */
   def enumerate(
       edges: DataFrame,
       patterns: Seq[(String, String)],
       varOrder: Seq[String],
       cubeSide: Int = 0): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     validate(patterns, varOrder)
     val n = varOrder.length
     val side = if (cubeSide > 0) cubeSide
-      else autoSide(spark, edges.queryExecution.optimizedPlan.stats.sizeInBytes, n)
+      else autoSide(edges.sparkSession, edges.queryExecution.optimizedPlan.stats.sizeInBytes, n)
     val pats = patInfo(patterns, varOrder, side)
 
     solveCells(replicated(edges, pats, n, side), pats, n, varOrder)
+  }
+
+  /** The one input step of both doors: drop rows with a NULL key, then
+    * cast the pair to long as columns (x, y). */
+  private def longKeys(df: DataFrame): DataFrame = {
+    val Array(c1, c2) = df.columns
+    df.where(col(c1).isNotNull && col(c2).isNotNull)
+      .select(col(c1).cast("long").as("x"), col(c2).cast("long").as("y"))
   }
 
   /** Hypercube replication: fix the two bound coordinates, enumerate the
@@ -109,9 +121,7 @@ object Lftj {
       n: Int, side: Int): org.apache.spark.sql.Dataset[CubeRow] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val Array(c1, c2) = edges.columns
-    val e = edges.select(col(c1).cast("long"), col(c2).cast("long")).as[(Long, Long)]
-    e.mapPartitions { it =>
+    longKeys(edges).as[(Long, Long)].mapPartitions { it =>
       it.flatMap { case (x, y) =>
         pats.iterator.flatMap { case (r, i, j, swapped, nCells) =>
           replicateOne(x, y, r, i, j, swapped, nCells, n, side)
@@ -130,7 +140,7 @@ object Lftj {
     val pats = patInfo(patterns, varOrder, cubeSide)
     replicated(edges, pats, n, cubeSide)
       .groupBy(col("pid"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("load"))
+      .agg(count(lit(1)).as("load"))
   }
 
   /**
@@ -157,9 +167,7 @@ object Lftj {
     val pats = patInfo(patterns, varOrder, side)
 
     val tagged = inputs.zipWithIndex.map { case ((df, _), r) =>
-      val Array(c1, c2) = df.columns
-      df.where(col(c1).isNotNull && col(c2).isNotNull)
-        .select(lit(r).as("r"), col(c1).cast("long").as("x"), col(c2).cast("long").as("y"))
+      longKeys(df).select(lit(r).as("r"), col("x"), col("y"))
     }.reduce(_ unionAll _).as[(Int, Long, Long)]
 
     val rows = tagged.mapPartitions { it =>
@@ -238,23 +246,13 @@ object Lftj {
       varOrder.zipWithIndex.map { case (v, i) => col("b").getItem(i).as(v) }: _*)
   }
 
-  /** Count-only variant (partial counts per cell, one global sum). */
-  def count(
-      edges: DataFrame,
-      patterns: Seq[(String, String)],
-      varOrder: Seq[String],
-      cubeSide: Int = 0): DataFrame =
-    enumerate(edges, patterns, varOrder, cubeSide)
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("triangles"))
-
   /**
    * Classic in-memory LFTJ: for each variable level in order, leapfrog-
    * intersect the sorted candidate ranges of every pattern involving that
-   * variable, narrowing ranges as bindings accumulate. Shared by the
-   * mapPartitions path above and the [[graft.plans.LftjExec]] physical
-   * operator.
+   * variable, narrowing ranges as bindings accumulate; run once per
+   * hypercube cell by [[solveCells]].
    */
-  private[graft] def lftj(
+  private def lftj(
       tries: Array[Array[(Long, Long)]],
       pats: Array[(Int, Int)], // (earlier var, later var) per pattern
       n: Int): Iterator[Array[Long]] = {

@@ -4,75 +4,28 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * Cyclic-query evaluation (reference: sqlplus-core ghd decomposes cyclic
- * queries into GHD bags evaluated by Leapfrog Trie Join with HyperCube
- * partitioning, sqlplus-lib wcoj/LeapfrogTrieJoinIterator.scala).
- *
- * Spark-first realization for the triangle bag: a degree-oriented binary
- * join plan. Orienting every undirected triangle's detection around total
- * degree (join low-degree endpoints first) bounds the 2-hop expansion at
- * O(m^1.5) — the AGM/WCOJ bound for triangles — expressed in codegen'd
- * hash joins Catalyst/AQE can schedule. Generic cyclic queries go through
- * [[Ghd]] + this module's LFTJ `mapPartitions` path.
+ * Triangle queries over an edge list `edges(src, dst)` (reference:
+ * sqlplus-core evaluates cyclic queries as GHD bags run by Leapfrog Trie
+ * Join with HyperCube partitioning, sqlplus-lib
+ * wcoj/LeapfrogTrieJoinIterator.scala). The count runs on [[Lftj]], the
+ * one worst-case-optimal evaluator; [[triangles]] is the plain
+ * binary-join enumeration that specs use as the reference.
  */
 object Wcoj {
 
   /**
-   * Count closed directed 3-walks a->b->c->a in `edges(src,dst)` — the
-   * semantics of the triple self-join `g1 ⋈ g2 ⋈ g3` (each distinct-vertex
-   * triangle appears once per rotation; self-loops contribute degenerate
-   * walks). Requires `edges` to be duplicate-free (set semantics).
-   * Returns a single-row DataFrame with column `triangles`.
-   *
-   * Degree-oriented plan: trace(A³) = 3·T₃ + 3·M + L, where
-   *  - T₃ = directed 3-cycles on distinct vertices. Each such cycle has a
-   *    unique vertex p minimal under the (total degree, id) order; rotating
-   *    so p is first, the cycle's edges at p are an in-edge c->p and an
-   *    out-edge p->b with b, c both ordered above p. The wedge expansion is
-   *    Σ_p d↑in(p)·d↑out(p) ≤ Σ_p d↑(p)² = O(m^1.5): a vertex with more
-   *    than √(2m) higher-ordered neighbors would imply more than 2m edge
-   *    endpoints of degree ≥ √(2m). Worst-case optimal (AGM bound) even on
-   *    power-law graphs, expressed as codegen'd hash joins.
-   *  - M = ordered pairs (a,b), a≠b, with a->b, b->a and a self-loop a->a
-   *    (each yields 3 rotations of the walk a->b->a).
-   *  - L = self-loops (walk a->a->a).
+   * Count closed directed 3-walks a->b->c->a in `edges(src, dst)` — the
+   * semantics of the triple self-join `g1 ⋈ g2 ⋈ g3` over DISTINCT edges:
+   * each distinct-vertex triangle appears once per rotation, and
+   * self-loop and mutual-pair walks count too, because LFTJ binds equal
+   * values to distinct variables. Duplicate edges count once and rows
+   * with a NULL end are dropped ([[Lftj.enumerate]]). Returns a single-row
+   * DataFrame with the bigint column `triangles`.
    */
-  def triangleCount(edges: DataFrame): DataFrame = {
-    // set semantics required (degree orientation counts each edge once) —
-    // dedup defensively, a no-op for already-distinct inputs; persist
-    // because the degree agg, both oriented halves, and the closing
-    // semijoin all reference it
-    val e = graft.CacheRegistry.persistTracked(
-      edges.select(col("src"), col("dst")).dropDuplicates("src", "dst"))
-    val loops = e.where(col("src") === col("dst")).select(col("src").as("v"))
-    val plain = e.where(col("src") =!= col("dst"))
-
-    // T3: distinct-vertex directed 3-cycles via degree orientation
-    val deg = plain.select(col("src").as("v")).unionAll(plain.select(col("dst").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
-    val eo = plain
-      .join(deg.select(col("v").as("src"), col("deg").as("sdeg")), Seq("src"))
-      .join(deg.select(col("v").as("dst"), col("deg").as("ddeg")), Seq("dst"))
-    // ord(src) < ord(dst) under (deg, id) lexicographic order
-    val srcLower = col("sdeg") < col("ddeg") ||
-      (col("sdeg") === col("ddeg") && col("src") < col("dst"))
-    val outHi = eo.where(srcLower).select(col("src").as("p"), col("dst").as("b"))
-    val inHi = eo.where(!srcLower).select(col("src").as("c"), col("dst").as("p"))
-    val t3 = inHi.join(outHi, Seq("p"), "inner")
-      .where(col("b") =!= col("c"))
-      .join(plain.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c"), "left_semi")
-      .agg(count(lit(1)).as("t3"))
-
-    // M: mutual pairs whose first endpoint has a self-loop
-    val m = plain
-      .join(plain.select(col("dst").as("src"), col("src").as("dst")), Seq("src", "dst"), "left_semi")
-      .join(loops.select(col("v").as("src")), Seq("src"), "left_semi")
-      .agg(count(lit(1)).as("m"))
-    val l = loops.agg(count(lit(1)).as("l"))
-
-    t3.crossJoin(m).crossJoin(l)
-      .select((col("t3") * 3 + col("m") * 3 + col("l")).as("triangles"))
-  }
+  def triangleCount(edges: DataFrame): DataFrame =
+    Lftj.enumerate(edges.select(col("src"), col("dst")),
+        Seq(("a", "b"), ("b", "c"), ("c", "a")), Seq("a", "b", "c"))
+      .agg(count(lit(1)).as("triangles"))
 
   /**
    * Enumerate triangles with their vertices (a,b,c).

@@ -17,8 +17,11 @@ class CacheRegistrySpec extends SparkSpecBase {
     CacheRegistry.unpersistAll()
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    graft.wcoj.Wcoj.triangleCount(e).collect()
-    assert(CacheRegistry.trackedCount > 0) // the deduped edge set
+    val bags = graft.wcoj.Ghd.decompose(Seq(
+      graft.cqc.Rel("g1", e.toDF("a", "b")), graft.cqc.Rel("g2", e.toDF("b", "c")),
+      graft.cqc.Rel("g3", e.toDF("c", "a"))))
+    bags.find(_.name == "g1+g2+g3").get.df.collect()
+    assert(CacheRegistry.trackedCount > 0) // the WCOJ certificate bag
     CacheRegistry.unpersistAll()
     assert(CacheRegistry.trackedCount == 0)
   }

@@ -40,6 +40,23 @@ class SemijoinReductionSpec extends SparkSpecBase {
     assert(withRule(spark.sql(cyc).head().getLong(0)) == spark.sql(cyc).head().getLong(0))
   }
 
+  test("sql_frontend keeps its reducers after the conf is restored") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    spark.conf.set(SemijoinReduction.confKey, "false")
+    val df = graft.SparkEntry.queries("sql_frontend")(spark, sfDir).groupBy().count()
+    assert(spark.conf.get(SemijoinReduction.confKey) == "false")
+    val got = df.head().getLong(0)
+    val plan = df.queryExecution.executedPlan
+    val semis = collect(plan) { case j: BaseJoinExec if j.joinType == LeftSemi => j }
+    assert(semis.nonEmpty, s"expected LeftSemi reducers, got:\n$plan")
+    // the reduction does not change the result
+    val stock = spark.sql(
+      """SELECT count(*) FROM graft_edges g1, graft_edges g2, graft_edges g3
+        |WHERE g1.dst = g2.src AND g2.dst = g3.src AND g3.dst < 5""".stripMargin)
+    assert(got == stock.head().getLong(0) && got > 0)
+  }
+
   test("two-relation joins are not rewritten (below cluster threshold)") {
     Tables.edges(spark, sfDir).createOrReplaceTempView("sjr_edges")
     val two = "SELECT count(*) FROM sjr_edges g1, sjr_edges g2 WHERE g1.dst = g2.src"

@@ -37,10 +37,32 @@ class WcojSpec extends SparkSpecBase {
 
   test("LFTJ count on real derived edges equals the degree-oriented count") {
     val e = Tables.edges(spark, sfDir)
-    val lftj = Lftj.count(e, Seq(("a", "b"), ("b", "c"), ("c", "a")), Seq("a", "b", "c"))
-      .head().getLong(0)
-    val oriented = Wcoj.triangleCount(e).head().getLong(0)
-    assert(lftj == oriented)
+    val lftj = Wcoj.triangleCount(e).head().getLong(0)
+    val binary = Wcoj.triangles(e).count()
+    assert(lftj == binary)
+  }
+
+  test("NULL keys join nothing: LFTJ and the triangle count drop them") {
+    // triangle 1-2-3 plus one edge with a NULL src and one with a NULL dst
+    val e = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (Some(3L), Some(1L)),
+      (None, Some(1L)), (Some(2L), None)).toDF("src", "dst")
+    val want = Wcoj.triangles(e).count()
+    assert(want == 3)
+    val lftj = Lftj.enumerate(e,
+      Seq(("a", "b"), ("b", "c"), ("c", "a")), Seq("a", "b", "c")).count()
+    assert(lftj == want)
+    assert(Wcoj.triangleCount(e).head().getLong(0) == want)
+  }
+
+  test("the registered triangle count is LFTJ-evaluated, not binary-joined") {
+    val df = graft.SparkEntry.queries("wcoj_triangle")(spark, sfDir)
+    assert(df.head().getLong(0) == Wcoj.triangles(Tables.edges(spark, sfDir)).count())
+    val plan = df.queryExecution.executedPlan
+    val mapGroups = collect(plan) { case m: org.apache.spark.sql.execution.MapGroupsExec => m }
+    val joins = collect(plan) { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+    assert(mapGroups.nonEmpty, s"triangle count should leapfrog, got:\n$plan")
+    assert(joins.isEmpty, s"triangle count must not binary-join, got:\n$plan")
   }
 
   test("LFTJ rejects self-loop patterns and unbound variables up front") {
@@ -51,13 +73,6 @@ class WcojSpec extends SparkSpecBase {
     // "c" covered by no pattern — would silently enumerate zero rows
     intercept[IllegalArgumentException] {
       Lftj.enumerate(edges, Seq(("a", "b")), Seq("a", "b", "c"))
-    }
-    // same guards on the physical-operator door
-    intercept[IllegalArgumentException] {
-      graft.plans.LftjExec.enumerate(edges, Seq(("a", "a"), ("a", "b")), Seq("a", "b"))
-    }
-    intercept[IllegalArgumentException] {
-      graft.plans.LftjExec.enumerate(edges, Seq(("a", "b")), Seq("a", "b", "c"))
     }
   }
 
