@@ -1,7 +1,10 @@
 package graft.datapipe
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
+import scala.jdk.CollectionConverters._
 
 import TextOps.{h60, h60Sql, words}
 
@@ -971,31 +974,96 @@ object Dedup {
    * appearing in `pairs` (cols d1, d2) is assigned
    * `cluster_id` = the minimum doc_id reachable through the pair graph,
    * so the deduplicated corpus is simply `doc_id = cluster_id` (one
-   * canonical keeper per component, the rest drop).
+   * canonical keeper per component, the rest drop). A NULL endpoint
+   * names no document: its pair only contributes the other endpoint.
    *
-   * Distributed min-label propagation to a FIXED POINT:
+   * The pair frame is persisted once, here. Then ONE job collects at
+   * most [[driverPairBudget]] + 1 pairs: if the whole pair list fits the
+   * budget (a few MB of longs), the components are labelled on the
+   * driver by a min-root union-find and returned as a local frame —
+   * no per-round jobs at all. Near-dup pair lists are usually this
+   * small (Kiveris et al., "Connected Components in MapReduce and
+   * Beyond", SoCC '14, finish in memory once the active edge set fits).
+   *
+   * Over the budget, distributed min-label propagation to a FIXED POINT:
    * `L'(v) = min(L(v), min over neighbours u of L(u))`. Each round is
    * one shuffle join + one map-side-combinable min aggregate; per-round
    * state is one (vertex, label) row per vertex — proportional to the
    * documents under suspicion, never to pairs². Each round's labels are
    * persisted and the superseded round is released immediately; the
    * driver sees only a changed-row COUNT (one long per round) to decide
-   * convergence — labels themselves never leave the executors. Round
-   * count = the pair graph's diameter, which for near-dup clusters is
-   * small (duplicate clusters are dense, not path-like); if the fixed
+   * convergence — in these rounds the labels never leave the executors.
+   * Round count = the pair graph's diameter, which for near-dup clusters
+   * is small (duplicate clusters are dense, not path-like); if the fixed
    * point is not reached within [[propagateRoundBudget]] rounds (LONG
    * components — chained near-dups, general 100 TB graphs) the call
    * AUTO-SWITCHES to the large-star/small-star contraction, whose round
    * count is logarithmic in component size rather than linear in
-   * diameter (Kiveris et al., "Connected Components in MapReduce and
-   * Beyond", SoCC '14), with identical cluster assignment (spec'd on
-   * planted paths + random graphs). `alternatingStar = true` forces the
-   * star variant from round one.
+   * diameter (Kiveris et al.), with identical cluster assignment (spec'd
+   * on planted paths + random graphs). `alternatingStar = true` forces
+   * the star variant from round one. All three finishes return the same
+   * `(doc_id, cluster_id, cluster_size)` schema and rows.
    */
   def clusters(pairs: DataFrame, maxRounds: Int = 50,
                alternatingStar: Boolean = false): DataFrame =
-    if (alternatingStar) clustersStar(pairs, maxRounds)
-    else clustersPropagate(pairs, maxRounds)
+    clusters(pairs, maxRounds, alternatingStar, driverPairBudget)
+
+  /** [[clusters]] with the driver-finish budget explicit: a budget of 0
+    * always runs the distributed rounds (specs pin them this way on
+    * inputs small enough to finish on the driver). */
+  private[datapipe] def clusters(pairs: DataFrame, maxRounds: Int,
+      alternatingStar: Boolean, driverBudget: Int): DataFrame = {
+    // persisted ONCE: the budget probe, the symmetrizing union of the
+    // propagation and a star restart all reread the cached pairs, not
+    // the (expensive) pair derivation
+    val p = graft.CacheRegistry.persistTracked(pairs)
+    clustersOnDriver(p, driverBudget).getOrElse(
+      if (alternatingStar) clustersStar(p, maxRounds)
+      else clustersPropagate(p, maxRounds))
+  }
+
+  /** Largest pair list [[clusters]] labels on the driver: 2^18 pairs is
+    * 4 MB of raw longs, while a near-dup pair list of a real corpus is
+    * usually far smaller. */
+  val driverPairBudget: Int = 1 << 18
+
+  /** The driver finish of [[clusters]], or None when the pairs exceed
+    * `budget` (or the ids are not longs). Costs one job whatever the
+    * partitioning: one task walks the cached partitions in turn (on a
+    * cold cache it also computes the partitions it reads) and stops
+    * after `budget + 1` pairs, so the driver never receives more. */
+  private def clustersOnDriver(p: DataFrame, budget: Int): Option[DataFrame] = {
+    val ids = p.select(col("d1").as("v")).union(p.select(col("d2").as("v")))
+    // the distributed finishes' exact schema (analysis only, no job)
+    val schema = withClusterSize(
+      ids.select(col("v").as("doc_id"), col("v").as("cluster_id"))).schema
+    if (budget <= 0 || schema("doc_id").dataType != LongType) return None
+    val got = p.select(col("d1").cast(LongType), col("d2").cast(LongType)).rdd
+      .coalesce(1).mapPartitions(_.take(budget + 1)).collect()
+    if (got.length > budget) return None
+    // min-root union-find: the larger root always hangs under the
+    // smaller, so every root is its component's minimum id
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(v: Long): Long = {
+      var r = v
+      while (parent(r) != r) r = parent(r)
+      var x = v
+      while (x != r) { val next = parent(x); parent(x) = r; x = next }
+      r
+    }
+    for (row <- got) {
+      val ends = (0 to 1).filterNot(row.isNullAt).map(row.getLong)
+      ends.foreach(v => parent.getOrElseUpdate(v, v))
+      if (ends.size == 2) {
+        val (a, b) = (find(ends(0)), find(ends(1)))
+        if (a != b) parent(math.max(a, b)) = math.min(a, b)
+      }
+    }
+    val root = parent.keys.toSeq.map(v => v -> find(v))
+    val size = root.groupMapReduce(_._2)(_ => 1L)(_ + _)
+    val rows = root.map { case (v, r) => Row(v, r, size(r)) }
+    Some(p.sparkSession.createDataFrame(rows.asJava, schema))
+  }
 
   /** Plain-propagation round budget before [[clusters]] auto-switches to
     * the alternating-star variant: propagation converges in
@@ -1010,11 +1078,8 @@ object Dedup {
     * pairs, not the derivation). */
   val propagateRoundBudget = 10
 
-  private def clustersPropagate(pairs: DataFrame, maxRounds: Int): DataFrame = {
-    // persist the pair set BEFORE the symmetrizing union: both union arms
-    // reference it, and left lazy the (expensive) pair derivation would
-    // run once per arm
-    val p = graft.CacheRegistry.persistTracked(pairs)
+  /** Min-label propagation over the persisted pair frame `p`. */
+  private def clustersPropagate(p: DataFrame, maxRounds: Int): DataFrame = {
     val edges = graft.CacheRegistry.persistTracked(
       p.select(col("d1").as("v"), col("d2").as("u"))
         .union(p.select(col("d2").as("v"), col("d1").as("u"))))
@@ -1097,8 +1162,7 @@ object Dedup {
    * the propagation variant: (doc_id, cluster_id = min reachable id,
    * cluster_size).
    */
-  private def clustersStar(pairs: DataFrame, maxRounds: Int): DataFrame = {
-    val p = graft.CacheRegistry.persistTracked(pairs)
+  private def clustersStar(p: DataFrame, maxRounds: Int): DataFrame = {
     // every vertex the input mentions (self-pairs included) — re-joined at
     // the end so no degenerate input shape can drop a vertex
     val verts = graft.CacheRegistry.persistTracked(

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.BeforeAndAfterEach
@@ -32,6 +36,21 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterEach
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Number of Spark jobs `body` starts. The bus is drained before the
+    * listener is added (so no earlier job is counted) and again before
+    * the count is read (so none of `body`'s jobs is missed). */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
 
   /** Smallest driver-generated scale factor — fast enough for specs. */
   val sfDir = "/root/testdata/sf0.001"

@@ -87,8 +87,11 @@ class DedupSpec extends SparkSpecBase {
     // self-join then shuffles only the capped frame)
     assert(!capped.queryExecution.executedPlan.toString.contains("Window"),
       "simhash cap must not plan a Window")
+    // (budget 0: this input would otherwise finish on the driver as a
+    // LocalTableScan and the pin would test nothing)
     assert(!Dedup.clusters(Dedup.ngramJaccard(
-        (1L to 6L).map(i => (i, s"alpha beta gamma delta epsilon zeta $i")).toDF("doc_id", "text")))
+        (1L to 6L).map(i => (i, s"alpha beta gamma delta epsilon zeta $i")).toDF("doc_id", "text")),
+        50, alternatingStar = false, driverBudget = 0)
       .queryExecution.executedPlan.toString.contains("Window"),
       "cluster_size must not plan a Window")
   }

@@ -17,6 +17,10 @@ import org.apache.spark.sql.functions._
  *     (doc_id, cluster_id, cluster_size) relation on every shape —
  *     planted paths, mixed components, random graphs, degenerate
  *     self-pairs — so the parameter is a pure performance choice.
+ *
+ * Every call pins `driverBudget = 0`: these pair lists are small enough
+ * to finish on the driver, which would skip the rounds under test
+ * (ClusterFinishSpec covers the driver finish).
  */
 class StarClusterSpec extends SparkSpecBase {
   import spark.implicits._
@@ -31,7 +35,7 @@ class StarClusterSpec extends SparkSpecBase {
     val n = 200
     val budget = 2 * (math.log(n) / math.log(2)).ceil.toInt // 16
     val got = collectSet(
-      Dedup.clusters(pathPairs(n), maxRounds = budget, alternatingStar = true))
+      Dedup.clusters(pathPairs(n), maxRounds = budget, alternatingStar = true, driverBudget = 0))
     val want = (0 until n).map(i => (i.toLong, 0L, n.toLong)).toSet
     assert(got == want)
   }
@@ -44,13 +48,13 @@ class StarClusterSpec extends SparkSpecBase {
     // detect that and restart on the star contraction, with the exact
     // assignment.
     val n = 200
-    val got = collectSet(Dedup.clusters(pathPairs(n)))
+    val got = collectSet(Dedup.clusters(pathPairs(n), 50, alternatingStar = false, driverBudget = 0))
     assert(got == (0 until n).map(i => (i.toLong, 0L, n.toLong)).toSet)
   }
 
   test("explicit star on a 40-path inside a 10-round budget") {
     val pairs = pathPairs(40)
-    val got = collectSet(Dedup.clusters(pairs, maxRounds = 10, alternatingStar = true))
+    val got = collectSet(Dedup.clusters(pairs, maxRounds = 10, alternatingStar = true, driverBudget = 0))
     assert(got == (0 until 40).map(i => (i.toLong, 0L, 40L)).toSet)
   }
 
@@ -60,8 +64,8 @@ class StarClusterSpec extends SparkSpecBase {
       (10L, 11L),
       (20L, 21L), (20L, 22L), (20L, 23L)
     ).toDF("d1", "d2")
-    val plain = collectSet(Dedup.clusters(pairs))
-    val star = collectSet(Dedup.clusters(pairs, alternatingStar = true))
+    val plain = collectSet(Dedup.clusters(pairs, 50, alternatingStar = false, driverBudget = 0))
+    val star = collectSet(Dedup.clusters(pairs, 50, alternatingStar = true, driverBudget = 0))
     assert(star == plain && plain.nonEmpty)
   }
 
@@ -72,16 +76,16 @@ class StarClusterSpec extends SparkSpecBase {
       val ne = nv + rnd.nextInt(nv)
       val pairs = Seq.fill(ne)((rnd.nextInt(nv).toLong, rnd.nextInt(nv).toLong))
         .toDF("d1", "d2")
-      val plain = collectSet(Dedup.clusters(pairs, maxRounds = 200))
-      val star = collectSet(Dedup.clusters(pairs, maxRounds = 40, alternatingStar = true))
+      val plain = collectSet(Dedup.clusters(pairs, maxRounds = 200, alternatingStar = false, driverBudget = 0))
+      val star = collectSet(Dedup.clusters(pairs, maxRounds = 40, alternatingStar = true, driverBudget = 0))
       assert(star == plain, s"trial $trial: nv=$nv ne=$ne")
     }
   }
 
   test("degenerate self-pairs: both variants keep the vertex as its own singleton") {
     val pairs = Seq((7L, 7L), (9L, 9L)).toDF("d1", "d2")
-    val plain = collectSet(Dedup.clusters(pairs))
-    val star = collectSet(Dedup.clusters(pairs, alternatingStar = true))
+    val plain = collectSet(Dedup.clusters(pairs, 50, alternatingStar = false, driverBudget = 0))
+    val star = collectSet(Dedup.clusters(pairs, 50, alternatingStar = true, driverBudget = 0))
     assert(plain == Set((7L, 7L, 1L), (9L, 9L, 1L)))
     assert(star == plain)
   }
@@ -93,7 +97,7 @@ class StarClusterSpec extends SparkSpecBase {
       (3L, "the quick brown fox jumps over the lazy cat"),
       (4L, "completely different words in this one right here"))
       .toDF("doc_id", "text")
-    val out = Dedup.clusters(Dedup.ngramJaccard(docs), alternatingStar = true)
+    val out = Dedup.clusters(Dedup.ngramJaccard(docs), 50, alternatingStar = true, driverBudget = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
