@@ -613,23 +613,28 @@ object SparkEntry {
   /** SQL-text front door: a multiway join written as plain SQL, evaluated
     * with the [[graft.plans.SemijoinReduction]] optimizer rule on — any
     * SQL user gets Yannakakis reduction without touching the Rel/Cmp API.
-    * The rule runs here, while its conf is on, and the frame wraps the
-    * optimized plan: the reducers are part of the frame's own plan, so it
-    * and every frame derived from it keep them after the session conf is
-    * restored. (Falls back to Spark's stock plan, same results, when the
-    * GraftExtensions rule is not installed in the session.) */
-  def qSqlFrontend(s: SparkSession, d: String): DataFrame = {
-    Tables.edges(s, d).createOrReplaceTempView("graft_edges")
-    val key = graft.plans.SemijoinReduction.confKey
-    val before = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try GraftSqlBridge.dataFrame(s, s.sql(
+    * The frame lives in a clone of the caller's session with the rule on
+    * (kept while the caller's conf is unchanged: planning in a fresh
+    * session costs ~0.1 s), so every frame derived from it is optimized
+    * once, with the rule. Re-optimizing a reduced plan with the rule off
+    * lets column pruning split each shared repartition into per-read
+    * copies. Without GraftExtensions it runs Spark's stock plan. */
+  def qSqlFrontend(s: SparkSession, d: String): DataFrame = synchronized {
+    val conf = s.conf.getAll
+    if (!frontendSession.exists { case (c, cc, _) => (c eq s) && cc == conf }) {
+      val rs = GraftSqlBridge.cloneSession(s)
+      rs.conf.set(graft.plans.SemijoinReduction.confKey, "true")
+      frontendSession = Some((s, conf, rs))
+    }
+    val rs = frontendSession.get._3
+    Tables.edges(rs, d).createOrReplaceTempView("graft_edges")
+    rs.sql(
       """SELECT g1.src AS a, g1.dst AS b, g2.dst AS c, g3.dst AS e
         |FROM graft_edges g1, graft_edges g2, graft_edges g3
         |WHERE g1.dst = g2.src AND g2.dst = g3.src AND g3.dst < 5
-        |""".stripMargin).queryExecution.optimizedPlan)
-    finally before.fold(s.conf.unset(key))(s.conf.set(key, _))
+        |""".stripMargin)
   }
+  private var frontendSession: Option[(SparkSession, Map[String, String], SparkSession)] = None
 
   /** The reference's q1 as PURE SQL TEXT through [[graft.sql.CqcSql]] —
     * Spark's parser/analyzer feed the CQC pipeline (semijoin reduction +

@@ -64,23 +64,20 @@ object Agg {
 class CyclicQueryException(msg: String) extends RuntimeException(msg)
 
 /**
- * Join tree of an acyclic conjunctive query, found by GYO ear
- * decomposition (reference: sqlplus-core gyo/GyoAlgorithm.scala — ours is
- * a fresh implementation of the textbook algorithm, driver-side only and
- * O(edges^2 * vars), negligible vs. data volume).
+ * The shape of a rooted tree over named nodes: parent pointers, the two
+ * traversal orders, and the full reducer's semijoin schedule. GYO
+ * ([[Hypergraph.gyo]]) returns one over plain hyperedges; [[JoinTree]]
+ * attaches the relations.
  */
-final class JoinTree(
-    val rels: Map[String, Rel],
-    val root: String,
-    val parentOf: Map[String, String]) {
+class TreeShape(val root: String, val parentOf: Map[String, String]) {
 
-  /** The same (undirected) join tree re-rooted at `newRoot`: parent
-    * pointers along the path newRoot..root flip direction. Any node of a
-    * join tree can serve as root — the running-intersection property is
-    * undirected — so this is how a cost model picks WHERE enumeration
-    * starts without re-running GYO. */
-  def rerooted(newRoot: String): JoinTree = {
-    require(rels.contains(newRoot), s"unknown relation $newRoot")
+  /** The same (undirected) tree re-rooted at `newRoot`: parent pointers
+    * along the path newRoot..root flip direction. Any node of a join tree
+    * can serve as root — the running-intersection property is undirected
+    * — so this is how a cost model picks WHERE enumeration starts without
+    * re-running GYO. */
+  def rerooted(newRoot: String): TreeShape = {
+    require(newRoot == root || parentOf.contains(newRoot), s"unknown node $newRoot")
     if (newRoot == root) this
     else {
       // ancestors newRoot -> ... -> old root, then flip each edge on it
@@ -89,7 +86,7 @@ final class JoinTree(
       val flipped = scala.collection.mutable.Map[String, String]() ++ parentOf
       flipped -= newRoot
       for (i <- 0 until up.length - 1) flipped(up(i + 1)) = up(i)
-      new JoinTree(rels, newRoot, flipped.toMap)
+      new TreeShape(newRoot, flipped.toMap)
     }
   }
 
@@ -106,6 +103,33 @@ final class JoinTree(
     def walk(n: String): Unit = { buf += n; childrenOf(n).foreach(walk) }
     walk(root)
     buf.toSeq
+  }
+
+  /** The full reducer (the paper's pass 1, reference
+    * ImplicitConversions.scala:178) folded over per-node plans from
+    * `leaves`: 2(n-1) steps `target := semijoin(target, source,
+    * targetPlan, sourcePlan)` — bottom-up (parent ⋉ child), then top-down
+    * (child ⋉ parent). Generic in the plan type — DataFrames in
+    * [[Yannakakis.fullReduce]], logical plans in
+    * [[graft.plans.SemijoinReduction]]. */
+  def fullReduce[P](leaves: Map[String, P])(semijoin: (String, String, P, P) => P): Map[String, P] =
+    (bottomUp.flatMap(n => parentOf.get(n).map(p => p -> n)) ++ topDown.drop(1).map(n => n -> parentOf(n)))
+      .foldLeft(leaves) { case (m, (t, s)) => m.updated(t, semijoin(t, s, m(t), m(s))) }
+}
+
+/**
+ * Join tree of an acyclic conjunctive query: a [[TreeShape]] over the
+ * relations, found by GYO ear decomposition (reference: sqlplus-core
+ * gyo/GyoAlgorithm.scala — ours is a fresh implementation of the
+ * textbook algorithm, driver-side only and O(edges^2 * vars), negligible
+ * vs. data volume).
+ */
+final class JoinTree(val rels: Map[String, Rel], shape: TreeShape)
+    extends TreeShape(shape.root, shape.parentOf) {
+
+  override def rerooted(newRoot: String): JoinTree = {
+    require(rels.contains(newRoot), s"unknown relation $newRoot")
+    if (newRoot == root) this else new JoinTree(rels, super.rerooted(newRoot))
   }
 
   def sharedVars(a: String, b: String): Seq[String] =
@@ -157,35 +181,81 @@ object Hypergraph {
       try r.df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) })
 
+  /** A hyperedge as GYO sees it: a name, its variables, and its
+    * estimated size in bytes (the cost pick's only input). */
+  final case class Hyperedge[V](name: String, vars: Set[V], bytes: BigInt)
+
+  private def hyperedges(rels: Seq[Rel]): Seq[Hyperedge[String]] =
+    rels.map(r => Hyperedge(r.name, r.vars, estSize(r)))
+
   /**
-   * GYO reduction → join tree, COST-PICKED among the valid candidates
-   * (reference: gyo/GyoAlgorithm.scala feeding a costed candidate pick):
+   * The one GYO reduction → join tree, COST-PICKED among the valid
+   * candidates (reference: gyo/GyoAlgorithm.scala feeding a costed
+   * candidate pick):
    *  - each round absorbs the SMALLEST available ear, so small relations
    *    sit deep in the tree and semijoin filters flow outward from them;
    *  - among witnesses of that ear, prefer the largest shared-variable
    *    overlap (strongest semijoin), tie-broken by smaller size, then
    *    name (determinism);
-   *  - the finished tree is re-rooted at the LARGEST relation: the big
+   *  - the finished tree is re-rooted at the LARGEST hyperedge: the big
    *    side is reduced by every child before enumeration ever widens it,
    *    and the accumulated intermediate joins against small reduced
    *    children (AQE broadcasts them) instead of meeting the big
    *    relation last.
    * Tree choice never changes results (join trees of an acyclic query
    * are result-equivalent — spec-verified); it changes shuffle payloads.
-   * Throws CyclicQueryException when not alpha-acyclic (cyclic queries
-   * go through [[graft.wcoj]] / GHD instead).
+   * Right(tree) when alpha-acyclic, else Left(the names of the
+   * hyperedges left un-absorbed — the cyclic core). Plain hyperedges, so
+   * the DataFrame door ([[joinTree]]) and the Catalyst rule
+   * ([[graft.plans.SemijoinReduction]]) plan through the same code.
    */
-  def joinTree(rels: Seq[Rel]): JoinTree = {
-    val (parent, alive) = gyo(rels)
-    if (alive.size > 1)
+  def gyo[V](edges: Seq[Hyperedge[V]]): Either[Seq[String], TreeShape] = {
+    require(edges.map(_.name).distinct.size == edges.size, "relation names must be unique")
+    val byName = edges.map(e => e.name -> e).toMap
+    var alive = scala.collection.immutable.ListMap(edges.map(e => e.name -> e.vars): _*)
+    val parent = scala.collection.mutable.Map[String, String]()
+
+    var progress = true
+    while (alive.size > 1 && progress) {
+      progress = false
+      val candidates = alive.iterator.flatMap { case (e, vs) =>
+        val others = alive - e
+        val isolated = vs.filter(v => !others.valuesIterator.exists(_.contains(v)))
+        val rest = vs -- isolated
+        // an "ear": its non-isolated vars are covered by a single witness;
+        // collect every witness and keep the best one for this ear
+        val witnesses = others.collect { case (w, wvs) if rest.subsetOf(wvs) => w }
+        if (witnesses.isEmpty) None
+        else {
+          val w = witnesses.minBy(w =>
+            (-(vs intersect byName(w).vars).size, byName(w).bytes, w))
+          Some((e, w))
+        }
+      }.toSeq
+      if (candidates.nonEmpty) {
+        val (ear, witness) = candidates.minBy { case (e, _) => (byName(e).bytes, e) }
+        parent(ear) = witness
+        alive -= ear
+        progress = true
+      }
+    }
+    if (alive.size > 1) Left(alive.keys.toSeq)
+    else Right(new TreeShape(alive.head._1, parent.toMap)
+      .rerooted(edges.maxBy(e => (e.bytes, e.name)).name))
+  }
+
+  /** [[gyo]] over relations (variables are column names): the cost-picked
+    * tree, or — while a [[withRootHint]] is active on this thread — the
+    * same tree rooted at the hinted relation. Throws
+    * CyclicQueryException when not alpha-acyclic (cyclic queries go
+    * through [[graft.wcoj]] / GHD instead). */
+  def joinTree(rels: Seq[Rel]): JoinTree = gyo(hyperedges(rels)) match {
+    case Left(core) =>
       throw new CyclicQueryException(
-        s"query is cyclic; remaining hyperedges: ${alive.keys.mkString(", ")}")
-    val byName = rels.map(r => r.name -> r).toMap
-    val size: Map[String, BigInt] = rels.map(r => r.name -> estSize(r)).toMap
-    val tree = new JoinTree(byName, alive.head._1, parent)
-    val pick = Option(rootHintTL.get).filter(byName.contains)
-      .getOrElse(rels.maxBy(r => (size(r.name), r.name)).name)
-    tree.rerooted(pick)
+        s"query is cyclic; remaining hyperedges: ${core.mkString(", ")}")
+    case Right(shape) =>
+      val byName = rels.map(r => r.name -> r).toMap
+      new JoinTree(byName, activeRootHint.filter(byName.contains).fold(shape)(shape.rerooted))
   }
 
   /** Candidate-pick surface for callers that cannot pass a [[JoinTree]]
@@ -206,58 +276,22 @@ object Hypergraph {
 
   /** Every valid join tree the cost model chooses among: the GYO tree
     * rerooted at each relation (rerooting preserves the running-
-    * intersection property, so all are result-equivalent — spec-verified).
-    * The HINT surface: inspect with [[JoinTree.describe]], then pin one
-    * via [[Yannakakis.solveWithTree]] (reference convert/
-    * HintHandler.scala:9 pins user-chosen join trees the same way). */
-  def candidateTrees(rels: Seq[Rel]): Seq[JoinTree] = {
-    val t = joinTree(rels)
-    rels.map(r => t.rerooted(r.name))
+    * intersection property, so all are result-equivalent — spec-verified);
+    * empty when the relations are cyclic. The HINT surface: inspect with
+    * [[JoinTree.describe]], then pin one via [[Yannakakis.solveWithTree]]
+    * (reference convert/HintHandler.scala:9 pins user-chosen join trees
+    * the same way). */
+  def candidateTrees(rels: Seq[Rel]): Seq[JoinTree] = gyo(hyperedges(rels)) match {
+    case Left(_) => Seq.empty
+    case Right(shape) =>
+      val byName = rels.map(r => r.name -> r).toMap
+      rels.map(r => new JoinTree(byName, shape.rerooted(r.name)))
   }
 
   /** Names of the hyperedges left un-absorbed when GYO stalls — the
     * cyclic core of the query (empty when alpha-acyclic). [[graft.wcoj.Ghd]]
     * evaluates exactly this set worst-case-optimally as one bag. */
-  def cyclicCore(rels: Seq[Rel]): Seq[String] = {
-    val (_, alive) = gyo(rels)
-    if (alive.size > 1) alive.keys.toSeq else Seq.empty
-  }
+  def cyclicCore(rels: Seq[Rel]): Seq[String] = gyo(hyperedges(rels)).left.getOrElse(Seq.empty)
 
-  /** Shared GYO ear-absorption loop: returns (parent pointers, residual). */
-  private def gyo(rels: Seq[Rel]): (Map[String, String], scala.collection.immutable.ListMap[String, Set[String]]) = {
-    require(rels.map(_.name).distinct.size == rels.size, "relation names must be unique")
-    val byName = rels.map(r => r.name -> r).toMap
-    val size: Map[String, BigInt] = rels.map(r => r.name -> estSize(r)).toMap
-    var alive = scala.collection.immutable.ListMap(rels.map(r => r.name -> r.vars): _*)
-    val parent = scala.collection.mutable.Map[String, String]()
-
-    var progress = true
-    while (alive.size > 1 && progress) {
-      progress = false
-      val candidates = alive.iterator.flatMap { case (e, vs) =>
-        val others = alive - e
-        val isolated = vs.filter(v => !others.valuesIterator.exists(_.contains(v)))
-        val rest = vs -- isolated
-        // an "ear": its non-isolated vars are covered by a single witness;
-        // collect every witness and keep the best one for this ear
-        val witnesses = others.collect { case (w, wvs) if rest.subsetOf(wvs) => w }
-        if (witnesses.isEmpty) None
-        else {
-          val w = witnesses.minBy(w =>
-            (-(byName(e).vars intersect byName(w).vars).size, size(w), w))
-          Some((e, w))
-        }
-      }.toSeq
-      if (candidates.nonEmpty) {
-        val (ear, witness) = candidates.minBy { case (e, _) => (size(e), e) }
-        parent(ear) = witness
-        alive -= ear
-        progress = true
-      }
-    }
-    (parent.toMap, alive)
-  }
-
-  def isAcyclic(rels: Seq[Rel]): Boolean =
-    try { joinTree(rels); true } catch { case _: CyclicQueryException => false }
+  def isAcyclic(rels: Seq[Rel]): Boolean = gyo(hyperedges(rels)).isRight
 }

@@ -93,41 +93,30 @@ object Yannakakis {
     else df
   }
 
-  /** Reducer policy for the message pass ([[aggOverJoin]]): the same
-    * cost gate as enumeration, for every aggregate kind. Correctness
-    * does not need the reducer there — every child message joins its
-    * parent INNER (per key), and the root only keeps rows matched by a
-    * message from every child subtree, so dangling rows drop out of the
-    * weights and the extrema on their own; reduction just prunes them
-    * earlier. */
+  /** Reducer policy for enumeration ([[solveWithTree]]) and the message
+    * pass ([[aggOverJoin]]): the direct-route cost gate, for every
+    * aggregate kind. Correctness does not need the reducer in the message
+    * pass — every child message joins its parent INNER (per key), and the
+    * root only keeps rows matched by a message from every child subtree,
+    * so dangling rows drop out of the weights and the extrema on their
+    * own; reduction just prunes them earlier. */
   private def reducedForMessages(tree: JoinTree): Map[String, DataFrame] =
     if (routesDirect(tree.rels.values.toSeq))
       tree.rels.map { case (n, r) => n -> cacheDerivedLeaf(r.df) }.toMap
     else fullReduce(tree)
 
   /**
-   * Remove all dangling tuples: bottom-up then top-down semijoin passes
-   * (the classic full reducer). Returns the reduced DataFrame per relation.
+   * Remove all dangling tuples: the tree's semijoin schedule
+   * ([[TreeShape.fullReduce]]) folded with `left_semi` joins (the classic
+   * full reducer). Returns the reduced DataFrame per relation.
    */
-  def fullReduce(tree: JoinTree): Map[String, DataFrame] = {
-    val reduced = scala.collection.mutable.Map[String, DataFrame]()
-    tree.rels.foreach { case (n, r) => reduced(n) = cacheDerivedLeaf(r.df) }
-
-    // bottom-up: parent := parent ⋉ child
-    for (n <- tree.bottomUp; p <- tree.parentOf.get(n)) {
-      val shared = tree.sharedVars(n, p)
-      if (shared.nonEmpty)
-        reduced(p) = reduced(p).join(reduced(n).select(shared.map(col): _*), shared, "left_semi")
+  def fullReduce(tree: JoinTree): Map[String, DataFrame] =
+    tree.fullReduce(tree.rels.map { case (n, r) => n -> cacheDerivedLeaf(r.df) }) {
+      (t, s, target, source) =>
+        val shared = tree.sharedVars(t, s)
+        if (shared.isEmpty) target
+        else target.join(source.select(shared.map(col): _*), shared, "left_semi")
     }
-    // top-down: child := child ⋉ parent
-    for (n <- tree.topDown.drop(1)) {
-      val p = tree.parentOf(n)
-      val shared = tree.sharedVars(n, p)
-      if (shared.nonEmpty)
-        reduced(n) = reduced(n).join(reduced(p).select(shared.map(col): _*), shared, "left_semi")
-    }
-    reduced.toMap
-  }
 
   /**
    * Evaluate the natural join of `rels` (+ comparison predicates) with
@@ -187,12 +176,7 @@ object Yannakakis {
     // FASTER with the reducer — the default threshold sits between the
     // two measured regimes, and anything cluster-scale is far above it.
     val direct = routesDirect(tree.rels.values.toSeq)
-    val reduced: scala.collection.mutable.Map[String, DataFrame] =
-      if (direct) {
-        val m = scala.collection.mutable.Map[String, DataFrame]()
-        tree.rels.foreach { case (n, r) => m(n) = cacheDerivedLeaf(r.df) }
-        m
-      } else scala.collection.mutable.Map[String, DataFrame]() ++ fullReduce(tree)
+    val reduced = scala.collection.mutable.Map[String, DataFrame]() ++ reducedForMessages(tree)
 
     // Comparison-bound annotation: for `x op y` with x computed over rel A
     // and y computed over rel B (A != B), propagate the best bound of the

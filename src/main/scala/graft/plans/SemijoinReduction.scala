@@ -1,11 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationDef, CTERelationRef, Join, JoinHint, LogicalPlan, Project, WithCTE}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.internal.SQLConf
+
+import graft.cqc.Hypergraph
 
 /**
  * Catalyst optimizer rule: Yannakakis semijoin reduction for multiway
@@ -15,10 +17,15 @@ import org.apache.spark.sql.internal.SQLConf
  * `spark.sql(...)` text benefits without a separate front-end).
  *
  * For every maximal cluster of inner joins over >= 3 base relations
- * whose equality conditions form an alpha-acyclic hypergraph (GYO test
- * on the attribute-equivalence classes), the rule replaces each base
- * relation with its fully-reduced form: a bottom-up then top-down pass
- * of `LEFT SEMI` joins along the GYO join tree. Inner-join results are
+ * whose equality conditions form a connected alpha-acyclic hypergraph
+ * (on the attribute-equivalence classes), the rule replaces each base
+ * relation with its fully-reduced form. It plans through the CQC
+ * planner the DataFrame door uses: [[Hypergraph.gyo]]'s cost-picked join
+ * tree (leaf sizes from the plan's own statistics, so no job runs) and
+ * the tree's 2(n-1)-step semijoin schedule, folded here with `LEFT SEMI`
+ * joins. Each reduced relation is defined once: one read more than once
+ * becomes a `CTERelationDef`, every read a `CTERelationRef` (Spark plans
+ * a multi-read def as one shared exchange). Inner-join results are
  * unchanged (a semijoin only removes rows that cannot join), but
  * dangling tuples die in map-side-combinable semijoins BEFORE the
  * expensive shuffle joins — the Yannakakis guarantee, now applied by the
@@ -28,7 +35,7 @@ import org.apache.spark.sql.internal.SQLConf
  * inputs, not on PK-FK star joins); enable per session or per statement:
  *   spark.conf.set("spark.graft.semijoinReduction", "true")
  */
-object SemijoinReduction extends Rule[LogicalPlan] {
+object SemijoinReduction extends Rule[LogicalPlan] with PredicateHelper {
 
   val confKey = "spark.graft.semijoinReduction"
 
@@ -43,9 +50,7 @@ object SemijoinReduction extends Rule[LogicalPlan] {
   private def rewrite(plan: LogicalPlan): LogicalPlan = plan match {
     case j @ Join(_, _, Inner, _, _) if j.getTagValue(reducedTag).isEmpty =>
       val (leaves, conds) = flatten(j)
-      val rebuilt = reduceCluster(j, leaves, conds)
-      rebuilt.foreach(_.setTagValue(reducedTag, true))
-      rebuilt.getOrElse(j.mapChildren(rewrite))
+      reduceCluster(j, leaves, conds).getOrElse(j.mapChildren(rewrite))
     case other => other.mapChildren(rewrite)
   }
 
@@ -62,27 +67,25 @@ object SemijoinReduction extends Rule[LogicalPlan] {
       case Join(l, r, Inner, cond, _) =>
         val (ll, lc) = flatten(l)
         val (rl, rc) = flatten(r)
-        (ll ++ rl, lc ++ rc ++ cond.toSeq.flatMap(splitConjuncts))
+        (ll ++ rl, lc ++ rc ++ cond.toSeq.flatMap(splitConjunctivePredicates))
       case p @ Project(_, child) if isPrune(p) => flatten(child)
       case leaf => (Seq(leaf), Nil)
     }
 
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
-  }
-
   /**
    * Attempt the reduction; None when the cluster is not eligible
-   * (fewer than 3 leaves, cyclic, or no usable equalities).
+   * (fewer than 3 leaves, cyclic, or not connected by equalities).
    */
   private def reduceCluster(
       root: Join,
       leaves: Seq[LogicalPlan],
       conds: Seq[Expression]): Option[LogicalPlan] = {
-    if (leaves.size < 3) return None
-    // leaves already produced by this rule => converged
-    if (leaves.forall(_.isInstanceOf[Join])) return None
+    // leaves already produced by this rule (semijoins, shared reads) =>
+    // converged
+    if (leaves.size < 3 || leaves.forall {
+      case Join(_, _, LeftSemi, _, _) | _: CTERelationRef => true
+      case _ => false
+    }) return None
 
     // attribute-equivalence classes from the equality conditions, keyed by
     // ExprId (condition references and leaf outputs can differ in
@@ -92,48 +95,37 @@ object SemijoinReduction extends Rule[LogicalPlan] {
       val p = parent.getOrElse(id, id)
       if (p == id) id else { val r = find(p); parent(id) = r; r }
     }
-    def union(a: Long, b: Long): Unit = parent(find(a)) = find(b)
-    val equalities = conds.collect {
-      case EqualTo(a: Attribute, b: Attribute) => (a.exprId.id, b.exprId.id)
+    conds.foreach {
+      case EqualTo(a: Attribute, b: Attribute) => parent(find(a.exprId.id)) = find(b.exprId.id)
+      case _ =>
     }
-    if (equalities.isEmpty) return None
-    equalities.foreach { case (a, b) => union(a, b) }
+    val vars = leaves.map(_.output.map(a => find(a.exprId.id)).toSet)
+    def shared(a: String, b: String): Seq[Long] =
+      (vars(a.toInt) intersect vars(b.toInt)).toSeq.sorted
+    val edges = leaves.indices.map(i =>
+      Hypergraph.Hyperedge(i.toString, vars(i), leaves(i).stats.sizeInBytes))
 
-    // per-leaf variable sets (class representatives of its output attrs)
-    val leafVars: Seq[Set[Long]] = leaves.map(_.output.map(a => find(a.exprId.id)).toSet)
-    val shared = leafVars.zipWithIndex.flatMap { case (vs, i) =>
-      vs.filter(v => leafVars.zipWithIndex.exists { case (o, j) => j != i && o(v) })
-    }.toSet
-    val hyperedges = leafVars.map(_.intersect(shared))
-    if (hyperedges.exists(_.isEmpty)) return None // cross-join component
-
-    joinTree(hyperedges) match {
-      case None => None // cyclic — leave to Spark's planner (or Ghd API)
-      case Some(parentOf) =>
-        // var class -> the leaf attribute of a given leaf
-        def attrFor(leaf: Int, v: Long): Attribute =
-          leaves(leaf).output.find(a => find(a.exprId.id) == v).get
-        def semiCond(a: Int, b: Int): Expression = {
-          val vs = (hyperedges(a) intersect hyperedges(b)).toSeq.sorted
-          vs.map(v => EqualTo(attrFor(a, v), attrFor(b, v)): Expression)
-            .reduce(And)
+    Hypergraph.gyo(edges) match {
+      case Left(_) => None // cyclic — leave to Spark's planner (or Ghd API)
+      case Right(tree) if tree.parentOf.exists { case (c, p) => shared(c, p).isEmpty } =>
+        None // a cross-join component
+      case Right(tree) =>
+        // var class -> the leaf attribute of a given leaf (a reduced leaf
+        // keeps its base relation's output)
+        def attrs(leaf: String, vs: Seq[Long]): Seq[Attribute] =
+          vs.map(v => leaves(leaf.toInt).output.find(a => find(a.exprId.id) == v).get)
+        val defs = scala.collection.mutable.LinkedHashMap[Long, CTERelationDef]()
+        val reduced = tree.fullReduce(leaves.indices.map(i => i.toString -> leaves(i)).toMap) {
+          (t, s, target, source) =>
+            val vs = shared(t, s)
+            val cond = attrs(t, vs).zip(attrs(s, vs)).map { case (a, b) => EqualTo(a, b): Expression }
+            // the right side only needs the join attributes — prune the
+            // shuffle payload to the shared variables
+            val d = CTERelationDef(Join(target, Project(attrs(s, vs), source), LeftSemi,
+              Some(cond.reduce(And)), JoinHint.NONE))
+            defs(d.id) = d
+            CTERelationRef(d.id, _resolved = true, d.output, d.isStreaming)
         }
-        // right side of a semijoin only needs the join attributes — prune
-        // the shuffle payload to the shared variables
-        def semiRight(of: Int, withLeaf: Int, plan: LogicalPlan): LogicalPlan = {
-          val vs = (hyperedges(of) intersect hyperedges(withLeaf)).toSeq.sorted
-          Project(vs.map(v => attrFor(withLeaf, v)), plan)
-        }
-        val reduced = scala.collection.mutable.Map[Int, LogicalPlan]() ++
-          leaves.indices.map(i => i -> leaves(i)).toMap
-        val order = topoOrder(parentOf, leaves.size)
-        // bottom-up: parent ⋉ child, then top-down: child ⋉ parent
-        for (n <- order.reverse; p <- parentOf.get(n))
-          reduced(p) = Join(reduced(p), semiRight(p, n, reduced(n)), LeftSemi,
-            Some(semiCond(p, n)), JoinHint.NONE)
-        for (n <- order; p <- parentOf.get(n))
-          reduced(n) = Join(reduced(n), semiRight(n, p, reduced(p)), LeftSemi,
-            Some(semiCond(n, p)), JoinHint.NONE)
 
         // rebuild the original join structure over the reduced leaves
         val it = leaves.indices.iterator
@@ -142,42 +134,22 @@ object SemijoinReduction extends Rule[LogicalPlan] {
             j.copy(left = rebuild(l), right = rebuild(r))
           case p @ Project(_, child) if isPrune(p) =>
             p.copy(child = rebuild(child))
-          case _ => reduced(it.next())
+          case _ => reduced(it.next().toString)
         }
-        Some(rebuild(root))
-    }
-  }
+        val body = rebuild(root)
 
-  /** GYO ear decomposition on the leaf hypergraph: Some(parentOf) when
-    * alpha-acyclic. Driver-side, O(n^2 * vars) on a handful of leaves. */
-  private def joinTree(hyperedges: Seq[Set[Long]]): Option[Map[Int, Int]] = {
-    var alive = hyperedges.indices.toList
-    val parentOf = scala.collection.mutable.Map[Int, Int]()
-    var progress = true
-    while (alive.size > 1 && progress) {
-      progress = false
-      val ear = alive.iterator.flatMap { e =>
-        val others = alive.filter(_ != e)
-        val rest = hyperedges(e).filter(v => others.exists(o => hyperedges(o)(v)))
-        others.find(w => rest.subsetOf(hyperedges(w))).map(w => (e, w))
-      }.nextOption()
-      ear.foreach { case (e, w) =>
-        parentOf(e) = w
-        alive = alive.filter(_ != e)
-        progress = true
-      }
+        // every reduced relation read once is inlined at its read; the
+        // rest stay defined once, in dependency (creation) order
+        val reads = (body +: defs.values.toSeq)
+          .flatMap(_.collect { case r: CTERelationRef if defs.contains(r.cteId) => r.cteId })
+          .groupBy(identity).map { case (id, rs) => id -> rs.size }
+        def inline(p: LogicalPlan): LogicalPlan = p.transformUp {
+          case r: CTERelationRef if reads.get(r.cteId).contains(1) => inline(defs(r.cteId).child)
+        }
+        val kept = defs.values.filter(d => reads(d.id) > 1).map(d => d.copy(child = inline(d.child)))
+        val out = inline(body)
+        out.setTagValue(reducedTag, true)
+        Some(WithCTE(out, kept.toSeq))
     }
-    if (alive.size > 1) None else Some(parentOf.toMap)
-  }
-
-  /** Root-first order implied by parentOf. */
-  private def topoOrder(parentOf: Map[Int, Int], n: Int): Seq[Int] = {
-    val children = parentOf.toSeq.groupBy(_._2).map { case (p, ks) => p -> ks.map(_._1) }
-      .withDefaultValue(Nil)
-    val root = (0 until n).find(!parentOf.contains(_)).get
-    val buf = scala.collection.mutable.ArrayBuffer[Int]()
-    def walk(x: Int): Unit = { buf += x; children(x).foreach(walk) }
-    walk(root)
-    buf.toSeq
   }
 }

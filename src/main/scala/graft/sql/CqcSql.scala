@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{functions, Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, BinaryComparison, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BinaryComparison, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.expressions.{Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -44,7 +44,7 @@ import graft.wcoj.Ghd
  * evaluation of the whole subtree — always correct, just not
  * CQC-accelerated.
  */
-object CqcSql {
+object CqcSql extends PredicateHelper {
 
   /** Signals a window frame the Column DSL cannot reproduce — callers
     * fall back to stock evaluation of the whole query. */
@@ -280,7 +280,7 @@ object CqcSql {
     * Reference: sqlplus-web's candidate list feeding its tree pick. */
   def candidates(spark: SparkSession, sql: String): Seq[(String, String)] = {
     val rels = relations(spark, sql)
-    if (rels.size < 2 || !graft.cqc.Hypergraph.isAcyclic(rels)) Seq.empty
+    if (rels.size < 2) Seq.empty
     else graft.cqc.Hypergraph.candidateTrees(rels).map(t => t.root -> t.describe)
   }
 
@@ -592,9 +592,9 @@ object CqcSql {
       // strip helper columns last
       val (rollupProj, rollupConds, aggOpt) = afterDistinct match {
         case Project(pl, Filter(cond, agg @ Aggregate(_, _, exp: LExpand, _))) =>
-          (Some(pl), splitConjuncts(cond), Some((agg, exp)))
+          (Some(pl), splitConjunctivePredicates(cond), Some((agg, exp)))
         case Filter(cond, agg @ Aggregate(_, _, exp: LExpand, _)) =>
-          (None, splitConjuncts(cond), Some((agg, exp)))
+          (None, splitConjunctivePredicates(cond), Some((agg, exp)))
         case agg @ Aggregate(_, _, exp: LExpand, _) =>
           (None, Seq.empty[Expression], Some((agg, exp)))
         case _ => (None, Seq.empty[Expression], None)
@@ -632,9 +632,9 @@ object CqcSql {
       // HAVING on a non-selected aggregate: the analyzer widens the
       // Aggregate with a helper column and strips it with a Project
       case Project(pl, Filter(cond, Aggregate(ge, ae, child, _))) =>
-        (Some(pl), splitConjuncts(cond), Some((ge, ae)), child)
+        (Some(pl), splitConjunctivePredicates(cond), Some((ge, ae)), child)
       case Filter(cond, Aggregate(ge, ae, child, _)) =>
-        (None, splitConjuncts(cond), Some((ge, ae)), child)
+        (None, splitConjunctivePredicates(cond), Some((ge, ae)), child)
       case Aggregate(ge, ae, child, _) =>
         (None, Seq.empty[Expression], Some((ge, ae)), child)
       case other =>
@@ -706,7 +706,7 @@ object CqcSql {
     }
 
     val (topConjuncts, joinRoot) = afterWindow match {
-      case Filter(cond, child) => (splitConjuncts(cond), child)
+      case Filter(cond, child) => (splitConjunctivePredicates(cond), child)
       case other => (Nil, other)
     }
 
@@ -769,7 +769,7 @@ object CqcSql {
     val joinConds = scala.collection.mutable.ArrayBuffer[Expression]()
     def flatten(p: LogicalPlan): Unit = p match {
       case Join(l, r, Inner, cond, _) =>
-        flatten(l); flatten(r); cond.foreach(c => joinConds ++= splitConjuncts(c))
+        flatten(l); flatten(r); cond.foreach(c => joinConds ++= splitConjunctivePredicates(c))
       case SubqueryAlias(_, child) => flatten(child)
       case leaf => leaves += leaf
     }
@@ -1298,7 +1298,7 @@ object CqcSql {
         val ids = rplan.output.map(_.exprId.id).toSet
         val kp = scala.collection.mutable.ArrayBuffer[(String, String)]()
         val fs = scala.collection.mutable.ArrayBuffer[Expression]()
-        condOpt.map(splitConjuncts).getOrElse(Nil).foreach {
+        condOpt.map(splitConjunctivePredicates).getOrElse(Nil).foreach {
           case EqualTo(a: AttributeReference, b: AttributeReference)
               if ids.contains(b.exprId.id) && !allOuterIds.contains(a.exprId.id) =>
             kp += ((varName(a.exprId.id), outerNames(b.exprId.id)))
@@ -2255,10 +2255,5 @@ object CqcSql {
       GraftSqlBridge.column(e2).as(ne.name)
     }
     Some(combined.select(outCols: _*))
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
   }
 }

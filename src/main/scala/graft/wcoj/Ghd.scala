@@ -40,9 +40,9 @@ object Ghd {
   def decompose(rels: Seq[Rel]): Seq[Rel] = {
     var current = rels.toVector
     var guard = 0
-    while (!Hypergraph.isAcyclic(current) && guard < 2 * rels.size + 2) {
+    var core = Hypergraph.cyclicCore(current).toSet
+    while (core.nonEmpty && guard < 2 * rels.size + 2) {
       guard += 1
-      val core = Hypergraph.cyclicCore(current).toSet
       val coreRels = current.filter(r => core.contains(r.name))
       val coreVars = coreRels.flatMap(_.vars).distinct.sorted
       val integralBinary = coreRels.forall { r =>
@@ -84,6 +84,7 @@ object Ghd {
         val bag = Rel(s"${a.name}+${b.name}", a.df.join(b.df, keys, "inner"))
         current = current.patch(j, Nil, 1).patch(i, Seq(bag), 1)
       }
+      core = Hypergraph.cyclicCore(current).toSet
     }
     current
   }

@@ -229,7 +229,7 @@ final class GraftServer(spark: SparkSession, port: Int = 0) {
       } yield s"""{"left":${jstr(c.left)},"op":${jstr(c.op)},"right":${jstr(c.right)},"from":${jstr(from.name)},"to":${jstr(to.name)}}"""
     }.mkString("[", ",", "]")
     val cands =
-      if (rels.size < 2 || !graft.cqc.Hypergraph.isAcyclic(rels)) "[]"
+      if (rels.size < 2) "[]"
       else graft.cqc.Hypergraph.candidateTrees(rels).map { t =>
         val edges = t.topDown.drop(1).map { n =>
           val p = t.parentOf(n)

@@ -5,7 +5,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,6 +57,31 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterEach
     finally sc.removeSparkListener(listener)
   }
 
+  /** Structural census of a physical plan: parquet scans, LeftSemi
+    * joins, shuffle and broadcast exchanges, and reused exchanges. It
+    * descends into adaptive plans and query stages (`collect`), and not
+    * into a reused exchange, so what runs once counts once. Pass the plan
+    * of a frame that has run: an adaptive plan shows its initial form,
+    * with no reuse yet, until then. */
+  def planCensus(plan: SparkPlan): PlanCensus = {
+    val nodes = collect(plan) { case p => p }
+    PlanCensus(
+      scans = nodes.count {
+        case f: FileSourceScanExec => f.relation.fileFormat.isInstanceOf[ParquetFileFormat]
+        case _ => false
+      },
+      semijoins = nodes.count {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      },
+      shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
+      broadcasts = nodes.count(_.isInstanceOf[BroadcastExchangeExec]),
+      reused = nodes.count(_.isInstanceOf[ReusedExchangeExec]))
+  }
+
   /** Smallest driver-generated scale factor — fast enough for specs. */
   val sfDir = "/root/testdata/sf0.001"
 }
+
+/** Node counts of one physical plan; see [[SparkSpecBase.planCensus]]. */
+case class PlanCensus(scans: Int, semijoins: Int, shuffles: Int, broadcasts: Int, reused: Int)
