@@ -249,14 +249,18 @@ object Hypergraph {
     * same tree rooted at the hinted relation. Throws
     * CyclicQueryException when not alpha-acyclic (cyclic queries go
     * through [[graft.wcoj]] / GHD instead). */
-  def joinTree(rels: Seq[Rel]): JoinTree = gyo(hyperedges(rels)) match {
-    case Left(core) =>
-      throw new CyclicQueryException(
-        s"query is cyclic; remaining hyperedges: ${core.mkString(", ")}")
-    case Right(shape) =>
+  def joinTree(rels: Seq[Rel]): JoinTree = tryJoinTree(rels).fold(core =>
+    throw new CyclicQueryException(
+      s"query is cyclic; remaining hyperedges: ${core.mkString(", ")}"), identity)
+
+  /** [[joinTree]], or Left(the cyclic core) when not alpha-acyclic: ONE
+    * GYO run for callers that branch on acyclicity and then use the
+    * tree (the dry-run surfaces). */
+  def tryJoinTree(rels: Seq[Rel]): Either[Seq[String], JoinTree] =
+    gyo(hyperedges(rels)).map { shape =>
       val byName = rels.map(r => r.name -> r).toMap
       new JoinTree(byName, activeRootHint.filter(byName.contains).fold(shape)(shape.rerooted))
-  }
+    }
 
   /** Candidate-pick surface for callers that cannot pass a [[JoinTree]]
     * (the SQL door / web API): while `f` runs on this thread, [[joinTree]]

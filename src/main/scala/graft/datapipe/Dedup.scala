@@ -2,8 +2,9 @@ package graft.datapipe
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import TextOps.{h60, h60Sql, words}
@@ -162,14 +163,35 @@ object Dedup {
   val ngramTau = 0.10
 
   /**
-   * Exact n-gram Jaccard near-dup via inverted index: self-join the
-   * (doc, shingle) list on shingle (capped at [[ngramDfCap]] docs per
-   * shingle to bound fanout at cap^2 per shingle), count shared shingles
-   * per pair DIRECTLY off that join (one pass — no candidate set and
-   * re-verify), emit pairs with Jaccard >= [[ngramTau]]. Jaccard is
-   * computed over the capped shingle sets on both engines.
+   * Exact n-gram Jaccard near-dup via inverted index: per pair of docs
+   * (d1 < d2), count the shingles they share among those in at most
+   * [[ngramDfCap]] docs (the cap bounds fanout at cap^2 per shingle),
+   * and emit the pairs with Jaccard >= [[ngramTau]]. Jaccard is computed
+   * over the capped shingle sets on both engines.
+   *
+   * ONE job collects at most [[driverPairBudget]] + 1 `(doc_id, sh)`
+   * postings (the per-doc shingle sets, exploded: no shuffle, no
+   * persist). If they fit, the pairs are counted on the driver and the
+   * result is a local frame. Over the budget, the distributed plan
+   * self-joins the capped postings on shingle and counts shared
+   * shingles per pair directly off that join. Both finishes end in the
+   * same Spark division, threshold and `round`.
    */
-  def ngramJaccard(docs: DataFrame): DataFrame = {
+  def ngramJaccard(docs: DataFrame): DataFrame = ngramJaccard(docs, driverPairBudget)
+
+  /** [[ngramJaccard]] with the driver-finish budget explicit: a budget
+    * of 0 always runs the distributed plan. */
+  private[datapipe] def ngramJaccard(docs: DataFrame, driverBudget: Int): DataFrame =
+    ngramCountsOnDriver(docs, driverBudget).getOrElse(ngramCounts(docs))
+      .withColumn("jac", col("shared") / (col("sz1") + col("sz2") - col("shared")))
+      .where(col("jac") >= ngramTau)
+      .select(col("d1"), col("d2"), round(col("jac"), 6).as("jac"))
+
+  /** The distributed `(d1, d2, shared, sz1, sz2)` counts: self-join the
+    * capped postings on shingle and count the shared shingles per pair
+    * directly off that join (one pass — no candidate set and re-verify),
+    * with both docs' capped set sizes. */
+  private def ngramCounts(docs: DataFrame): DataFrame = {
     // the shingle explode feeds both the df-cap aggregate and the capped
     // join below — persist it or the explode runs twice (tracked).
     // Spread ahead of the pin (r18): a pin over a single-task scan
@@ -191,9 +213,67 @@ object Dedup {
     shared
       .join(sizes.toDF("d1", "sz1"), "d1")
       .join(sizes.toDF("d2", "sz2"), "d2")
-      .withColumn("jac", col("shared") / (col("sz1") + col("sz2") - col("shared")))
-      .where(col("jac") >= ngramTau)
-      .select(col("d1"), col("d2"), round(col("jac"), 6).as("jac"))
+  }
+
+  /** The driver finish of [[ngramJaccard]]'s counts, or None for a
+    * stream, a non-long `doc_id`, or more than `budget` postings. The
+    * postings are made distinct per `(doc_id, sh)` here, so repeated
+    * `doc_id` rows collapse as in the distributed `distinct`; a NULL
+    * `doc_id` counts toward df but pairs with nothing, as `d1 < d2`
+    * rejects it there. The frame carries the distributed counts' exact
+    * schema. */
+  private def ngramCountsOnDriver(docs: DataFrame, budget: Int): Option[DataFrame] = {
+    if (budget <= 0 || docs.isStreaming || docs.schema("doc_id").dataType != LongType)
+      return None
+    // explode_outer + IS NOT NULL, not explode: from an inner explode
+    // Catalyst infers `size(shs) > 0` and pushes it below the projection,
+    // which inlines the whole shingle chain (text re-split per gram)
+    // into a scan filter — measured 3-4× the cost of the postings
+    val postings = shingleSets(docs)
+      .select(col("doc_id"), explode_outer(col("shs")).as("sh")).where(col("sh").isNotNull)
+    graft.DriverRows.within(postings, budget).map { got =>
+      val nullDocShs = mutable.HashSet.empty[Long]
+      val docShs = mutable.LongMap.empty[mutable.HashSet[Long]]
+      for (r <- got)
+        (if (r.isNullAt(0)) nullDocShs
+         else docShs.getOrElseUpdate(r.getLong(0), mutable.HashSet.empty)) += r.getLong(1)
+      val dfOf = mutable.LongMap.empty[Int]
+      (docShs.valuesIterator ++ Iterator(nullDocShs))
+        .foreach(_.foreach(s => dfOf(s) = dfOf.getOrElse(s, 0) + 1))
+      // ascending doc_id: every doc already in a posting list is a d1
+      val ids = docShs.keys.toArray.sorted
+      val capped = ids.map(d => docShs(d).iterator.filter(dfOf(_) <= ngramDfCap).toArray)
+      // inverted-index all-pairs (Bayardo et al., WWW '07): each doc
+      // walks the posting lists of its capped shingles, which hold the
+      // docs before it, counting shared shingles in a dense per-doc
+      // accumulator, then appends itself to those lists. Work is
+      // Σ C(df, 2) <= postings × (cap − 1) / 2
+      val index = mutable.LongMap.empty[mutable.ArrayBuffer[Int]]
+      val shared = new Array[Int](ids.length)
+      val touched = mutable.ArrayBuffer.empty[Int]
+      val rows = mutable.ArrayBuffer.empty[Row]
+      for (x <- ids.indices) {
+        for (s <- capped(x)) {
+          val earlier = index.getOrElseUpdate(s, mutable.ArrayBuffer.empty)
+          earlier.foreach { y => if (shared(y) == 0) touched += y; shared(y) += 1 }
+          earlier += x
+        }
+        for (y <- touched) {
+          val (n, sz1, sz2) = (shared(y).toLong, capped(y).length.toLong, capped(x).length.toLong)
+          // the tail's own double test: a pair it drops never becomes a row
+          if (n.toDouble / (sz1 + sz2 - n).toDouble >= ngramTau)
+            rows += Row(ids(y), ids(x), n, sz1, sz2)
+          shared(y) = 0
+        }
+        touched.clear()
+      }
+      // the distributed counts' schema: both ids carry doc_id's field
+      // (joins keep it), the counts are non-null longs
+      val id = docs.schema("doc_id")
+      docs.sparkSession.createDataFrame(rows.asJava, StructType(
+        Seq(id.copy(name = "d1"), id.copy(name = "d2")) ++
+          Seq("shared", "sz1", "sz2").map(StructField(_, LongType, nullable = false))))
+    }
   }
 
   val ngramJaccardSql: String =
@@ -977,8 +1057,10 @@ object Dedup {
    * canonical keeper per component, the rest drop). A NULL endpoint
    * names no document: its pair only contributes the other endpoint.
    *
-   * The pair frame is persisted once, here. Then ONE job collects at
-   * most [[driverPairBudget]] + 1 pairs: if the whole pair list fits the
+   * The pair frame is persisted once, here, unless it is already a
+   * local frame (then it is read with no job, and persisted only if it
+   * goes to the rounds). Then ONE job collects at most
+   * [[driverPairBudget]] + 1 pairs: if the whole pair list fits the
    * budget (a few MB of longs), the components are labelled on the
    * driver by a min-root union-find and returned as a local frame —
    * no per-round jobs at all. Near-dup pair lists are usually this
@@ -1015,35 +1097,38 @@ object Dedup {
       alternatingStar: Boolean, driverBudget: Int): DataFrame = {
     // persisted ONCE: the budget probe, the symmetrizing union of the
     // propagation and a star restart all reread the cached pairs, not
-    // the (expensive) pair derivation
-    val p = graft.CacheRegistry.persistTracked(pairs)
-    clustersOnDriver(p, driverBudget).getOrElse(
-      if (alternatingStar) clustersStar(p, maxRounds)
-      else clustersPropagate(p, maxRounds))
+    // the (expensive) pair derivation. Local rows need no pin for the
+    // probe; the rounds still get one
+    val local = graft.DriverRows.isLocal(pairs)
+    val p = if (local) pairs else graft.CacheRegistry.persistTracked(pairs)
+    clustersOnDriver(p, driverBudget).getOrElse {
+      val q = if (local) graft.CacheRegistry.persistTracked(p) else p
+      if (alternatingStar) clustersStar(q, maxRounds) else clustersPropagate(q, maxRounds)
+    }
   }
 
   /** Largest pair list [[clusters]] labels on the driver: 2^18 pairs is
     * 4 MB of raw longs, while a near-dup pair list of a real corpus is
-    * usually far smaller. */
+    * usually far smaller. [[ngramJaccard]] bounds its postings by it. */
   val driverPairBudget: Int = 1 << 18
 
   /** The driver finish of [[clusters]], or None when the pairs exceed
-    * `budget` (or the ids are not longs). Costs one job whatever the
-    * partitioning: one task walks the cached partitions in turn (on a
-    * cold cache it also computes the partitions it reads) and stops
-    * after `budget + 1` pairs, so the driver never receives more. */
+    * `budget` (or the ids are not longs): one bounded collect
+    * ([[graft.DriverRows.within]]). */
   private def clustersOnDriver(p: DataFrame, budget: Int): Option[DataFrame] = {
     val ids = p.select(col("d1").as("v")).union(p.select(col("d2").as("v")))
     // the distributed finishes' exact schema (analysis only, no job)
     val schema = withClusterSize(
       ids.select(col("v").as("doc_id"), col("v").as("cluster_id"))).schema
     if (budget <= 0 || schema("doc_id").dataType != LongType) return None
-    val got = p.select(col("d1").cast(LongType), col("d2").cast(LongType)).rdd
-      .coalesce(1).mapPartitions(_.take(budget + 1)).collect()
-    if (got.length > budget) return None
+    val got = graft.DriverRows.within(
+        p.select(col("d1").cast(LongType), col("d2").cast(LongType)), budget) match {
+      case Some(rows) => rows
+      case None => return None
+    }
     // min-root union-find: the larger root always hangs under the
     // smaller, so every root is its component's minimum id
-    val parent = scala.collection.mutable.LongMap.empty[Long]
+    val parent = mutable.LongMap.empty[Long]
     def find(v: Long): Long = {
       var r = v
       while (parent(r) != r) r = parent(r)

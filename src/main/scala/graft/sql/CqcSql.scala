@@ -1160,19 +1160,18 @@ object CqcSql extends PredicateHelper {
     // cost-gated in Yannakakis.solveWithTree — tiny bodies skip the
     // reducer/annotation scheduling breadth, everything else gets the
     // full output-sensitive discipline
+    // one GYO serves the route line and the tree trace below
+    lazy val dryRunTree = graft.cqc.Hypergraph.tryJoinTree(foldedRels)
     def enumRouteLine: String =
-      if (graft.cqc.Hypergraph.isAcyclic(foldedRels) &&
-          graft.cqc.Yannakakis.routesDirect(foldedRels))
+      if (dryRunTree.isRight && graft.cqc.Yannakakis.routesDirect(foldedRels))
         "direct broadcast enumeration (all leaves under spark.graft.direct.threshold; " +
           "comparisons applied at earliest binding)"
       else "semijoin-reduced enumeration (Yannakakis pass 1 + output-sensitive pass 2)"
 
     trace {
-      val desc =
-        if (graft.cqc.Hypergraph.isAcyclic(foldedRels))
-          graft.cqc.Hypergraph.joinTree(foldedRels).describe
-        else foldedRels.map(r => s"${r.name} [${r.vars.toSeq.sorted.mkString(",")}]")
-          .mkString("(cyclic body -> GHD certificate bags over: ", "; ", ")")
+      val desc = dryRunTree.fold(_ =>
+        foldedRels.map(r => s"${r.name} [${r.vars.toSeq.sorted.mkString(",")}]")
+          .mkString("(cyclic body -> GHD certificate bags over: ", "; ", ")"), _.describe)
       s"join tree (cost-picked):\n$desc" +
         (if (cmps.isEmpty) ""
          else "\nbound carriers:\n" + cmps.map(c => s"  $c").mkString("\n"))

@@ -194,11 +194,11 @@ object Emit {
   private def plannedTree(
       spark: SparkSession, sqlText: String): Option[graft.cqc.JoinTree] = try {
     val rels = CqcSql.relations(spark, sqlText)
-    if (rels.size < 2 || !graft.cqc.Hypergraph.isAcyclic(rels)) None
+    def tree = graft.cqc.Hypergraph.tryJoinTree(rels).toOption
+    if (rels.size < 2) None
     else CqcSql.hintedRoot(spark, sqlText) match {
-      case Some(h) => Some(
-        graft.cqc.Hypergraph.withRootHint(h)(graft.cqc.Hypergraph.joinTree(rels)))
-      case None => Some(graft.cqc.Hypergraph.joinTree(rels))
+      case Some(h) => graft.cqc.Hypergraph.withRootHint(h)(tree)
+      case None => tree
     }
   } catch { case scala.util.control.NonFatal(_) => None }
 

@@ -13,7 +13,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
  *  1. EQUALITY: the driver result has the schema and rows of BOTH
  *     distributed variants (pinned with budget 0) on every shape.
  *  2. ONE JOB: over an already-materialized small pair frame the call
- *     runs at most one job, not one or more per round.
+ *     runs at most one job, not one or more per round; over a local
+ *     pair frame it runs none.
  *  3. ONE PERSIST: the pair frame is tracked once, also when
  *     propagation restarts on the star variant.
  */
@@ -91,6 +92,14 @@ class ClusterFinishSpec extends SparkSpecBase {
     // the distributed rounds run one or more jobs per round
     val jobs = jobsDuring(Dedup.clusters(pairs))
     assert(jobs <= 1, s"$jobs jobs")
+  }
+
+  test("a local pair frame is labelled with no job and no persist") {
+    val pairs = pathPairs(40)
+    val tracked = CacheRegistry.trackedCount
+    val jobs = jobsDuring(Dedup.clusters(pairs))
+    assert(jobs == 0, s"$jobs jobs")
+    assert(CacheRegistry.trackedCount == tracked)
   }
 
   test("pairs are persisted once when propagation restarts on the star variant") {

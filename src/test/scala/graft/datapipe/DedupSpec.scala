@@ -88,7 +88,9 @@ class DedupSpec extends SparkSpecBase {
     assert(!capped.queryExecution.executedPlan.toString.contains("Window"),
       "simhash cap must not plan a Window")
     // (budget 0: this input would otherwise finish on the driver as a
-    // LocalTableScan and the pin would test nothing)
+    // LocalTableScan and the pin would test nothing. The pair source's
+    // own finish does not reach the checked plan: the rounds truncate
+    // the labels' lineage, so it is the cluster_size attach alone)
     assert(!Dedup.clusters(Dedup.ngramJaccard(
         (1L to 6L).map(i => (i, s"alpha beta gamma delta epsilon zeta $i")).toDF("doc_id", "text")),
         50, alternatingStar = false, driverBudget = 0)

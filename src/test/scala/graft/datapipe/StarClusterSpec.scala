@@ -97,7 +97,10 @@ class StarClusterSpec extends SparkSpecBase {
       (3L, "the quick brown fox jumps over the lazy cat"),
       (4L, "completely different words in this one right here"))
       .toDF("doc_id", "text")
-    val out = Dedup.clusters(Dedup.ngramJaccard(docs), 50, alternatingStar = true, driverBudget = 0)
+    // both budgets 0: the star rounds over the distributed pair
+    // derivation (this input would otherwise pair and label on the driver)
+    val out = Dedup.clusters(Dedup.ngramJaccard(docs, driverBudget = 0), 50,
+        alternatingStar = true, driverBudget = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
