@@ -296,6 +296,4 @@ object Hypergraph {
     * cyclic core of the query (empty when alpha-acyclic). [[graft.wcoj.Ghd]]
     * evaluates exactly this set worst-case-optimally as one bag. */
   def cyclicCore(rels: Seq[Rel]): Seq[String] = gyo(hyperedges(rels)).left.getOrElse(Seq.empty)
-
-  def isAcyclic(rels: Seq[Rel]): Boolean = gyo(hyperedges(rels)).isRight
 }

@@ -118,10 +118,15 @@ object Dedup {
     * both engines (collisions are 2^-60 AND, when they do happen, happen
     * identically on both sides — parity is unaffected). */
   def shingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), TextOps.words(normText).as("w")) // materialize
-      .select(col("doc_id"),
-        explode(transform(TextOps.shinglesOf(col("w"), shingleK), s => h60(s))).as("sh"))
+    docs.select(col("doc_id"), TextOps.words(normText).as("w"))
+      .select(col("doc_id"), explode(shingleHashes).as("sh"))
       .distinct()
+
+  /** The hashed k-grams of the materialized words column `w`: one
+    * codegen'd loop ([[graft.functions.ShingleHashes]]), bit-equal to
+    * `transform(TextOps.shinglesOf(w, shingleK), h60)`. */
+  private def shingleHashes: Column =
+    graft.functions.ShingleHashes.hashes(col("w"), shingleK)
 
   /** Shared CTE prefix rendering [[shingles]] in DuckDB. */
   val shinglesCte: String =
@@ -171,8 +176,9 @@ object Dedup {
    *
    * ONE job collects at most [[driverPairBudget]] + 1 `(doc_id, sh)`
    * postings (the per-doc shingle sets, exploded: no shuffle, no
-   * persist). If they fit, the pairs are counted on the driver and the
-   * result is a local frame. Over the budget, the distributed plan
+   * persist). If they fit, the pairs are counted on the driver and, when
+   * at most that many pass the threshold, the result is a local frame.
+   * Over the budget, the probe's postings are dropped and the distributed plan
    * self-joins the capped postings on shingle and counts shared
    * shingles per pair directly off that join. Both finishes end in the
    * same Spark division, threshold and `round`.
@@ -216,7 +222,8 @@ object Dedup {
   }
 
   /** The driver finish of [[ngramJaccard]]'s counts, or None for a
-    * stream, a non-long `doc_id`, or more than `budget` postings. The
+    * stream, a non-long `doc_id`, more than `budget` postings or more
+    * than `budget` pairs passing the threshold. The
     * postings are made distinct per `(doc_id, sh)` here, so repeated
     * `doc_id` rows collapse as in the distributed `distinct`; a NULL
     * `doc_id` counts toward df but pairs with nothing, as `d1 < d2`
@@ -227,11 +234,11 @@ object Dedup {
       return None
     // explode_outer + IS NOT NULL, not explode: from an inner explode
     // Catalyst infers `size(shs) > 0` and pushes it below the projection,
-    // which inlines the whole shingle chain (text re-split per gram)
-    // into a scan filter — measured 3-4× the cost of the postings
+    // which inlines the whole shingle hashing into a scan filter, so
+    // every gram is hashed twice
     val postings = shingleSets(docs)
       .select(col("doc_id"), explode_outer(col("shs")).as("sh")).where(col("sh").isNotNull)
-    graft.DriverRows.within(postings, budget).map { got =>
+    graft.DriverRows.within(postings, budget).flatMap { got =>
       val nullDocShs = mutable.HashSet.empty[Long]
       val docShs = mutable.LongMap.empty[mutable.HashSet[Long]]
       for (r <- got)
@@ -247,12 +254,15 @@ object Dedup {
       // walks the posting lists of its capped shingles, which hold the
       // docs before it, counting shared shingles in a dense per-doc
       // accumulator, then appends itself to those lists. Work is
-      // Σ C(df, 2) <= postings × (cap − 1) / 2
+      // Σ C(df, 2) <= postings × (cap − 1) / 2. More than `budget`
+      // passing pairs stop it: a local frame that large costs more than
+      // the distributed plan
       val index = mutable.LongMap.empty[mutable.ArrayBuffer[Int]]
       val shared = new Array[Int](ids.length)
       val touched = mutable.ArrayBuffer.empty[Int]
       val rows = mutable.ArrayBuffer.empty[Row]
-      for (x <- ids.indices) {
+      var x = 0
+      while (x < ids.length && rows.length <= budget) {
         for (s <- capped(x)) {
           val earlier = index.getOrElseUpdate(s, mutable.ArrayBuffer.empty)
           earlier.foreach { y => if (shared(y) == 0) touched += y; shared(y) += 1 }
@@ -266,13 +276,15 @@ object Dedup {
           shared(y) = 0
         }
         touched.clear()
+        x += 1
       }
       // the distributed counts' schema: both ids carry doc_id's field
       // (joins keep it), the counts are non-null longs
       val id = docs.schema("doc_id")
-      docs.sparkSession.createDataFrame(rows.asJava, StructType(
+      if (rows.length > budget) None
+      else Some(docs.sparkSession.createDataFrame(rows.asJava, StructType(
         Seq(id.copy(name = "d1"), id.copy(name = "d2")) ++
-          Seq("shared", "sz1", "sz2").map(StructField(_, LongType, nullable = false))))
+          Seq("shared", "sz1", "sz2").map(StructField(_, LongType, nullable = false)))))
     }
   }
 
@@ -371,14 +383,8 @@ object Dedup {
     * an unbounded stream and identical in content (`array_distinct` of
     * the same hashed shingles). */
   def shingleSets(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), TextOps.words(normText).as("w")) // materialize:
-      // layering matters — inlining words() into the shingle lambda
-      // re-splits the text PER GRAM (the O(n²)/doc interpreted-HOF trap
-      // the r7 continuation measured in Prep; same layering as
-      // [[shingles]] above)
-      .select(col("doc_id"),
-        array_distinct(transform(
-          TextOps.shinglesOf(col("w"), shingleK), s => h60(s))).as("shs"))
+    docs.select(col("doc_id"), TextOps.words(normText).as("w"))
+      .select(col("doc_id"), array_distinct(shingleHashes).as("shs"))
 
   /** Banded signature keys from the array form — map-side only: each
     * signature is an `array_min` over the affine-permuted shingle set,
@@ -1109,7 +1115,8 @@ object Dedup {
 
   /** Largest pair list [[clusters]] labels on the driver: 2^18 pairs is
     * 4 MB of raw longs, while a near-dup pair list of a real corpus is
-    * usually far smaller. [[ngramJaccard]] bounds its postings by it. */
+    * usually far smaller. [[ngramJaccard]] bounds its postings and its
+    * passing pairs by it. */
   val driverPairBudget: Int = 1 << 18
 
   /** The driver finish of [[clusters]], or None when the pairs exceed

@@ -33,7 +33,29 @@ object H60 {
   def hashBytes(b: Array[Byte]): Long = {
     val md = tl.get()
     md.reset()
-    val d = md.digest(b)
+    top60(md.digest(b))
+  }
+
+  /** h60 of `parts(from until until)` joined by single spaces, NULL
+    * parts skipped with their separator (`array_join`'s rule), fed to
+    * the digest piecewise instead of built as one string. */
+  def hashJoined(parts: Array[Array[Byte]], from: Int, until: Int): Long = {
+    val md = tl.get()
+    md.reset()
+    var first = true
+    var i = from
+    while (i < until) {
+      if (parts(i) != null) {
+        if (!first) md.update(' '.toByte)
+        md.update(parts(i))
+        first = false
+      }
+      i += 1
+    }
+    top60(md.digest())
+  }
+
+  private def top60(d: Array[Byte]): Long = {
     val top =
       ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
       ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |

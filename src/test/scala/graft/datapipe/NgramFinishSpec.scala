@@ -92,6 +92,16 @@ class NgramFinishSpec extends SparkSpecBase {
     assert(rows(at) == rows(over))
   }
 
+  test("more passing pairs than the budget run the distributed plan") {
+    val docs = sharing(10).toDF("doc_id", "text") // 40 postings, 45 pairs
+    val at = Dedup.ngramJaccard(docs, driverBudget = 45)
+    val over = Dedup.ngramJaccard(docs, driverBudget = 44)
+    assert(DriverRows.isLocal(at))
+    assert(!DriverRows.isLocal(over))
+    val want = rows(Dedup.ngramJaccard(docs, driverBudget = 0))
+    assert(want.size == 45 && rows(at) == want && rows(over) == want)
+  }
+
   test("the pair derivation and the cluster decision over the corpus run at most one job") {
     val corpus = Tables.documents(spark, sfDir)
     // with its rows read: a lazy pair plan runs its jobs at the collect

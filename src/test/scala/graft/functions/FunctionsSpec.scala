@@ -76,6 +76,32 @@ class FunctionsSpec extends SparkSpecBase {
     }
   }
 
+  test("ShingleHashes equals the hashed shinglesOf chain, codegen and interpreted") {
+    // bit-equal to transform(shinglesOf(w, k), h60) on random word
+    // arrays (unicode, empty words, NULL words, fewer than k words) and
+    // a NULL array, which both give the empty array
+    import graft.datapipe.TextOps.{h60, shinglesOf}
+    val rnd = new scala.util.Random(271828)
+    val pool = Seq("", "a", "the", "äöü", "你好", "𐀀x", "word", "·:/", null)
+    val arrays = Seq(null, Seq.empty[String], Seq("a"), Seq("a", "b"), Seq("a", "b", "c"),
+      Seq(null, null, null), Seq("", "", "")) ++
+      (1 to 200).map(_ => Seq.fill(rnd.nextInt(40))(pool(rnd.nextInt(pool.length))))
+    val df = arrays.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "w")
+    for (k <- Seq(1, 3); codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      val old = spark.conf.getOption("spark.sql.codegen.factoryMode")
+      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+      try {
+        val diverged = df.where(
+          not(ShingleHashes.hashes(col("w"), k) <=> transform(shinglesOf(col("w"), k), s => h60(s))))
+          .count()
+        assert(diverged == 0, s"$diverged arrays diverged at k=$k under $codegen")
+      } finally old match {
+        case Some(o) => spark.conf.set("spark.sql.codegen.factoryMode", o)
+        case None => spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+  }
+
   test("graft_h60 is registered and equals TextOps.h60") {
     val viaSql = spark.sql("SELECT graft_h60('hello') AS h").head().getLong(0)
     val viaCol = Seq("hello").toDF("s")

@@ -81,9 +81,9 @@ class WcojSpec extends SparkSpecBase {
       Rel("g1", edges.toDF("a", "b")), Rel("g2", edges.toDF("b", "c")),
       Rel("g3", edges.toDF("c", "a")), Rel("g4", edges.toDF("c", "d")),
       Rel("g5", edges.toDF("d", "e")), Rel("g6", edges.toDF("e", "c")))
-    assert(!Hypergraph.isAcyclic(rels))
+    assert(!Hypergraph.tryJoinTree(rels).isRight)
     val bags = Ghd.decompose(rels)
-    assert(Hypergraph.isAcyclic(bags))
+    assert(Hypergraph.tryJoinTree(bags).isRight)
     // the cyclic core is closed by an ADDED WCOJ certificate (set of
     // bindings satisfying every core pattern); original members survive
     // to carry multiplicities/types
