@@ -69,20 +69,16 @@ object Cli {
     if (serve.isDefined) {
       val port = serve.get
       // run the DDL so the console's session has the script's tables
-      val stmts = graft.sql.CqcSql.splitStatements(text)
-      stmts.init.foreach(s =>
-        if (!graft.sql.CqcSql.tryRefCreateTable(spark, s)) spark.sql(s))
+      graft.sql.CqcSql.runDdl(spark, text)
       val server = new graft.web.GraftServer(spark, port).start()
       println(s"graft console at http://127.0.0.1:${server.boundPort}/ (Ctrl-C to stop)")
       Thread.currentThread.join()
     } else if (emit) {
-      val stmts = graft.sql.CqcSql.splitStatements(text)
-      stmts.init.foreach(s =>
-        if (!graft.sql.CqcSql.tryRefCreateTable(spark, s)) spark.sql(s))
-      val prog = graft.sql.Emit.program(spark, stmts.last, objName, pkgName)
+      val query = graft.sql.CqcSql.runDdl(spark, text)
+      val prog = graft.sql.Emit.program(spark, query, objName, pkgName)
       val twin =
         if (args.contains("--pair"))
-          Some(graft.sql.Emit.stockProgram(spark, stmts.last, objName, pkgName))
+          Some(graft.sql.Emit.stockProgram(spark, query, objName, pkgName))
         else None
       // reference parity: -o/--output writes the generated program to a
       // file (sqlplus-cli CliFrontendOptions OUTPUT_OPTION, CliFrontend

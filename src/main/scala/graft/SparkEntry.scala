@@ -835,7 +835,7 @@ object SparkEntry {
   /** ROLLUP over a 4-hop ~10^9-path join from SQL text: the door solves
     * ONE finest-granularity aggregate through the factorized fast path
     * (the join never enumerates) and rolls the partials up per grouping
-    * set on the tiny pre-aggregated result (CqcSql.tryRollupFast; spec:
+    * set on the tiny pre-aggregated result (the grouping-sets rollup route of CqcSql; spec:
     * RollupFastSpec). */
   def qSqlCqcRollup(s: SparkSession, d: String): DataFrame = {
     Tables.edges(s, d).createOrReplaceTempView("cqcr_edges")

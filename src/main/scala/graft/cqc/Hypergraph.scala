@@ -244,6 +244,19 @@ object Hypergraph {
       .rerooted(edges.maxBy(e => (e.bytes, e.name)).name))
   }
 
+  /** Union-find over `a = b` ExprId pairs: maps an id to its class
+    * representative (itself when no pair names it) — the join variables
+    * of the SQL door and [[graft.plans.SemijoinReduction]]. */
+  def equalityClasses(pairs: Seq[(Long, Long)]): Long => Long = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(id: Long): Long = {
+      val p = parent.getOrElse(id, id)
+      if (p == id) id else { val r = find(p); parent(id) = r; r }
+    }
+    pairs.foreach { case (a, b) => parent(find(a)) = find(b) }
+    find
+  }
+
   /** [[gyo]] over relations (variables are column names): the cost-picked
     * tree, or — while a [[withRootHint]] is active on this thread — the
     * same tree rooted at the hinted relation. Throws

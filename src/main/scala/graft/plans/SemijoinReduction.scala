@@ -90,15 +90,9 @@ object SemijoinReduction extends Rule[LogicalPlan] with PredicateHelper {
     // attribute-equivalence classes from the equality conditions, keyed by
     // ExprId (condition references and leaf outputs can differ in
     // qualifier/nullability while being the same attribute)
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(id: Long): Long = {
-      val p = parent.getOrElse(id, id)
-      if (p == id) id else { val r = find(p); parent(id) = r; r }
-    }
-    conds.foreach {
-      case EqualTo(a: Attribute, b: Attribute) => parent(find(a.exprId.id)) = find(b.exprId.id)
-      case _ =>
-    }
+    val find = Hypergraph.equalityClasses(conds.collect {
+      case EqualTo(a: Attribute, b: Attribute) => (a.exprId.id, b.exprId.id)
+    })
     val vars = leaves.map(_.output.map(a => find(a.exprId.id)).toSet)
     def shared(a: String, b: String): Seq[Long] =
       (vars(a.toInt) intersect vars(b.toInt)).toSeq.sorted

@@ -18,9 +18,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  *     catalog's table properties);
  *   - a `CREATE TEMPORARY VIEW` replay for SQL-defined views (their
  *     view text survives in the analyzed plan);
- *   - the dry-run plan dump ([[CqcSql.explain]]) as the header comment —
- *     the chosen join tree, bound carriers, and routed fast path at
- *     generation time;
+ *   - the dry-run plan dump ([[RouteRecord.render]] of one door run) as
+ *     the header comment — the chosen join tree, bound carriers, and
+ *     routed fast path at generation time;
  *   - the query itself, executed through [[CqcSql.solve]] (the graft
  *     library plays the role of the reference's sqlplus-lib runtime
  *     dependency in its generated programs).
@@ -32,13 +32,14 @@ object Emit {
       sqlText: String,
       objectName: String = "GraftQuery",
       packageName: String = "graft.generated"): String = {
-    val dump = CqcSql.explain(spark, sqlText)
+    // run the door ONCE: the header dump, the sequence below and the
+    // pinned run all read the same record, whose tree honors a
+    // /*+ ROOT(x) */ comment in the text exactly like execution
+    val (dump, tree) = CqcSql.inspect(spark, sqlText) { rec =>
+      (rec.render, rec.outermost.filter(_.rels.size >= 2).flatMap(_.tree.toOption))
+    }
     val dumpLines = dump.linesIterator.map(l => s" *   $l").mkString("\n")
     val srcLines = recoverSources(spark, sqlText).map(l => s"    $l").mkString("\n")
-    // decompose ONCE; the tree honors a /*+ ROOT(x) */ comment in the
-    // text (same resolution as execution), so the header dump, the
-    // sequence below, and the pinned run all describe the SAME tree
-    val tree = plannedTree(spark, sqlText)
     val seqLines = operatorSequence(tree)
       .map(l => s" *   $l").mkString("\n")
     // pin the generation-time enumeration root: join trees of an acyclic
@@ -186,21 +187,6 @@ object Emit {
     }
     sources.values.toSeq
   }
-
-  /** The join tree the emitted program will run: decomposed once,
-    * honoring a `/*+ ROOT(x) */` comment exactly like execution (the
-    * hint resolves through the same [[CqcSql.hintedRoot]] + tree-pick
-    * path). None for cyclic/fallback bodies. */
-  private def plannedTree(
-      spark: SparkSession, sqlText: String): Option[graft.cqc.JoinTree] = try {
-    val rels = CqcSql.relations(spark, sqlText)
-    def tree = graft.cqc.Hypergraph.tryJoinTree(rels).toOption
-    if (rels.size < 2) None
-    else CqcSql.hintedRoot(spark, sqlText) match {
-      case Some(h) => graft.cqc.Hypergraph.withRootHint(h)(tree)
-      case None => tree
-    }
-  } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The synthesized operator sequence, one numbered step per line —
     * exactly the pass structure [[graft.cqc.Yannakakis.solveWithTree]]
