@@ -4,6 +4,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A persisted artifact read back from disk: its build parameters and
   * one frame per table. */
@@ -19,8 +20,12 @@ final case class Artifact(params: Map[String, String], tables: Map[String, DataF
  *
  *  - Layout: `<dir>/<table>/` parquet per table plus `<dir>/_manifest`,
  *    `key=value` lines holding the kind, the build parameters known without
- *    a Spark job and the table list. Anything a Spark job computes
- *    stays a table.
+ *    a Spark job, the table list and one `schema.<table>=<StructType JSON>`
+ *    line per table. Anything a Spark job computes stays a table.
+ *  - Reads plan with no job: [[read]] hands each table's declared schema
+ *    to the parquet reader, so no footer is sampled to infer it. A
+ *    manifest without a table's schema line is refused, naming the dir
+ *    and the table.
  *  - Stage → commit: [[write]] stages every table concurrently into the
  *    hidden sibling `<parent>/.<name>.stage`, adds the manifest, then
  *    swaps it in (live → `.<name>.retired-<uuid>`, stage → live, retired
@@ -33,12 +38,16 @@ final case class Artifact(params: Map[String, String], tables: Map[String, DataF
  *    between them leaves a readable store whose appended rows a replaced
  *    table does not reference yet. [[read]] lists tables recursively:
  *    committed appends are visible, hidden (`.`/`_`) paths never are.
+ *    An appended table must match its declared schema (nullability
+ *    aside) or the update throws before staging; a replaced table's
+ *    schema line is rewritten in the manifest, last.
  *  - Contract: one writer per `dir` (the stage name is fixed) and no
  *    reader during a commit — between the two renames the live path does
  *    not exist; a crash there leaves the old content in the retired dir.
  */
 object Artifact {
   private val manifest = "_manifest"
+  private val schemaKey = "schema."
 
   def write(dir: String, kind: String, params: Seq[(String, Any)],
             tables: Seq[(String, DataFrame)]): Unit = {
@@ -46,19 +55,21 @@ object Artifact {
     val spark = tables.head._2.sparkSession
     val (fs, live, stage) = paths(spark, dir)
     staged(fs, stage, tables) {
-      writeManifest(spark, stage.toString, (("kind" -> kind) +: params :+
-        ("tables" -> tables.map(_._1).mkString(","))).map { case (k, v) => s"$k=$v" })
+      writeManifest(spark, stage.toString, ((("kind" -> kind) +: params :+
+        ("tables" -> tables.map(_._1).mkString(","))) ++ schemaLines(tables))
+        .map { case (k, v) => s"$k=$v" })
     }
     swap(fs, live, stage, new Path(live.getParent, s".${live.getName}.retired-${UUID.randomUUID()}"))
   }
 
   /** Validate `dir`'s manifest against `kind` and return its tables. */
   def read(spark: SparkSession, dir: String, kind: String): Artifact = {
-    val m = manifestOf(spark, dir)
+    val m = manifestOf(spark, dir).toMap
     require(m.get("kind").contains(kind),
       s"$dir holds a '${m.getOrElse("kind", "?")}' artifact, not '$kind'")
-    Artifact(m -- Seq("kind", "tables"), m("tables").split(",").map(t =>
-      t -> spark.read.option("recursiveFileLookup", "true").parquet(s"$dir/$t")).toMap)
+    Artifact(m.filter { case (k, _) => k != "kind" && k != "tables" && !k.startsWith(schemaKey) },
+      m("tables").split(",").map(t => t -> spark.read.schema(schemaOf(m, dir, t))
+        .option("recursiveFileLookup", "true").parquet(s"$dir/$t")).toMap)
   }
 
   /** Append rows to some declared tables and replace others, as one
@@ -68,19 +79,37 @@ object Artifact {
     val changed = appends ++ replaces
     require(changed.nonEmpty, s"empty update of $dir")
     val spark = changed.head._2.sparkSession
-    val declared = manifestOf(spark, dir)("tables").split(",").toSet
+    val lines = manifestOf(spark, dir)
+    val m = lines.toMap
+    val declared = m("tables").split(",").toSet
     val names = changed.map(_._1)
     require(names.distinct.size == names.size && names.forall(declared),
       s"update of $dir must name distinct declared tables: ${names.mkString(",")}")
+    for ((t, df) <- appends) {
+      val (want, got) = (schemaOf(m, dir, t).catalogString, df.schema.catalogString)
+      require(want == got, s"append to table '$t' of $dir has schema $got, declared $want")
+    }
     val (fs, live, stage) = paths(spark, dir)
     staged(fs, stage, changed)(())
     for ((t, _) <- appends)
       rename(fs, new Path(stage, t), new Path(live, s"$t/append-${UUID.randomUUID()}"))
     for ((t, _) <- replaces)
       swap(fs, new Path(live, t), new Path(stage, t), new Path(stage, s"$t.retired"))
+    if (replaces.nonEmpty) {
+      val fresh = schemaLines(replaces).toMap
+      writeManifest(spark, dir, lines.map { case (k, v) => s"$k=${fresh.getOrElse(k, v)}" })
+    }
     fs.delete(stage, true)
     ()
   }
+
+  private def schemaLines(tables: Seq[(String, DataFrame)]): Seq[(String, String)] =
+    tables.map { case (t, df) => s"$schemaKey$t" -> df.schema.json }
+
+  private def schemaOf(m: Map[String, String], dir: String, table: String): StructType =
+    DataType.fromJson(m.getOrElse(s"$schemaKey$table", throw new IllegalArgumentException(
+      s"the artifact manifest under $dir declares no schema for table '$table'")))
+      .asInstanceOf[StructType]
 
   private def paths(spark: SparkSession, dir: String): (FileSystem, Path, Path) = {
     val live = new Path(dir)
@@ -120,11 +149,12 @@ object Artifact {
     require(fs.rename(from, to), s"artifact commit: renaming $from to $to failed")
   }
 
-  private def manifestOf(spark: SparkSession, dir: String): Map[String, String] =
+  /** `dir`'s manifest as ordered `key -> value` pairs. */
+  private def manifestOf(spark: SparkSession, dir: String): Seq[(String, String)] =
     readManifest(spark, dir).getOrElse(throw new IllegalArgumentException(
       s"no readable artifact manifest under $dir")).map(_.split("=", 2)).collect {
       case Array(k, v) => k -> v
-    }.toMap
+    }
 
   /** Write `lines` as `dir/_manifest` via temp file + rename: a reader sees
     * the previous manifest, the new one or (in the delete/rename gap)

@@ -67,7 +67,7 @@ object Dedup {
       // must not accumulate cache pins that are used exactly once for a
       // file write — the shard scans twice (keys pass + sets pass)
       // instead, like EmbedIndex.append
-      val (keys, sets) = leanIndexFrom(shingles(newDocs))
+      val (keys, sets) = leanIndexFrom(newDocs)
       graft.Artifact.update(dir, appends = Seq("keys" -> keys, "sets" -> sets))
     }
   }
@@ -386,10 +386,22 @@ object Dedup {
     docs.select(col("doc_id"), TextOps.words(normText).as("w"))
       .select(col("doc_id"), array_distinct(shingleHashes).as("shs"))
 
+  /** [[shingleSets]] without the docs that have no shingle (below the
+    * shingle width, or NULL text). The test sits in the generator, not
+    * in a filter: Catalyst pushes a filter below the projection that
+    * hashes the shingles, so every doc would be shingled twice. */
+  private def nonEmptySets(docs: DataFrame): DataFrame =
+    shingleSets(docs).select(col("doc_id"),
+      explode(when(size(col("shs")) > 0, array(col("shs")))).as("shs"))
+
   /** Banded signature keys from the array form — map-side only: each
     * signature is an `array_min` over the affine-permuted shingle set,
     * each band key a concat of its rows; the explode fans out rows
-    * WITHIN the partition (stateless in streaming). */
+    * WITHIN the partition (stateless in streaming). `withSets` holds
+    * non-empty sets only ([[nonEmptySets]]): a doc with no shingles has
+    * no signature, and its band keys would all collapse to "" (concat_ws
+    * skips NULLs), putting every short doc in one bucket with a NaN
+    * (0/0) Jaccard that Spark orders ABOVE the threshold. */
   private def bandKeys(withSets: DataFrame): DataFrame = {
     // all 12 signature mins in ONE codegen'd primitive loop
     // ([[graft.functions.MinhashSignature]]): higher-order functions
@@ -397,8 +409,7 @@ object Dedup {
     // the measured cost of the stream-side signature. Bit-identical to
     // the declarative fold (same Long arithmetic; min is
     // order-insensitive; seed mhP is an identity since every permuted
-    // value is < mhP). Empty sets are filtered before the signature
-    // (see below).
+    // value is < mhP)
     val sig = graft.functions.MinhashSignature.signature(
       col("shs"), mhA.take(mhBands * mhRows), mhB.take(mhBands * mhRows), mhP)
     def mh(j: Int): Column = element_at(col("__sig"), j + 1)
@@ -406,14 +417,7 @@ object Dedup {
       struct(lit(b).as("band"),
         concat_ws("_", (0 until mhRows).map(r => mh(b * mhRows + r)): _*).as("key"))
     }
-    // docs shorter than the shingle width have NO shingles and therefore
-    // no signature — without this filter their array_min is NULL, every
-    // band key collapses to "" (concat_ws skips NULLs), all short docs
-    // collide in one bucket, and their 0/0 Jaccard is NaN which Spark
-    // orders ABOVE the threshold. The exploded batch forms drop such
-    // docs naturally (no shingle rows); the array form must match.
-    withSets.where(size(col("shs")) > 0)
-      .withColumn("__sig", sig)
+    withSets.withColumn("__sig", sig)
       .select(col("doc_id"), col("shs"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("shs"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
@@ -439,32 +443,30 @@ object Dedup {
    * index ([[MinhashIndex.write]]/[[MinhashIndex.read]], the
    * cluster-scale form) is re-listed per micro-batch and needs no such
    * step.
+   *
+   * Both frames are built map-side from the per-document shingle sets
+   * ([[shingleSets]]; keys through the same [[bandKeys]] as the stream
+   * side, so the two sides' band keys agree bit for bit): each is one
+   * scan stage, no shingle crosses a shuffle. `doc_id` is the index
+   * key: every input row is indexed as its own member, so rows sharing
+   * a `doc_id` give repeated key and set rows under that id (the
+   * contract [[MinhashIndex.append]] already has across shards). Docs
+   * below the shingle width and NULL texts have no shingles and are
+   * not indexed.
    */
-  /** The lean index frames from a shingle relation — shared by the
-    * cache-pinned [[minhashIndex]] and the write-only un-pinned
-    * [[MinhashIndex.append]] path. */
-  private def leanIndexFrom(sh: DataFrame): (DataFrame, DataFrame) = {
-    val sig = minhashSignatures(sh)
-    val keys = sig.select(col("doc_id"), explode(array(bandKeyStructs: _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"),
-        col("doc_id").as("corpus_id"))
-    val sets = sh.groupBy(col("doc_id")).agg(collect_list(col("sh")).as("corpus_shs"))
-      .select(col("doc_id").as("corpus_id"), col("corpus_shs"))
-    (keys, sets)
-  }
-
   def minhashIndex(corpus: DataFrame): MinhashIndex = {
-    // the index side is BATCH: signatures come from the exploded shingle
-    // relation through codegen'd groupBy mins ([[minhashSignatures]] —
-    // measured 4x cheaper than the interpreted array fold the stateless
-    // STREAM side must use), and the band keys are bit-identical to the
-    // stream side's (same permutations over the same 31-bit shingles).
-    // Docs below the shingle width have no rows here, matching the
-    // stream side's empty-set filter.
-    val sh = graft.CacheRegistry.persistTracked(shingles(corpus))
-    val (keys, sets) = leanIndexFrom(sh)
+    val (keys, sets) = leanIndexFrom(corpus)
     MinhashIndex(graft.CacheRegistry.persistTracked(keys),
       graft.CacheRegistry.persistTracked(sets))
+  }
+
+  /** The lean index frames of `docs` — shared by the cache-pinned
+    * [[minhashIndex]] and the write-only un-pinned
+    * [[MinhashIndex.append]] path. */
+  private def leanIndexFrom(docs: DataFrame): (DataFrame, DataFrame) = {
+    val sets = nonEmptySets(docs)
+    (bandKeys(sets).select(col("band"), col("key"), col("doc_id").as("corpus_id")),
+      sets.select(col("doc_id").as("corpus_id"), col("shs").as("corpus_shs")))
   }
 
   /**
@@ -490,7 +492,7 @@ object Dedup {
     * id space. */
   def minhashStreamingFlag(stream: DataFrame, index: MinhashIndex,
                            excludeSelf: Boolean = true): DataFrame = {
-    val probe = bandKeys(shingleSets(stream))
+    val probe = bandKeys(nonEmptySets(stream))
     val inter = size(array_intersect(col("shs"), col("corpus_shs"))).cast("double")
     val union = (size(col("shs")) + size(col("corpus_shs"))).cast("double") - inter
     // bucket probe against the LEAN key rows first; the verify payload

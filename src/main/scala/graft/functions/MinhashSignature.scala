@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
  * accumulator — the measured cost of the stateless stream-side
  * signature in the ingest near-dup gate. This is one codegen'd loop
  * with a primitive long[] accumulator, the shape you want signing an
- * arriving 100 TB feed. (The BATCH index side doesn't need it: exploded
- * shingles + codegen'd groupBy mins are already fast — this is the
- * map-side/streaming twin.)
+ * arriving 100 TB feed. The batch index side (`Dedup.minhashIndex`)
+ * signs through it too, map-side, so both sides share one band-key
+ * path; `Dedup.minhashSignatures` (exploded shingles, grouped mins)
+ * remains the form of the batch self-join `Dedup.minhashLsh`.
  */
 case class MinhashSignature(
     child: Expression, a: Seq[Long], b: Seq[Long], p: Long)

@@ -4,6 +4,8 @@ import graft.datapipe.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** The persisted-artifact protocol: a write or update that fails
   * mid-job leaves the previous artifact served exactly, nothing staged
   * is ever read, and a retry commits. */
@@ -80,7 +82,70 @@ class ArtifactSpec extends SparkSpecBase {
         Artifact.update(dir, appends = Seq("sets" -> setsOf("a")))
       }
       intercept[IllegalArgumentException] { Artifact.read(spark, s"$dir/keys", "pair") }
-      assert(Artifact.readManifest(spark, dir).contains(Seq("kind=pair", "tables=keys")))
+      assert(Artifact.readManifest(spark, dir).contains(Seq("kind=pair", "tables=keys",
+        s"schema.keys=${keysOf("a").schema.json}")))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  /** Every file under `dir` (hidden ones included) with its bytes. */
+  private def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val files = java.nio.file.Files.walk(root)
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(f =>
+      root.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+    finally files.close()
+  }
+
+  test("updates check the declared schema: a mismatched append is refused, a replace rewrites its line") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_artifact_schema").toString
+    try {
+      Dedup.MinhashIndex(keysOf("a"), setsOf("a")).write(dir)
+      val before = snapshot(dir)
+      val e = intercept[IllegalArgumentException] {
+        Artifact.update(dir, appends = Seq("keys" ->
+          keysOf("b").withColumn("corpus_id", col("corpus_id").cast("string"))))
+      }
+      assert(e.getMessage.contains("keys") && e.getMessage.contains(dir), e.getMessage)
+      assert(snapshot(dir) == before, "a refused update changed the artifact's files")
+      assert(siblings(dir).isEmpty, s"a refused update left ${siblings(dir)}")
+      // nullability is not part of the check: a nullable corpus_id appends
+      val nullable = keysOf("b").withColumn("corpus_id",
+        when(col("corpus_id") >= 0L, col("corpus_id")))
+      assert(nullable.schema("corpus_id").nullable && !keysOf("b").schema("corpus_id").nullable)
+      Artifact.update(dir, appends = Seq("keys" -> nullable))
+      // a replacement may change its schema; the manifest follows it
+      val wide = setsOf("c").withColumn("extra", lit(1.5))
+      Artifact.update(dir, appends = Nil, replaces = Seq("sets" -> wide))
+      val a = Artifact.read(spark, dir, "minhash")
+      assert(a("sets").schema.catalogString == wide.schema.catalogString)
+      assert(rows(a("sets")) == rows(wide))
+      assert(rows(a("keys")) == rows(keysOf("a").unionByName(keysOf("b"))))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("a manifest without a table's schema line is refused, naming the dir and the table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_artifact_noschema").toString
+    try {
+      Artifact.write(dir, "pair", Nil, Seq("keys" -> keysOf("a"), "sets" -> setsOf("a")))
+      Artifact.writeManifest(spark, dir,
+        Artifact.readManifest(spark, dir).get.filterNot(_.startsWith("schema.sets=")))
+      val e = intercept[IllegalArgumentException] { Artifact.read(spark, dir, "pair") }
+      assert(e.getMessage.contains(dir) && e.getMessage.contains("'sets'"), e.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("the MinHash artifact cycle: write and append run <= 2 jobs each, reads plan with none") {
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_artifact_jobs").toString
+    try {
+      val write = jobsDuring(Dedup.minhashIndex(docs.where(col("doc_id") % 2 === 0)).write(dir))
+      val append = jobsDuring(Dedup.MinhashIndex.append(dir, docs.where(col("doc_id") % 2 === 1)))
+      val read = jobsDuring(Dedup.MinhashIndex.read(spark, dir))
+      graft.datapipe.Ann.sq8Write(graft.sources.Tables.embeddings(spark, sfDir), s"$dir/sq8")
+      val sq8Read = jobsDuring(Artifact.read(spark, s"$dir/sq8", "sq8"))
+      // one assertion, so every count shows when any pin fails
+      assert(write <= 2 && append <= 2 && read == 0 && sq8Read == 0,
+        s"jobs: index write $write, append $append, minhash read $read, sq8 read $sq8Read")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }
