@@ -11,12 +11,13 @@ unified diff. Exits 1 when any entry differs or is missing on one side,
 0 when every plan is the same.
 
 Normalised:
-  - expression ids (`#123`) and the door's exprId-derived column names
-    (`v123`, `c123`, `o123`, `__fo123`), renumbered in order of first
-    appearance, so a shifted id counter compares equal but a changed
-    binding does not;
+  - expression ids (`#123`, `#123L`), lambda variable names (`x_123`)
+    and the door's exprId-derived column names (`v123`, `c123`, `o123`,
+    `__fo123`), renumbered in order of first appearance, so a shifted id
+    counter compares equal but a changed binding does not;
   - plan and subquery ids (`plan_id=7`, `subquery#12`, `[id=#3]`,
-    `ReusedSubquery`, `Reuses operator id`), RDD ids (`MapPartitionsRDD[12]`);
+    `ReusedSubquery`, `Reuses operator id`), RDD ids (`MapPartitionsRDD[12]`),
+    random temp-dir suffixes;
   - JVM object identities (`@1a2b3c`) and lambda class names
     (`$$Lambda$123/0x...`).
 """
@@ -28,8 +29,10 @@ import sys
 ID_PATTERNS = [
     # door variables derived from expression ids
     (re.compile(r"\b(v|c|o|__fo|__sqspan_v|__sqspan_c)(\d+)\b"), "var"),
-    # expression ids
-    (re.compile(r"#(\d+)\b"), "id"),
+    # lambda variables, named from a JVM-wide counter (`lambda x_12`)
+    (re.compile(r"(?<=lambda )([a-z]+_)(\d+)\b"), "var"),
+    # expression ids, also those with a type suffix (`#12L` of a long)
+    (re.compile(r"#(\d+)(?=L?\b)"), "id"),
 ]
 FIXED = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
@@ -39,6 +42,8 @@ FIXED = [
     (re.compile(r"@[0-9a-f]{4,}\b"), "@OBJ"),
     (re.compile(r"\$\$Lambda\$?[\w/$.]*"), "$$Lambda"),
     (re.compile(r"0x[0-9a-f]+"), "0xADDR"),
+    # random temp-dir suffixes (`/tmp/graft_mh_index_1703.../keys`)
+    (re.compile(r"(?<=_)\d{8,}(?=[/\]])"), "N"),
 ]
 
 

@@ -1,6 +1,6 @@
 package graft.datapipe
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -39,10 +39,12 @@ object Decontam {
 
   /** Distinct (probe_id, gram-hash) pairs — the broadcastable index. */
   def probeIndex(probes: DataFrame): DataFrame =
-    probes.select(col("probe_id"),
-        explode(transform(TextOps.shingleArray(col("text"), probeN),
-          s => TextOps.h60(s))).as("g"))
+    probes.select(col("probe_id"), explode(grams(col("text"))).as("g"))
       .distinct()
+
+  /** The hashed [[probeN]]-grams of a text column. */
+  private[datapipe] def grams(text: Column): Column =
+    graft.functions.ShingleHashes.hashes(TextOps.words(text), probeN)
 
   /**
    * Per-document contamination flags: docs sharing any n-gram with any
@@ -56,9 +58,7 @@ object Decontam {
    * the only exchange is the per-doc aggregate of probe-MATCHED rows.
    */
   def flag(docs: DataFrame, probeIdx: DataFrame): DataFrame = {
-    val dg = docs.select(col("doc_id"),
-        explode(transform(TextOps.shingleArray(col("text"), probeN),
-          s => TextOps.h60(s))).as("g"))
+    val dg = docs.select(col("doc_id"), explode(grams(col("text"))).as("g"))
     dg.join(broadcast(probeIdx), Seq("g"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("probe_id")).as("n_probes"),

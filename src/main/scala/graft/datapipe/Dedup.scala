@@ -17,9 +17,9 @@ import TextOps.{h60, h60Sql, words}
  *  - exact: one hash-groupBy — map-side combinable, one shuffle of (hash).
  *  - ngram: inverted-index self-join on shingles with a document-frequency
  *    cap (stop-shingle skew kill); candidate pairs only, never all-pairs.
- *  - minhash: banded LSH — signature is 12 per-doc aggregates (one
- *    shuffle), candidates join on (band, key) buckets, exact Jaccard
- *    verified on candidates only.
+ *  - minhash: banded LSH — the 12 signature mins are signed map-side
+ *    from each doc's shingle set (no shuffle), candidates join on
+ *    (band, key) buckets, exact Jaccard verified on candidates only.
  *  - simhash: 120-bit signature (two md5-derived halves) computed in one
  *    zero-shuffle projection pass, candidate pairs via 20-bit chunk
  *    buckets with a hot-bucket cap (pigeonhole: hamming <= chunks-1 is
@@ -113,20 +113,21 @@ object Dedup {
 
   /** Distinct (doc_id, shingle-hash) pairs over NORMALIZED text (near-dup
     * detection must not split on case/whitespace) — the inverted-index
-    * input. Shingle identity is the 60-bit md5 hash, not the string:
+    * input: the exploded, distinct view of [[shingleSets]]. Shingle
+    * identity is the 60-bit md5 hash, not the string:
     * 8-byte join/shuffle keys instead of ~25-byte strings, identical in
     * both engines (collisions are 2^-60 AND, when they do happen, happen
     * identically on both sides — parity is unaffected). */
-  def shingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), TextOps.words(normText).as("w"))
-      .select(col("doc_id"), explode(shingleHashes).as("sh"))
-      .distinct()
+  def shingles(docs: DataFrame): DataFrame = postings(docs).distinct()
 
-  /** The hashed k-grams of the materialized words column `w`: one
-    * codegen'd loop ([[graft.functions.ShingleHashes]]), bit-equal to
-    * `transform(TextOps.shinglesOf(w, shingleK), h60)`. */
-  private def shingleHashes: Column =
-    graft.functions.ShingleHashes.hashes(col("w"), shingleK)
+  /** One `(doc_id, sh)` row per element of each row's shingle set.
+    * explode_outer + IS NOT NULL, not explode: from an inner explode
+    * Catalyst infers `size(shs) > 0` and pushes it below the projection,
+    * which inlines the whole shingle hashing into a scan filter, so
+    * every gram is hashed twice. */
+  private def postings(docs: DataFrame): DataFrame =
+    shingleSets(docs)
+      .select(col("doc_id"), explode_outer(col("shs")).as("sh")).where(col("sh").isNotNull)
 
   /** Shared CTE prefix rendering [[shingles]] in DuckDB. */
   val shinglesCte: String =
@@ -141,23 +142,6 @@ object Dedup {
        |         ${h60Sql(s"array_to_string(w[(i + 1):(i + $shingleK)], ' ')")} AS sh
        |  FROM shpos
        |)""".stripMargin
-
-  /**
-   * Exact Jaccard for a candidate pair set (cols d1 < d2): joins each side
-   * back to its shingle set, counts the intersection, and divides by the
-   * union. Cost is bounded by the candidate count, not |docs|^2.
-   */
-  private def verifyJaccard(cand: DataFrame, sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val shared = cand
-      .join(sh.toDF("d1", "sh"), "d1")
-      .join(sh.toDF("d2", "sh2").withColumnRenamed("sh2", "sh"), Seq("d2", "sh"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizes.toDF("d1", "sz1"), "d1")
-      .join(sizes.toDF("d2", "sz2"), "d2")
-      .withColumn("jac", col("shared") / (col("sz1") + col("sz2") - col("shared")))
-  }
 
   // -------------------------------------------------------- n-gram Jaccard
 
@@ -232,13 +216,7 @@ object Dedup {
   private def ngramCountsOnDriver(docs: DataFrame, budget: Int): Option[DataFrame] = {
     if (budget <= 0 || docs.isStreaming || docs.schema("doc_id").dataType != LongType)
       return None
-    // explode_outer + IS NOT NULL, not explode: from an inner explode
-    // Catalyst infers `size(shs) > 0` and pushes it below the projection,
-    // which inlines the whole shingle hashing into a scan filter, so
-    // every gram is hashed twice
-    val postings = shingleSets(docs)
-      .select(col("doc_id"), explode_outer(col("shs")).as("sh")).where(col("sh").isNotNull)
-    graft.DriverRows.within(postings, budget).flatMap { got =>
+    graft.DriverRows.within(postings(docs), budget).flatMap { got =>
       val nullDocShs = mutable.HashSet.empty[Long]
       val docShs = mutable.LongMap.empty[mutable.HashSet[Long]]
       for (r <- got)
@@ -325,91 +303,76 @@ object Dedup {
   val mhTau = 0.08
 
   /**
-   * MinHash signature matrix from a (doc_id, sh) shingle relation: per
-   * doc, 12 mins of affine-permuted 31-bit shingle hashes — a single
-   * groupBy with 12 partial-aggregable mins.
-   */
-  def minhashSignatures(sh: DataFrame): DataFrame =
-    minhashSignaturesBy(sh, Seq("doc_id"))
-
-  /** [[minhashSignatures]] generalized over the member key columns —
-    * one source of truth for the affine-min dataflow (doc-level dedup
-    * keys on doc_id; segment-level fuzzy dedup keys on the (rdoc, ridx)
-    * representative — r14 review fix, was a copy). */
-  private[datapipe] def minhashSignaturesBy(sh: DataFrame, keys: Seq[String]): DataFrame = {
-    val s31 = sh.select(keys.map(col) :+ (col("sh") % mhP).as("s"): _*)
-    val aggs = (0 until mhBands * mhRows).map { j =>
-      min((lit(mhA(j)) * col("s") + lit(mhB(j))) % mhP).as(s"mh$j")
-    }
-    s31.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** The banded key structs over a signature frame's `mh$j` columns —
-    * shared by every exploded-band consumer (same r14 de-fork). */
-  private[datapipe] def bandKeyStructs: Seq[Column] =
-    (0 until mhBands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("_", (0 until mhRows).map(r => col(s"mh${b * mhRows + r}")): _*).as("key"))
-    }
-
-  /**
-   * Banded-LSH near-dup: docs agreeing on any full band of 3 signatures
-   * become candidates (join on (band, key) — never all-pairs); candidates
-   * are verified with exact Jaccard over the uncapped shingle sets.
+   * Banded-LSH near-dup: docs agreeing on any full band of [[mhRows]]
+   * signatures become candidates (join on (band, key) — never
+   * all-pairs); candidates are verified with exact Jaccard over the
+   * uncapped shingle sets.
+   *
+   * Map-side signing: the per-document shingle sets ([[nonEmptySets]])
+   * are pinned once, signed through the same [[bandKeys]] as the index
+   * and the stream gate, and the band self-join runs on the slim
+   * `(doc_id, band, key)` rows; each candidate pair joins the two sets
+   * and is verified by `array_intersect`. No shingle crosses a shuffle.
+   * `doc_id` is the member key: every input row is its own member, so
+   * for ids shared by several rows a candidate id pair is verified for
+   * every pair of their rows, one output row per pair that passes.
+   * Docs below the shingle width, NULL texts and NULL ids pair with
+   * nothing.
    */
   def minhashLsh(docs: DataFrame): DataFrame = {
-    // the shingle index feeds the signature matrix AND the verify join:
-    // persist it once (at scale this is the materialized inverted index).
-    // Spread ahead of the pin — same single-partition-cache reasoning as
+    // the sets feed the signatures AND both sides of the verify. Spread
+    // ahead of the pin — same single-partition-cache reasoning as
     // [[ngramJaccard]] (r18)
-    val sh = graft.CacheRegistry.persistTracked(
-      shingles(graft.sources.Tables.spread(docs)))
-    val sig = minhashSignatures(sh)
-    val bands = sig.select(col("doc_id"), explode(array(bandKeyStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+    val sets = graft.CacheRegistry.persistTracked(
+      nonEmptySets(shingleSets(graft.sources.Tables.spread(docs))))
+    val bands = bandKeys(sets).select(col("doc_id"), col("band"), col("key"))
     val cand = bands.toDF("d1", "band", "key")
-      .join(bands.toDF("d2", "band2", "key2")
-        .withColumnRenamed("band2", "band").withColumnRenamed("key2", "key"),
-        Seq("band", "key"))
+      .join(bands.toDF("d2", "band", "key"), Seq("band", "key"))
       .where(col("d1") < col("d2"))
       .select(col("d1"), col("d2")).distinct()
-    verifyJaccard(cand, sh)
+    cand.join(sets.toDF("d1", "__s1"), "d1").join(sets.toDF("d2", "__s2"), "d2")
+      .withColumn("jac", setJaccard(col("__s1"), col("__s2")))
       .where(col("jac") >= mhTau)
       .select(col("d1"), col("d2"), round(col("jac"), 6).as("jac"))
   }
 
-  /** Per-doc shingle SET as ONE array column — the stateless projection
-    * form of [[shingles]] (no explode + distinct aggregation), legal on
-    * an unbounded stream and identical in content (`array_distinct` of
-    * the same hashed shingles). */
+  /** Exact Jaccard of two non-empty shingle-set arrays. */
+  private def setJaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b)).cast("double")
+    inter / ((size(a) + size(b)).cast("double") - inter)
+  }
+
+  /** Per-doc shingle SET as ONE array column (`array_distinct` of the
+    * hashed word k-grams of the normalized text): the one place document
+    * text becomes hashed shingles. A stateless projection, legal on an
+    * unbounded stream; [[shingles]] is its exploded, distinct view. */
   def shingleSets(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), TextOps.words(normText).as("w"))
-      .select(col("doc_id"), array_distinct(shingleHashes).as("shs"))
+      .select(col("doc_id"),
+        array_distinct(graft.functions.ShingleHashes.hashes(col("w"), shingleK)).as("shs"))
 
-  /** [[shingleSets]] without the docs that have no shingle (below the
-    * shingle width, or NULL text). The test sits in the generator, not
-    * in a filter: Catalyst pushes a filter below the projection that
-    * hashes the shingles, so every doc would be shingled twice. */
-  private def nonEmptySets(docs: DataFrame): DataFrame =
-    shingleSets(docs).select(col("doc_id"),
-      explode(when(size(col("shs")) > 0, array(col("shs")))).as("shs"))
+  /** The rows of a shingle-set frame whose `shs` is not empty (docs
+    * below the shingle width, or NULL text), keyed by `keys`. The test
+    * sits in the generator, not in a filter: Catalyst pushes a filter
+    * below the projection that hashes the shingles, so every set would
+    * be hashed twice. */
+  private[datapipe] def nonEmptySets(sets: DataFrame,
+      keys: Seq[String] = Seq("doc_id")): DataFrame =
+    sets.select(keys.map(col) :+
+      explode(when(size(col("shs")) > 0, array(col("shs")))).as("shs"): _*)
 
-  /** Banded signature keys from the array form — map-side only: each
-    * signature is an `array_min` over the affine-permuted shingle set,
-    * each band key a concat of its rows; the explode fans out rows
-    * WITHIN the partition (stateless in streaming). `withSets` holds
-    * non-empty sets only ([[nonEmptySets]]): a doc with no shingles has
-    * no signature, and its band keys would all collapse to "" (concat_ws
-    * skips NULLs), putting every short doc in one bucket with a NaN
-    * (0/0) Jaccard that Spark orders ABOVE the threshold. */
-  private def bandKeys(withSets: DataFrame): DataFrame = {
-    // all 12 signature mins in ONE codegen'd primitive loop
-    // ([[graft.functions.MinhashSignature]]): higher-order functions
-    // evaluate interpreted with per-element accumulator allocations —
-    // the measured cost of the stream-side signature. Bit-identical to
-    // the declarative fold (same Long arithmetic; min is
-    // order-insensitive; seed mhP is an identity since every permuted
-    // value is < mhP)
+  /** Banded signature keys from the array form — map-side only: all
+    * [[mhBands]] × [[mhRows]] signature mins in one codegen'd loop
+    * ([[graft.functions.MinhashSignature]]) over the shingle set, each
+    * band key a concat of its rows; the explode fans out rows WITHIN the
+    * partition (stateless in streaming). Keeps the member `keys` and
+    * `shs`. `withSets` holds non-empty sets only ([[nonEmptySets]]): a
+    * member with no shingles has no signature, and its band keys would
+    * all collapse to "" (concat_ws skips NULLs), putting every short doc
+    * in one bucket with a NaN (0/0) Jaccard that Spark orders ABOVE the
+    * threshold. */
+  private[datapipe] def bandKeys(withSets: DataFrame,
+      keys: Seq[String] = Seq("doc_id")): DataFrame = {
     val sig = graft.functions.MinhashSignature.signature(
       col("shs"), mhA.take(mhBands * mhRows), mhB.take(mhBands * mhRows), mhP)
     def mh(j: Int): Column = element_at(col("__sig"), j + 1)
@@ -417,9 +380,10 @@ object Dedup {
       struct(lit(b).as("band"),
         concat_ws("_", (0 until mhRows).map(r => mh(b * mhRows + r)): _*).as("key"))
     }
+    val kept = (keys :+ "shs").map(col)
     withSets.withColumn("__sig", sig)
-      .select(col("doc_id"), col("shs"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("shs"), col("bk.band").as("band"), col("bk.key").as("key"))
+      .select(kept :+ explode(array(bandStructs: _*)).as("bk"): _*)
+      .select(kept ++ Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
   }
 
   /**
@@ -464,7 +428,7 @@ object Dedup {
     * [[minhashIndex]] and the write-only un-pinned
     * [[MinhashIndex.append]] path. */
   private def leanIndexFrom(docs: DataFrame): (DataFrame, DataFrame) = {
-    val sets = nonEmptySets(docs)
+    val sets = nonEmptySets(shingleSets(docs))
     (bandKeys(sets).select(col("band"), col("key"), col("doc_id").as("corpus_id")),
       sets.select(col("doc_id").as("corpus_id"), col("shs").as("corpus_shs")))
   }
@@ -492,16 +456,14 @@ object Dedup {
     * id space. */
   def minhashStreamingFlag(stream: DataFrame, index: MinhashIndex,
                            excludeSelf: Boolean = true): DataFrame = {
-    val probe = bandKeys(nonEmptySets(stream))
-    val inter = size(array_intersect(col("shs"), col("corpus_shs"))).cast("double")
-    val union = (size(col("shs")) + size(col("corpus_shs"))).cast("double") - inter
+    val probe = bandKeys(nonEmptySets(shingleSets(stream)))
     // bucket probe against the LEAN key rows first; the verify payload
     // (each member's shingle set, held ONCE in index.sets) joins only
     // onto the hits — set mass moves per collision, not per probe row
     probe.join(index.keys, Seq("band", "key"))
       .where(if (excludeSelf) col("doc_id") =!= col("corpus_id") else lit(true))
       .join(index.sets, "corpus_id")
-      .withColumn("jac", inter / union)
+      .withColumn("jac", setJaccard(col("shs"), col("corpus_shs")))
       .where(col("jac") >= mhTau)
       .select(col("doc_id"), col("corpus_id").as("dup_of"), col("band"),
         round(col("jac"), 6).as("jac"))
@@ -790,8 +752,8 @@ object Dedup {
    *    partition BEFORE anything shuffles, which also means the fuzzy
    *    machinery only ever sees DISTINCT segment strings: identical
    *    copies can never flood a band bucket;
-   *  - signatures/band keys reuse the [[minhashSignatures]] dataflow
-   *    (12 partial-aggregable mins, keyed by representative);
+   *  - signatures/band keys are signed map-side per representative by
+   *    the index's [[bandKeys]] path — no shingle is shuffled;
    *  - the candidate self-join is banded (never all-pairs), verified by
    *    exact Jaccard over the two ~18-shingle sets;
    *  - decisions join back on the segment string (AQE-skew-splittable,
@@ -808,24 +770,18 @@ object Dedup {
     // per-representative shingle sets (h60 3-gram hashes, distinct).
     // Segments shorter than the shingle width have NO shingles: they
     // never enter the fuzzy stage and always survive to the exact rule
-    // (same empty-set contract as bandKeys' filter).
-    // persisted (r14 review fix): three consumers (the exploded
-    // signature input + both sides of the Jaccard verify) would each
-    // re-run the per-segment md5 shingling otherwise — the same reason
-    // minhashLsh persists its shingle frame
-    val rsh = graft.CacheRegistry.persistTracked(
+    // (the empty-set contract of nonEmptySets, whose generator keeps the
+    // hashing from being pushed into a filter below it).
+    // persisted (r14 review fix): the signatures and both sides of the
+    // Jaccard verify read it
+    val rsh = graft.CacheRegistry.persistTracked(nonEmptySets(
       reps.select(col("rdoc"), col("ridx"),
-        array_distinct(transform(
-          TextOps.shinglesOf(words(col("seg")), shingleK), s => h60(s))).as("shs"))
-        .where(size(col("shs")) > 0))
-    val rshx = rsh.select(col("rdoc"), col("ridx"), explode(col("shs")).as("sh"))
-    // signature matrix keyed by representative — minhashSignatures'
-    // dataflow with the two-column key (shared helper)
-    val sig = minhashSignaturesBy(rshx, Seq("rdoc", "ridx"))
-    val bands = sig.select(col("rdoc"), col("ridx"),
-        explode(array(bandKeyStructs: _*)).as("bk"))
-      .select(col("rdoc"), col("ridx"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
+        array_distinct(
+          graft.functions.ShingleHashes.hashes(words(col("seg")), shingleK)).as("shs")),
+      Seq("rdoc", "ridx")))
+    // map-side band keys per representative — the index's signing path
+    val bands = bandKeys(rsh, Seq("rdoc", "ridx"))
+      .select(col("rdoc"), col("ridx"), col("band"), col("key"))
     // banded candidates among EARLIER/LATER representative pairs
     // ((d1,i1) < (d2,i2) lexicographic — total order, ids unique)
     val cand = bands.select(col("rdoc").as("d1"), col("ridx").as("i1"),
@@ -836,15 +792,10 @@ object Dedup {
         (col("d1") === col("d2") && col("i1") < col("i2")))
       .select(col("d1"), col("i1"), col("d2"), col("i2")).distinct()
     // exact-Jaccard verify over the two small shingle sets
-    val sets = rsh.select(col("rdoc"), col("ridx"), col("shs"))
-    val inter = size(array_intersect(col("__s1"), col("__s2"))).cast("double")
-    val union = (size(col("__s1")) + size(col("__s2"))).cast("double") - inter
     val dropped = cand
-      .join(sets.select(col("rdoc").as("d1"), col("ridx").as("i1"),
-        col("shs").as("__s1")), Seq("d1", "i1"))
-      .join(sets.select(col("rdoc").as("d2"), col("ridx").as("i2"),
-        col("shs").as("__s2")), Seq("d2", "i2"))
-      .where(inter / union >= segTau)
+      .join(rsh.toDF("d1", "i1", "__s1"), Seq("d1", "i1"))
+      .join(rsh.toDF("d2", "i2", "__s2"), Seq("d2", "i2"))
+      .where(setJaccard(col("__s1"), col("__s2")) >= segTau)
       .select(col("d2").as("rdoc"), col("i2").as("ridx")).distinct()
       .withColumn("__fz", lit(true))
     // decision per occurrence: first exact occurrence AND its
@@ -1090,17 +1041,18 @@ object Dedup {
    * AUTO-SWITCHES to the large-star/small-star contraction, whose round
    * count is logarithmic in component size rather than linear in
    * diameter (Kiveris et al.), with identical cluster assignment (spec'd
-   * on planted paths + random graphs). `alternatingStar = true` forces
-   * the star variant from round one. All three finishes return the same
-   * `(doc_id, cluster_id, cluster_size)` schema and rows.
+   * on planted paths + random graphs), within 50 rounds in all. All
+   * three finishes return the same `(doc_id, cluster_id, cluster_size)`
+   * schema and rows.
    */
-  def clusters(pairs: DataFrame, maxRounds: Int = 50,
-               alternatingStar: Boolean = false): DataFrame =
-    clusters(pairs, maxRounds, alternatingStar, driverPairBudget)
+  def clusters(pairs: DataFrame): DataFrame =
+    clusters(pairs, maxRounds = 50, alternatingStar = false, driverPairBudget)
 
-  /** [[clusters]] with the driver-finish budget explicit: a budget of 0
-    * always runs the distributed rounds (specs pin them this way on
-    * inputs small enough to finish on the driver). */
+  /** [[clusters]] with the finish explicit, for specs that pin the
+    * distributed rounds on inputs small enough to finish on the driver:
+    * `maxRounds` bounds the rounds, `alternatingStar = true` runs the
+    * star contraction from round one, and a `driverBudget` of 0 always
+    * runs the distributed rounds. */
   private[datapipe] def clusters(pairs: DataFrame, maxRounds: Int,
       alternatingStar: Boolean, driverBudget: Int): DataFrame = {
     // persisted ONCE: the budget probe, the symmetrizing union of the

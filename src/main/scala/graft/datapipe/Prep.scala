@@ -163,14 +163,8 @@ object Prep {
         col("n_tokens").between(cleanMinTok, cleanMaxTok) &&
         !col("repetitious"))
       .select(col("doc_id"), col("text"), col("ts"))
-    val withG = gated
-      .withColumn("__w", words(col("text")))
-      .withColumn("__g", transform(
-        shinglesOf(col("__w"), Decontam.probeN), s => h60(s)))
-      .drop("__w")
-    val clean = withG
-      .where(!arrays_overlap(col("__g"), typedLit(probeGrams.toSeq)))
-      .drop("__g")
+    val clean = gated
+      .where(!arrays_overlap(Decontam.grams(col("text")), typedLit(probeGrams.toSeq)))
     Dedup.exactStreaming(clean, watermark).drop("h")
   }
 

@@ -635,19 +635,18 @@ object TextOps {
   val fpK = 4
   val fpWindow = 4
 
-  /** Word k-gram shingle array from an ALREADY-MATERIALIZED words-array
-    * column. Callers must project the words array in its own select
-    * first: passing `words(text)` directly makes Catalyst inline the
-    * split (and any normalization) into every lambda iteration —
-    * O(n^2 * len) per document. */
+  /** Word k-gram STRING array from an ALREADY-MATERIALIZED words-array
+    * column (positions 0-based) — the grams [[repetitionOver]] counts,
+    * and the reference [[graft.functions.ShingleHashes]] is checked
+    * against. Hashed grams go through `ShingleHashes`, one codegen'd
+    * loop; this chain evaluates interpreted. Callers must project the
+    * words array in its own select first: passing `words(text)` directly
+    * makes Catalyst inline the split (and any normalization) into every
+    * lambda iteration — O(n^2 * len) per document. */
   def shinglesOf(w: Column, k: Int): Column =
     when(size(w) >= k,
       transform(sequence(lit(0), size(w) - k), i => array_join(slice(w, i + 1, lit(k)), " ")))
       .otherwise(array())
-
-  /** Word k-gram shingle array of a text column (positions 0-based).
-    * Only safe where the result is consumed once — see [[shinglesOf]]. */
-  def shingleArray(text: Column, k: Int): Column = shinglesOf(words(text), k)
 
   /**
    * Document fingerprinting by winnowing (Schleimer/Wilkerson/Aiken):
@@ -658,12 +657,10 @@ object TextOps {
    * the shape you want fingerprinting 100 TB of text.
    */
   def fingerprints(docs: DataFrame): DataFrame = {
-    // materialize words, then hashes, each in their own projection:
-    // inlining either into the consuming lambda would re-split / re-hash
-    // per iteration (O(n^2) work per doc)
-    val withW = docs.select(col("doc_id"), words(col("text")).as("w"))
-    val withHs = withW.select(col("doc_id"),
-      transform(shinglesOf(col("w"), fpK), s => h60(s)).as("hs"))
+    // materialize the hashes in their own projection: inlining them into
+    // the consuming lambda would re-hash per iteration (O(n^2) work per doc)
+    val withHs = docs.select(col("doc_id"),
+      graft.functions.ShingleHashes.hashes(words(col("text")), fpK).as("hs"))
     val hs = col("hs")
     val nWin = size(hs) - fpWindow + 1
     val mins = when(nWin > 0,

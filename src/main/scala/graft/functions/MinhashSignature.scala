@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
  * primitive loop over a hashed-shingle array: for permutation j,
  * `min over x of (a(j) * (x mod p) + b(j)) mod p`, seeded at `p` (an
  * identity for min, since every permuted value is < p) — bit-identical
- * to the declarative fold it replaces in `Dedup.bandKeys` (same Long
+ * to the grouped per-shingle mins of the DuckDB mirrors (same Long
  * arithmetic in the same order; min is order-insensitive).
  *
  * Why an Expression: higher-order functions (`aggregate`/`transform`)
@@ -19,10 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
  * accumulator — the measured cost of the stateless stream-side
  * signature in the ingest near-dup gate. This is one codegen'd loop
  * with a primitive long[] accumulator, the shape you want signing an
- * arriving 100 TB feed. The batch index side (`Dedup.minhashIndex`)
- * signs through it too, map-side, so both sides share one band-key
- * path; `Dedup.minhashSignatures` (exploded shingles, grouped mins)
- * remains the form of the batch self-join `Dedup.minhashLsh`.
+ * arriving 100 TB feed. Every MinHash signature is signed through it,
+ * map-side, by way of `Dedup.bandKeys`: the index (`Dedup.minhashIndex`),
+ * the stream gate, the batch self-join `Dedup.minhashLsh` and the
+ * segment-level `Dedup.segmentDedupFuzzy` share one band-key path.
  */
 case class MinhashSignature(
     child: Expression, a: Seq[Long], b: Seq[Long], p: Long)

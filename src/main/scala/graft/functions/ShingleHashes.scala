@@ -18,8 +18,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
  * words are skipped as `array_join` skips them; fewer than k words, or
  * a NULL array, give the empty array), which evaluates two interpreted
  * higher-order functions per gram and builds each gram as a string;
- * this feeds each gram's word bytes to the digest directly. It is the
- * per-document cost of every Dedup shingle set.
+ * this feeds each gram's word bytes to the digest directly. Every
+ * hashed word k-gram of the datapipe comes from it: the Dedup shingle
+ * sets (documents and segments), the Decontam probe grams (index, flag
+ * and the stream gate of `Prep.prepareStream`) and the winnowing
+ * fingerprints.
  */
 case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
 

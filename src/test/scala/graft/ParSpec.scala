@@ -1,5 +1,6 @@
 package graft
 
+import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicBoolean
 
 /** `Par.all` fail-fast: the first failure stops its siblings — plain
@@ -11,11 +12,22 @@ class ParSpec extends SparkSpecBase {
     val flag = new AtomicBoolean(false)
     val ended = new AtomicBoolean(false)
     val boom = new IllegalStateException("boom")
+    // the failure waits until the sibling is inside its try: a sibling
+    // cancelled before it starts never runs, and tests nothing here
+    val started = new CountDownLatch(1)
+    // the interrupted sibling takes 200 ms to end (a spin, which a second
+    // interrupt cannot cut short), so a return that does not await it
+    // finds `ended` unset
+    def windDown(): Unit = {
+      val until = System.nanoTime() + 200000000L
+      while (System.nanoTime() < until) Thread.onSpinWait()
+    }
     val t0 = System.nanoTime()
     val e = intercept[IllegalStateException] {
       Par.all(Seq[() => Unit](
-        () => try { Thread.sleep(5000); flag.set(true) } finally ended.set(true),
-        () => throw boom))
+        () => try { started.countDown(); Thread.sleep(5000); flag.set(true) }
+              finally { windDown(); ended.set(true) },
+        () => { started.await(); throw boom }))
     }
     val secs = (System.nanoTime() - t0) / 1e9
     assert(e eq boom, "the original cause must propagate")

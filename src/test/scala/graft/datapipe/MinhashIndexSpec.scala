@@ -6,17 +6,16 @@ import org.apache.spark.sql.functions._
 
 /** The lean MinHash index built map-side from per-document shingle sets
   * holds the same rows as the grouped form over the exploded shingle
-  * relation (the form `minhashLsh` keeps). */
+  * relation ([[GroupedMinhash]]). */
 class MinhashIndexSpec extends SparkSpecBase {
   import spark.implicits._
 
-  /** The grouped reference: `minhashSignatures` over `shingles`, band keys
-    * exploded from its mins; sets collected per doc, sorted. */
+  /** The grouped reference ([[GroupedMinhash]]): band keys from the
+    * grouped mins over `shingles`; sets collected per doc, sorted. */
   private def grouped(docs: DataFrame): (DataFrame, DataFrame) = {
     val sh = Dedup.shingles(docs)
-    val keys = Dedup.minhashSignatures(sh)
-      .select(col("doc_id"), explode(array(Dedup.bandKeyStructs: _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"), col("doc_id").as("corpus_id"))
+    val keys = GroupedMinhash.bandKeys(GroupedMinhash.signatures(sh))
+      .select(col("band"), col("key"), col("doc_id").as("corpus_id"))
     val sets = sh.groupBy(col("doc_id")).agg(sort_array(collect_list(col("sh"))).as("corpus_shs"))
       .select(col("doc_id").as("corpus_id"), col("corpus_shs"))
     (keys, sets)
